@@ -362,7 +362,7 @@ def build_app(spark=None, state_path: str | None = None,
     def catalog_run(name: str, sf_dir: str, limit: int = 1000,
                     offset: int = 0):
         """Run any registered catalog entry against a confined dataset
-        directory and return a bounded page - the whole 172-entry
+        directory and return a bounded page - the whole 315-entry
         analytics surface served over REST with the same pagination
         discipline as the flagship view (total-order sort, MAX_PAGE
         cap, never an unbounded collect)."""

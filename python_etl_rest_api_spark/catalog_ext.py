@@ -969,14 +969,15 @@ def multimodal_wav_decode(spark, sf_dir):
     FROM px GROUP BY i, w, h
 """)
 def multimodal_bmp_decode(spark, sf_dir):
-    """REAL image codec path (stdlib-only, mirrors multimodal_wav_decode):
-    genuine 24-bpp uncompressed BMP payloads encoded with ``struct``,
-    decoded back in Arrow batches - magic/DIB header parse, bottom-up
-    stride walk with 4-byte row padding, exact integer channel sums all
-    read from the byte stream. Pixels are a closed form of (i, x, y), so
-    DuckDB reproduces the decoded output exactly and the driver
-    value-hashes a true encode->Spark->decode image round trip. PNG/JPEG
-    (library codecs unavailable here) remain on the stub path."""
+    """REAL image codec path (no codec library, mirrors
+    multimodal_wav_decode): genuine 24-bpp uncompressed BMP payloads
+    encoded with ``struct``, decoded back in Arrow batches - magic/DIB
+    header parse, bottom-up stride walk with 4-byte row padding, exact
+    integer channel sums all read from the byte stream
+    (operators/multimodal.py::_bmp_pixels). Pixels are a closed form of
+    (i, x, y), so DuckDB reproduces the decoded output exactly and the
+    oracle check value-hashes a true encode->Spark->decode image round
+    trip."""
     from .operators.multimodal import decode_bmp_features, synthesize_bmp_media
     tune(spark)
     return decode_bmp_features(synthesize_bmp_media(spark, n=48))
@@ -1001,17 +1002,17 @@ def multimodal_bmp_decode(spark, sf_dir):
     FROM px GROUP BY i, w, h
 """)
 def multimodal_png_decode(spark, sf_dir):
-    """REAL compressed-image codec path (stdlib zlib + struct, extending
+    """REAL compressed-image codec path (zlib + struct, extending
     multimodal_bmp_decode to a COMPRESSED container): genuine PNG
     payloads - signature, CRC-carrying IHDR/IDAT/IEND chunks, zlib
     deflate, scanline filters cycling through all five spec types - are
     decoded back in Arrow batches: chunk walk, inflate, five-filter
     reconstruction (Sub/Up/Average/Paeth inverses), exact integer
-    channel sums, all from the byte stream. Pixels are the same closed
+    channel sums, all from the byte stream
+    (operators/multimodal.py::_png_pixels). Pixels are the same closed
     form of (i, x, y) as the BMP path (RGB channel order), so DuckDB
     reproduces the decoded output exactly and the driver value-hashes a
-    true encode->deflate->Spark->inflate->unfilter round trip. JPEG and
-    video (library codecs unavailable here) remain on the stub path."""
+    true encode->deflate->Spark->inflate->unfilter round trip."""
     from .operators.multimodal import decode_png_features, synthesize_png_media
     tune(spark)
     return decode_png_features(synthesize_png_media(spark, n=48))
@@ -1034,7 +1035,7 @@ def multimodal_png_decode(spark, sf_dir):
     FROM blk GROUP BY i, wb, hb
 """)
 def multimodal_jpeg_decode(spark, sf_dir):
-    """REAL transform-coded image codec path (stdlib math + struct,
+    """REAL transform-coded image codec path (no codec library,
     extending multimodal_png_decode to a LOSSY container): genuine
     ITU T.81 baseline JPEGs - SOI/DQT/SOF0/DHT/SOS markers, 8x8
     level-shifted DCT, quantization, zigzag, DC-differential + AC
@@ -1044,12 +1045,11 @@ def multimodal_jpeg_decode(spark, sf_dir):
     pixel stats, all from the byte stream. The synthesized corpus
     uses constant 8x8 blocks with a uniform quant of 8, for which
     quantize/dequantize is LOSSLESS (all signal in the DC term,
-    which is exact power-of-two float arithmetic - see
+    which rounds back to the block value - see the JPEG notes in
     operators/multimodal.py), so the decoded sums equal the closed
     form of (i, bx, by) and the driver value-hashes a true
     encode->DCT->Huffman->Spark->decode round trip; the general
-    lossy path is bounded in tests/test_multimodal.py. With this,
-    only VIDEO remains on the stub path."""
+    lossy path is bounded in tests/test_multimodal.py."""
     from .operators.multimodal import (decode_jpeg_features,
                                        synthesize_jpeg_media)
     tune(spark)
@@ -1172,14 +1172,15 @@ def multimodal_avi_frames(spark, sf_dir):
     """REAL video path - the last stubbed modality retired: genuine
     RIFF/AVI containers (LIST hdrl with avih MainAVIHeader + vids/DIB
     stream headers, LIST movi of uncompressed 8-bit bottom-up DIB
-    frames with 4-byte row padding, idx1 index), built and parsed with
-    stdlib struct alone, FRAME-SAMPLED (every 2nd frame) in Arrow
+    frames with 4-byte row padding, idx1 index), built and parsed
+    without a codec library, FRAME-SAMPLED (every 2nd frame) in Arrow
     batches - the north-star video primitive where one payload row
     explodes into one row per sampled frame and pixels never leave the
     executor. Uncompressed DIB frames round-trip exactly, so the
     sampled-frame luminance stats have this closed-form oracle over
     (i, f, x, y). Codec + sampling: operators/multimodal.py
-    (encode_avi_gray / decode_avi_frames / sample_avi_frames)."""
+    (encode_avi_gray / _avi_frames / decode_avi_frames /
+    sample_avi_frames)."""
     from .operators.multimodal import sample_avi_frames, synthesize_avi_media
     tune(spark)
     return sample_avi_frames(synthesize_avi_media(spark, n=48), stride=2)

@@ -563,8 +563,8 @@ def multimodal_video_motion(spark, sf_dir):
     Pixels stay in the executor (mapInPandas explodes each payload to
     O(frames) scalar rows); the uncompressed codec round-trips exactly,
     so per-pair motion has this closed-form oracle over the synthesis
-    grid. operators/multimodal.py (decode_avi_pixel_frames /
-    motion_energy), same container/codec as multimodal_avi_frames."""
+    grid. operators/multimodal.py (_avi_frames / motion_energy), same
+    container/codec as multimodal_avi_frames."""
     from .operators.multimodal import motion_energy, synthesize_avi_media
     from .session import tune
     tune(spark)

@@ -523,10 +523,3 @@ def merge_jdbc(df: DataFrame, url: str, table: str, keys: list[str],
                  f"WHERE NOT EXISTS (SELECT 1 FROM {table} t WHERE {on})")
     execute_jdbc(df.sparkSession, url, [merge, f"DROP TABLE {staging}"],
                  properties)
-
-
-def read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    try:
-        return spark.read.parquet(path)
-    except Exception:
-        return None

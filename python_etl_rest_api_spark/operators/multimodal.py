@@ -2,29 +2,34 @@
 
 Images/audio/video ride as opaque ``binary`` columns with typed metadata
 structs. The Spark-side machinery - schema, partition sizing, Arrow-batched
-mapInPandas transforms, batch shapes - is real and tested. Codec status:
+mapInPandas transforms, batch shapes - is real and tested. Every
+per-payload operator runs through one batch loop (``_map_payloads``), and
+each container has exactly one decoder that returns its pixels or samples
+as a numpy array. Codec status:
 
 - AUDIO is REAL: payloads are genuine RIFF/WAVE files (PCM16) encoded and
-  decoded with the stdlib ``wave`` + ``struct`` modules - header parse,
-  frame read, amplitude features, all from the actual byte stream
-  (synthesize_wav_media / decode_wav_features).
+  decoded with the stdlib ``wave`` module (``_wav_bytes`` / ``_pcm16``) -
+  header parse, frame read, amplitude features, all from the actual byte
+  stream (synthesize_wav_media / decode_wav_features).
 - IMAGE is REAL for BMP: payloads are genuine 24-bpp uncompressed BMP
   files (BITMAPFILEHEADER + BITMAPINFOHEADER + bottom-up padded pixel
-  rows) encoded and decoded with ``struct`` alone - magic/offset/DIB
-  parse, row-stride walk with 4-byte padding, per-channel pixel sums
-  (synthesize_bmp_media / decode_bmp_features).
+  rows) - magic/offset/DIB parse, row-stride walk with 4-byte padding,
+  per-channel pixel sums (``_encode_bmp`` / ``_bmp_pixels``,
+  synthesize_bmp_media / decode_bmp_features).
 - IMAGE is REAL for PNG too, including COMPRESSION: payloads are
   genuine PNGs (signature, IHDR/IDAT/IEND chunks with CRCs, zlib
   deflate, all five scanline filters) encoded and decoded with stdlib
-  ``zlib`` + ``struct`` (synthesize_png_media / decode_png_features).
+  ``zlib`` + ``struct`` (``_encode_png`` / ``_png_pixels``,
+  synthesize_png_media / decode_png_features).
 - IMAGE is REAL for JPEG too, including the LOSSY transform path:
   genuine ITU T.81 baseline streams (DCT, quantization, Annex-K
-  Huffman entropy coding, byte stuffing) encoded and decoded with
-  ``math`` + ``struct`` (encode_jpeg_gray / decode_jpeg_gray).
+  Huffman entropy coding, byte stuffing) (encode_jpeg_gray /
+  ``_jpeg_pixels`` / decode_jpeg_gray).
 - VIDEO is REAL: genuine RIFF/AVI containers (hdrl/strl headers,
   movi '00db' uncompressed 8-bit DIB frames, idx1 index) built and
-  parsed with ``struct`` alone, with FRAME SAMPLING as the Spark op
-  (synthesize_avi_media / sample_avi_frames).
+  parsed with ``struct`` and numpy, with FRAME SAMPLING as the Spark op
+  (encode_avi_gray / ``_avi_frames``, synthesize_avi_media /
+  sample_avi_frames).
   ``_decode_stub`` remains only as the generic placeholder shape for
   formats needing an external codec library (no Pillow/pyav in this
   container); swap it for the real call and the schema/batching/
@@ -39,9 +44,11 @@ partition at once.
 from __future__ import annotations
 
 import io
+import math
 import struct
 import wave
-from collections.abc import Iterator
+import zlib
+from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -70,13 +77,43 @@ FEATURE_SCHEMA = T.StructType([
 ])
 
 
+def _map_payloads(media: DataFrame, schema: T.StructType,
+                  rows: Callable[[bytes], Iterable[tuple]],
+                  keys: tuple[str, ...] = ("media_id",),
+                  skip_null: bool = False) -> DataFrame:
+    """The one Arrow-batched loop behind every per-payload operator.
+
+    For each input row, ``rows(payload)`` returns the output rows'
+    non-key values (in ``schema`` order, key columns left out); each is
+    emitted after the input row's ``keys`` columns. A null payload
+    yields one row of keys plus nulls, or no row with ``skip_null``.
+    Only the emitted rows leave the executor; decoded pixels and
+    samples stay inside the batch."""
+    names = schema.fieldNames()
+    cols = list(keys) + [n for n in names if n not in keys]
+    nulls = (None,) * (len(cols) - len(keys))
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            recs = []
+            for *key, payload in zip(*(pdf[k] for k in keys),
+                                     pdf["payload"]):
+                if payload is not None:
+                    recs.extend((*key, *r) for r in rows(bytes(payload)))
+                elif not skip_null:
+                    recs.append((*key, *nulls))
+            yield pd.DataFrame(recs, columns=cols)[names]
+
+    return media.mapInPandas(batches, schema)
+
+
 def synthesize_media(spark, n: int = 64) -> DataFrame:
     """Deterministic fake media table (payload = seeded bytes) for tests.
 
     Emitted in a handful of partitions sized to the payload volume: a
     mapInPandas decode forks one Python worker per partition, so letting
-    a KB-scale table default to defaultParallelism (32 here) pays ~32
-    worker spawns for 1-2 rows each. Real media tables should target
+    a KB-scale table default to defaultParallelism (one per core) pays a
+    worker spawn for every 1-2 rows. Real media tables should target
     ~64-128 MB of payload per partition for the same reason."""
     rows = []
     for i in range(n):
@@ -95,31 +132,17 @@ def _decode_stub(payload: bytes) -> list[float]:
     would also be acceptable; a deterministic fake keeps the pipeline
     testable end to end.
     """
-    if payload is None:
-        return None
-    hist = [0.0] * 8
-    for b in payload:
-        hist[b % 8] += 1.0
-    total = max(len(payload), 1)
-    return [h / total for h in hist]
+    hist = np.bincount(np.frombuffer(payload, np.uint8) % 8, minlength=8)
+    return (hist / max(len(payload), 1)).tolist()
 
 
 def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction via mapInPandas: the canonical
     decode/transform shape for binary columns. Batches stream through
     pandas; only (media_id, kind, n_bytes, feature) leave the executor."""
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "kind": pdf["kind"],
-                "n_bytes": pdf["payload"].map(
-                    lambda p: len(p) if p is not None else None),
-                "feature": pdf["payload"].map(_decode_stub),
-            })
-            yield out
-
-    return media.mapInPandas(batches, FEATURE_SCHEMA)
+    return _map_payloads(media, FEATURE_SCHEMA,
+                         lambda p: [(len(p), _decode_stub(p))],
+                         keys=("media_id", "kind"))
 
 
 WAV_SAMPLE_RATE = 8000
@@ -135,6 +158,31 @@ WAV_FEATURE_SCHEMA = T.StructType([
 ])
 
 
+def _wav_bytes(rate: int, samples) -> bytes:
+    """Mono PCM16 RIFF/WAVE file (44-byte header + frames) written by the
+    stdlib ``wave`` writer."""
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(2)
+        w.setframerate(rate)
+        w.writeframes(np.asarray(samples, "<i2").tobytes())
+    return buf.getvalue()
+
+
+def _pcm16(payload: bytes) -> tuple:
+    """The one WAV reader: parse a PCM16 RIFF/WAVE payload with stdlib
+    ``wave`` and return (frame rate, channels, interleaved samples as
+    int64). A sample width other than 16 bits, or fewer frame bytes than
+    the header declares, raises."""
+    with wave.open(io.BytesIO(payload)) as w:
+        rate, nch, nf = w.getframerate(), w.getnchannels(), w.getnframes()
+        raw = w.readframes(nf)
+    if len(raw) != 2 * nf * nch:
+        raise ValueError("not a PCM16 WAV payload")
+    return rate, nch, np.frombuffer(raw, "<i2").astype(np.int64)
+
+
 def synthesize_wav_media(spark, n: int = 48) -> DataFrame:
     """Real RIFF/WAVE payloads: clip i is PCM16 mono at WAV_SAMPLE_RATE
     with 64+i frames, sample j = (((i*31 + j*7) % 256) - 128) * 256,
@@ -143,47 +191,30 @@ def synthesize_wav_media(spark, n: int = 48) -> DataFrame:
     rows = []
     for i in range(n):
         nf = 64 + i
-        samples = [(((i * 31 + j * 7) % 256) - 128) * 256 for j in range(nf)]
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as w:
-            w.setnchannels(1)
-            w.setsampwidth(2)
-            w.setframerate(WAV_SAMPLE_RATE)
-            w.writeframes(struct.pack(f"<{nf}h", *samples))
-        rows.append((i, "audio", "audio/wav", buf.getvalue(),
+        samples = ((i * 31 + np.arange(nf) * 7) % 256 - 128) * 256
+        rows.append((i, "audio", "audio/wav",
+                     _wav_bytes(WAV_SAMPLE_RATE, samples),
                      (None, None, nf * 1000 // WAV_SAMPLE_RATE)))
     # coalesce: see synthesize_media - one Python worker per partition.
     return spark.createDataFrame(rows, MEDIA_SCHEMA).coalesce(4)
 
 
+def _wav_features(payload: bytes) -> tuple:
+    rate, nch, s = _pcm16(payload)
+    nf = len(s) // nch
+    a = np.abs(s)
+    return (rate, nch, nf, nf * 1_000_000 // rate, int(a.max(initial=0)),
+            int(a.sum()))
+
+
 def decode_wav_features(media: DataFrame) -> DataFrame:
     """REAL audio decode in Arrow batches: parse each payload's RIFF/WAVE
-    header and PCM16 frames with stdlib ``wave`` + ``struct``; emit rate /
-    channel / frame counts read from the file plus exact integer amplitude
+    header and PCM16 frames with stdlib ``wave``; emit rate / channel /
+    frame counts read from the file plus exact integer amplitude
     features computed from the decoded samples. Everything derives from
     the byte stream - nothing is trusted from the metadata struct."""
-    cols = [f.name for f in WAV_FEATURE_SCHEMA.fields]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    recs.append((mid, None, None, None, None, None, None))
-                    continue
-                with wave.open(io.BytesIO(bytes(payload))) as w:
-                    sr = w.getframerate()
-                    nch = w.getnchannels()
-                    nf = w.getnframes()
-                    raw = w.readframes(nf)
-                samples = struct.unpack(f"<{nf * nch}h", raw)
-                peak = max((abs(s) for s in samples), default=0)
-                total = sum(abs(s) for s in samples)
-                recs.append((mid, sr, nch, nf, nf * 1_000_000 // sr,
-                             peak, total))
-            yield pd.DataFrame(recs, columns=cols)
-
-    return media.mapInPandas(batches, WAV_FEATURE_SCHEMA)
+    return _map_payloads(media, WAV_FEATURE_SCHEMA,
+                         lambda p: [_wav_features(p)])
 
 
 BMP_FEATURE_SCHEMA = T.StructType([
@@ -198,21 +229,28 @@ BMP_FEATURE_SCHEMA = T.StructType([
 ])
 
 
-def _encode_bmp(w: int, h: int, pix) -> bytes:
+def _synth_pixels(i: int, w: int, h: int) -> np.ndarray:
+    """(h, w, 3) uint8 synthesis image i: channel c of pixel (x, y) is
+    (i*7 + x*3 + y*5 + (0, 11, 22)[c]) % 256."""
+    v = (i * 7 + np.arange(w)[None, :, None] * 3
+         + np.arange(h)[:, None, None] * 5 + np.array([0, 11, 22]))
+    return (v % 256).astype(np.uint8)
+
+
+def _encode_bmp(bgr: np.ndarray) -> bytes:
     """Encode a real 24-bpp uncompressed BMP: 14-byte BITMAPFILEHEADER,
     40-byte BITMAPINFOHEADER, bottom-up rows padded to 4-byte stride.
-    ``pix(x, y) -> (b, g, r)`` supplies the pixels (BMP stores BGR)."""
+    ``bgr`` is the (h, w, 3) uint8 top-down image in BMP's B, G, R
+    channel order."""
+    h, w, _ = bgr.shape
     row_size = (w * 3 + 3) & ~3
     img_size = row_size * h
     header = struct.pack("<2sIHHI", b"BM", 14 + 40 + img_size, 0, 0, 54)
     dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, img_size,
                       2835, 2835, 0, 0)
-    rows = bytearray()
-    for y in range(h - 1, -1, -1):       # BMP rows run bottom-up
-        for x in range(w):
-            rows += bytes(pix(x, y))
-        rows += b"\x00" * (row_size - w * 3)
-    return header + dib + bytes(rows)
+    rows = np.zeros((h, row_size), np.uint8)
+    rows[:, :w * 3] = bgr[::-1].reshape(h, w * 3)      # BMP rows run bottom-up
+    return header + dib + rows.tobytes()
 
 
 def synthesize_bmp_media(spark, n: int = 48) -> DataFrame:
@@ -223,61 +261,45 @@ def synthesize_bmp_media(spark, n: int = 48) -> DataFrame:
     rows = []
     for i in range(n):
         w, h = 8 + i % 5, 6 + i % 3
-        payload = _encode_bmp(
-            w, h,
-            lambda x, y, i=i: ((i * 7 + x * 3 + y * 5) % 256,
-                               (i * 7 + x * 3 + y * 5 + 11) % 256,
-                               (i * 7 + x * 3 + y * 5 + 22) % 256))
-        rows.append((i, "image", "image/bmp", payload, (w, h, None)))
+        rows.append((i, "image", "image/bmp",
+                     _encode_bmp(_synth_pixels(i, w, h)), (w, h, None)))
     # coalesce: see synthesize_media - one Python worker per partition.
     return spark.createDataFrame(rows, MEDIA_SCHEMA).coalesce(4)
 
 
-def _decode_bmp(payload: bytes) -> tuple:
-    """Parse a 24-bpp uncompressed BMP from its bytes alone: magic,
-    pixel-array offset, DIB dimensions, then a stride walk over padded
-    rows (handles top-down negative-height images too). Returns
-    (width, height, n_pixels, sum_b, sum_g, sum_r, peak_rgb)."""
+def _bmp_pixels(payload: bytes) -> np.ndarray:
+    """The one BMP parser: a 24-bpp uncompressed BMP from its bytes
+    alone - magic, pixel-array offset, DIB dimensions, padded row
+    stride - returned as the (h, w, 3) uint8 image in TOP-DOWN row
+    order (bottom-up storage is flipped; a negative height means the
+    file is already top-down) and B, G, R channel order."""
     magic, _fsize, _r1, _r2, off = struct.unpack_from("<2sIHHI", payload, 0)
     if magic != b"BM":
         raise ValueError("not a BMP payload")
     _hsz, w, h, _planes, bpp, comp = struct.unpack_from("<IiiHHI", payload, 14)
     if bpp != 24 or comp != 0:
         raise ValueError(f"unsupported BMP variant bpp={bpp} comp={comp}")
-    height = abs(h)
-    row_size = (w * 3 + 3) & ~3
-    sb = sg = sr = 0
-    peak = 0
-    for row in range(height):
-        base = off + row * row_size
-        px = payload[base:base + w * 3]
-        sb += sum(px[0::3])
-        sg += sum(px[1::3])
-        sr += sum(px[2::3])
-        for x in range(w):
-            lum = px[3 * x] + px[3 * x + 1] + px[3 * x + 2]
-            if lum > peak:
-                peak = lum
-    return (w, height, w * height, sb, sg, sr, peak)
+    height, row_size = abs(h), (w * 3 + 3) & ~3
+    rows = np.frombuffer(payload, np.uint8, height * row_size, off)
+    px = rows.reshape(height, row_size)[:, :w * 3].reshape(height, w, 3)
+    return px[::-1] if h > 0 else px
+
+
+def _rgb_features(px: np.ndarray) -> tuple:
+    """(width, height, n_pixels, channel sums in storage order, peak
+    per-pixel channel total) of an (h, w, 3) image - exact int64."""
+    h, w, _ = px.shape
+    p = px.astype(np.int64)
+    s0, s1, s2 = (int(v) for v in p.sum(axis=(0, 1)))
+    return (w, h, w * h, s0, s1, s2, int(p.sum(axis=2).max(initial=0)))
 
 
 def decode_bmp_features(media: DataFrame) -> DataFrame:
     """REAL image decode in Arrow batches: every output value derives
     from the BMP byte stream (header fields + pixel walk), nothing is
     trusted from the metadata struct - same discipline as the WAV path."""
-    cols = [f.name for f in BMP_FEATURE_SCHEMA.fields]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    recs.append((mid,) + (None,) * 7)
-                    continue
-                recs.append((mid,) + _decode_bmp(bytes(payload)))
-            yield pd.DataFrame(recs, columns=cols)
-
-    return media.mapInPandas(batches, BMP_FEATURE_SCHEMA)
+    return _map_payloads(media, BMP_FEATURE_SCHEMA,
+                         lambda p: [_rgb_features(_bmp_pixels(p))])
 
 
 PNG_FEATURE_SCHEMA = T.StructType([
@@ -307,45 +329,30 @@ def _paeth(a: int, b: int, c: int) -> int:
 
 
 def _png_chunk(ctype: bytes, data: bytes) -> bytes:
-    import zlib
     return (struct.pack(">I", len(data)) + ctype + data
             + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF))
 
 
-def _encode_png(w: int, h: int, pix) -> bytes:
+def _encode_png(rgb: np.ndarray) -> bytes:
     """Encode a real PNG: signature, IHDR (8-bit truecolor, no
     interlace), one zlib-compressed IDAT, IEND - stdlib zlib + struct
-    only. ``pix(x, y) -> (r, g, b)``. Scanline y uses filter type
-    ``y % 5``, cycling through None/Sub/Up/Average/Paeth so a decoder
-    must implement ALL five unfilters (not just the trivial one) to
-    reconstruct the pixels."""
-    import zlib
-    bpp = 3
-    raw_prev = bytes(w * bpp)
+    only. ``rgb`` is the (h, w, 3) uint8 image. Scanline y uses filter
+    type ``y % 5``, cycling through None/Sub/Up/Average/Paeth so a
+    decoder must implement ALL five unfilters (not just the trivial
+    one) to reconstruct the pixels."""
+    h, w, _ = rgb.shape
+    prev = bytes(w * 3)
     out = bytearray()
     for y in range(h):
-        raw = bytearray()
-        for x in range(w):
-            raw += bytes(pix(x, y))
-        f = y % 5
-        line = bytearray([f])
-        for i in range(w * bpp):
-            left = raw[i - bpp] if i >= bpp else 0
-            up = raw_prev[i]
-            upleft = raw_prev[i - bpp] if i >= bpp else 0
-            if f == 0:
-                v = raw[i]
-            elif f == 1:
-                v = raw[i] - left
-            elif f == 2:
-                v = raw[i] - up
-            elif f == 3:
-                v = raw[i] - (left + up) // 2
-            else:
-                v = raw[i] - _paeth(left, up, upleft)
-            line.append(v & 0xFF)
-        out += line
-        raw_prev = bytes(raw)
+        raw, f = rgb[y].tobytes(), y % 5
+        out.append(f)
+        for i in range(w * 3):
+            left = raw[i - 3] if i >= 3 else 0
+            upleft = prev[i - 3] if i >= 3 else 0
+            pred = (0, left, prev[i], (left + prev[i]) // 2,
+                    _paeth(left, prev[i], upleft))[f]
+            out.append((raw[i] - pred) & 0xFF)
+        prev = raw
     ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
     return (_PNG_SIG + _png_chunk(b"IHDR", ihdr)
             + _png_chunk(b"IDAT", zlib.compress(bytes(out)))
@@ -362,24 +369,21 @@ def synthesize_png_media(spark, n: int = 48) -> DataFrame:
     rows = []
     for i in range(n):
         w, h = 8 + i % 5, 6 + i % 3
-        payload = _encode_png(
-            w, h,
-            lambda x, y, i=i: ((i * 7 + x * 3 + y * 5) % 256,
-                               (i * 7 + x * 3 + y * 5 + 11) % 256,
-                               (i * 7 + x * 3 + y * 5 + 22) % 256))
-        rows.append((i, "image", "image/png", payload, (w, h, None)))
+        rows.append((i, "image", "image/png",
+                     _encode_png(_synth_pixels(i, w, h)), (w, h, None)))
     # coalesce: see synthesize_media - one Python worker per partition.
     return spark.createDataFrame(rows, MEDIA_SCHEMA).coalesce(4)
 
 
-def _decode_png(payload: bytes) -> tuple:
+def _png_pixels(payload: bytes) -> np.ndarray:
     """Parse a PNG from its bytes alone: signature check, chunk walk
     (IHDR dims/depth/color-type, IDAT concatenation), zlib inflate,
-    then the full five-filter unfiltering pass (None/Sub/Up/Average/
-    Paeth) to reconstruct pixels. 8-bit truecolor, non-interlaced -
-    the variant the encoder emits; anything else raises. Returns
-    (width, height, n_pixels, sum_r, sum_g, sum_b, peak_rgb)."""
-    import zlib
+    then the five-filter unfiltering pass to reconstruct the (h, w, 3)
+    uint8 RGB image. 8-bit truecolor, non-interlaced - the variant the
+    encoder emits; anything else raises. None/Sub/Up rows unfilter as
+    whole-row numpy ops (Sub is a per-channel running sum mod 256);
+    Average and Paeth depend on the byte just reconstructed to the
+    left, so those rows run a sequential byte loop."""
     if payload[:8] != _PNG_SIG:
         raise ValueError("not a PNG payload")
     pos, w = 8, None
@@ -402,60 +406,42 @@ def _decode_png(payload: bytes) -> tuple:
             break
     if w is None:
         raise ValueError("PNG missing IHDR")
-    bpp = 3
-    stride = w * bpp
+    stride = w * 3
     flat = zlib.decompress(bytes(idat))
     if len(flat) != (stride + 1) * h:
         raise ValueError("PNG pixel data size mismatch")
-    prev = bytearray(stride)
-    sr = sg = sb = 0
-    peak = 0
+    scan = np.frombuffer(flat, np.uint8).reshape(h, stride + 1)
+    out = np.zeros((h + 1, stride), np.uint8)     # out[0]: the row above y=0
     for y in range(h):
-        f = flat[y * (stride + 1)]
-        line = bytearray(flat[y * (stride + 1) + 1:(y + 1) * (stride + 1)])
-        for i in range(stride):
-            left = line[i - bpp] if i >= bpp else 0
-            up = prev[i]
-            upleft = prev[i - bpp] if i >= bpp else 0
-            if f == 1:
-                line[i] = (line[i] + left) & 0xFF
-            elif f == 2:
-                line[i] = (line[i] + up) & 0xFF
-            elif f == 3:
-                line[i] = (line[i] + (left + up) // 2) & 0xFF
-            elif f == 4:
-                line[i] = (line[i] + _paeth(left, up, upleft)) & 0xFF
-            elif f != 0:
-                raise ValueError(f"bad PNG filter type {f}")
-        sr += sum(line[0::3])
-        sg += sum(line[1::3])
-        sb += sum(line[2::3])
-        for x in range(w):
-            lum = line[3 * x] + line[3 * x + 1] + line[3 * x + 2]
-            if lum > peak:
-                peak = lum
-        prev = line
-    return (w, h, w * h, sr, sg, sb, peak)
+        # int(): comparing a numpy scalar in the byte loop is ~2x slower
+        f, line, up = int(scan[y, 0]), scan[y, 1:], out[y]
+        if f == 0:
+            out[y + 1] = line
+        elif f == 1:
+            out[y + 1] = np.cumsum(line.reshape(w, 3), axis=0,
+                                   dtype=np.uint8).reshape(-1)
+        elif f == 2:
+            out[y + 1] = line + up              # uint8 wraps mod 256
+        elif f in (3, 4):
+            cur, up = bytearray(line.tobytes()), up.tobytes()
+            for i in range(stride):
+                left = cur[i - 3] if i >= 3 else 0
+                pred = ((left + up[i]) // 2 if f == 3 else
+                        _paeth(left, up[i], up[i - 3] if i >= 3 else 0))
+                cur[i] = (cur[i] + pred) & 0xFF
+            out[y + 1] = np.frombuffer(cur, np.uint8)
+        else:
+            raise ValueError(f"bad PNG filter type {f}")
+    return out[1:].reshape(h, w, 3)
 
 
 def decode_png_features(media: DataFrame) -> DataFrame:
     """REAL compressed-image decode in Arrow batches: every output value
     derives from the PNG byte stream (chunk walk, zlib inflate, filter
     reconstruction, pixel sums) - the full codec discipline of the
-    WAV/BMP paths extended to a COMPRESSED container, stdlib-only."""
-    cols = [f.name for f in PNG_FEATURE_SCHEMA.fields]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    recs.append((mid,) + (None,) * 7)
-                    continue
-                recs.append((mid,) + _decode_png(bytes(payload)))
-            yield pd.DataFrame(recs, columns=cols)
-
-    return media.mapInPandas(batches, PNG_FEATURE_SCHEMA)
+    WAV/BMP paths extended to a COMPRESSED container."""
+    return _map_payloads(media, PNG_FEATURE_SCHEMA,
+                         lambda p: [_rgb_features(_png_pixels(p))])
 
 
 def media_stats(media: DataFrame) -> DataFrame:
@@ -468,26 +454,29 @@ def media_stats(media: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------
-# JPEG: baseline DCT codec (grayscale, no subsampling), stdlib-only
+# JPEG: baseline DCT codec (grayscale, no subsampling)
 # ---------------------------------------------------------------------
 #
 # The last multimodal stub retired (r5 verdict "What's missing" #3): a
 # REAL ITU T.81 baseline sequential codec - 8x8 level-shifted DCT,
 # quantization, zigzag, DC differential + AC run-length coding with the
 # spec's Annex K luminance Huffman tables, 0xFF byte stuffing - written
-# against the public spec with math/struct only. One component
-# (grayscale) and no chroma subsampling: the variant that exercises the
-# full entropy/transform machinery without a color pipeline.
+# against the public spec. One component (grayscale) and no chroma
+# subsampling: the variant that exercises the full entropy/transform
+# machinery without a color pipeline. The marker walk and the entropy
+# coding are sequential bit streams; the DCT, quantization and zigzag
+# run once over all blocks as numpy matrix products, and np.rint rounds
+# half to even exactly as Python's round does.
 #
 # Exactness contract (how a LOSSY codec gets a value-hash oracle): the
 # synthesized corpus uses constant 8x8 blocks and a uniform
 # quantization table of 8. A constant level-shifted block c has DC=8c
-# (power-of-two float ops on integers - exact) and AC that cancels to
-# ~1e-13 and quantizes to 0, so quantized DC = round(8c/8) = c and the
-# decode reconstructs every pixel EXACTLY; the DuckDB oracle computes
-# pixel sums from the same closed form of (i, bx, by). The GENERAL
-# lossy path (nonzero ACs, real quant error) is proven separately in
-# tests/test_multimodal.py with a gradient image and an error bound.
+# (to within a few ulps) and AC that cancels to ~1e-13 and quantizes
+# to 0, so quantized DC = round(8c/8) = c and the decode reconstructs
+# every pixel EXACTLY; the DuckDB oracle computes pixel sums from the
+# same closed form of (i, bx, by). The GENERAL lossy path (nonzero
+# ACs, real quant error) is proven separately in tests/test_multimodal.py
+# with a gradient image and an error bound.
 
 JPEG_FEATURE_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
@@ -528,6 +517,13 @@ _JPEG_ZIGZAG = [
     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
 ]
 
+# DCT-II basis (T.81 A.3.3): D[u, x] = C(u) cos((2x+1) u pi / 16). The
+# 2-D forward transform of a level-shifted block B is 0.25 * D B D^T
+# (coefficient [v, u]); the inverse is 0.25 * D^T S D.
+_JPEG_DCT = np.array([[(1 / math.sqrt(2) if u == 0 else 1.0)
+                       * math.cos((2 * x + 1) * u * math.pi / 16)
+                       for x in range(8)] for u in range(8)])
+
 
 def _huff_canonical(bits, vals):
     """Canonical JPEG Huffman codes (T.81 C.2): symbol -> (code, length)."""
@@ -538,39 +534,6 @@ def _huff_canonical(bits, vals):
             code += 1
             k += 1
         code <<= 1
-    return out
-
-
-import math as _math
-
-_JPEG_COS = [[_math.cos((2 * x + 1) * u * _math.pi / 16)
-              for u in range(8)] for x in range(8)]
-_JPEG_C = [1 / _math.sqrt(2)] + [1.0] * 7
-
-
-def _dct8x8(block):
-    """2-D DCT-II (T.81 A.3.3) of a level-shifted 8x8 block."""
-    out = [[0.0] * 8 for _ in range(8)]
-    for u in range(8):
-        for v in range(8):
-            s = 0.0
-            for x in range(8):
-                for y in range(8):
-                    s += block[y][x] * _JPEG_COS[x][u] * _JPEG_COS[y][v]
-            out[v][u] = 0.25 * _JPEG_C[u] * _JPEG_C[v] * s
-    return out
-
-
-def _idct8x8(coef):
-    out = [[0.0] * 8 for _ in range(8)]
-    for x in range(8):
-        for y in range(8):
-            s = 0.0
-            for u in range(8):
-                for v in range(8):
-                    s += (_JPEG_C[u] * _JPEG_C[v] * coef[v][u]
-                          * _JPEG_COS[x][u] * _JPEG_COS[y][v])
-            out[y][x] = 0.25 * s
     return out
 
 
@@ -623,39 +586,37 @@ def encode_jpeg_gray(w: int, h: int, pix, quant: int = 8) -> bytes:
     qtab = [quant] * 64
     dc_huff = _huff_canonical(_JPEG_DC_BITS, _JPEG_DC_VALS)
     ac_huff = _huff_canonical(_JPEG_AC_BITS, _JPEG_AC_VALS)
+    img = np.array([[pix(x, y) - 128 for x in range(w)] for y in range(h)],
+                   np.float64).reshape(h // 8, 8, w // 8, 8)
+    coef = 0.25 * _JPEG_DCT @ img.transpose(0, 2, 1, 3) @ _JPEG_DCT.T
+    quantized = np.rint(coef.reshape(-1, 64)[:, _JPEG_ZIGZAG] / quant)
     bw = _BitWriter()
     prev_dc = 0
-    for by in range(h // 8):
-        for bx in range(w // 8):
-            block = [[pix(bx * 8 + x, by * 8 + y) - 128
-                      for x in range(8)] for y in range(8)]
-            coef = _dct8x8(block)
-            zz = [int(round(coef[_JPEG_ZIGZAG[k] // 8][_JPEG_ZIGZAG[k] % 8]
-                            / qtab[k])) for k in range(64)]
-            diff = zz[0] - prev_dc
-            prev_dc = zz[0]
-            t, bits = _jpeg_category(diff)
-            code, length = dc_huff[t]
+    for zz in quantized.astype(np.int64).tolist():
+        diff = zz[0] - prev_dc
+        prev_dc = zz[0]
+        t, bits = _jpeg_category(diff)
+        code, length = dc_huff[t]
+        bw.write(code, length)
+        if t:
+            bw.write(bits, t)
+        run = 0
+        for k in range(1, 64):
+            if zz[k] == 0:
+                run += 1
+                continue
+            while run > 15:
+                code, length = ac_huff[0xF0]     # ZRL
+                bw.write(code, length)
+                run -= 16
+            t, bits = _jpeg_category(zz[k])
+            code, length = ac_huff[(run << 4) | t]
             bw.write(code, length)
-            if t:
-                bw.write(bits, t)
+            bw.write(bits, t)
             run = 0
-            for k in range(1, 64):
-                if zz[k] == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    code, length = ac_huff[0xF0]     # ZRL
-                    bw.write(code, length)
-                    run -= 16
-                t, bits = _jpeg_category(zz[k])
-                code, length = ac_huff[(run << 4) | t]
-                bw.write(code, length)
-                bw.write(bits, t)
-                run = 0
-            if run:
-                code, length = ac_huff[0x00]          # EOB
-                bw.write(code, length)
+        if run:
+            code, length = ac_huff[0x00]          # EOB
+            bw.write(code, length)
     data = bw.flush()
 
     def seg(marker, payload):
@@ -719,13 +680,13 @@ def _jpeg_extend(bits, t):
     return bits if bits >= (1 << (t - 1)) else bits - (1 << t) + 1
 
 
-def decode_jpeg_gray(payload: bytes) -> tuple:
+def _jpeg_pixels(payload: bytes) -> np.ndarray:
     """Decode a baseline grayscale JPEG from its bytes alone: marker
     walk (DQT/SOF0/DHT/SOS), canonical Huffman rebuild, entropy decode
-    (DC differential + AC run-length, ZRL/EOB), dequantize, de-zigzag,
-    IDCT, +128 clamp. Any baseline grayscale stream decodes - not just
-    this module's encoder output. Returns
-    (width, height, n_pixels, n_blocks, sum_lum, peak_lum)."""
+    (DC differential + AC run-length, ZRL/EOB), then dequantize,
+    de-zigzag, IDCT and the +128 clamp over all blocks at once. Any
+    baseline grayscale stream decodes - not just this module's encoder
+    output. Returns the (h, w) uint8 image."""
     if payload[:2] != b"\xFF\xD8":
         raise ValueError("not a JPEG payload (missing SOI)")
     pos = 2
@@ -775,49 +736,47 @@ def decode_jpeg_gray(payload: bytes) -> tuple:
             break
     if None in (qtab, w, dc_table, ac_table, scan_start):
         raise ValueError("JPEG missing required segments")
-    end = payload.rfind(b"\xFF\xD9")
-    br = _BitReader(payload[scan_start:end if end > 0 else len(payload)])
-    bw_, bh_ = w // 8, h // 8
     if w % 8 or h % 8:
         raise ValueError("demo decoder requires multiple-of-8 dims")
+    end = payload.rfind(b"\xFF\xD9")
+    br = _BitReader(payload[scan_start:end if end > 0 else len(payload)])
     prev_dc = 0
-    total = 0
-    peak = 0
-    n_blocks = 0
-    for _by in range(bh_):
-        for _bx in range(bw_):
-            zz = [0] * 64
-            t = _huff_decode(br, dc_table)
-            prev_dc += _jpeg_extend(br.read(t) if t else 0, t)
-            zz[0] = prev_dc
-            k = 1
-            while k < 64:
-                sym = _huff_decode(br, ac_table)
-                if sym == 0x00:                      # EOB
-                    break
-                if sym == 0xF0:                      # ZRL
-                    k += 16
-                    continue
-                k += sym >> 4
-                t = sym & 0x0F
-                if k >= 64:
-                    raise ValueError("AC run overflows block")
-                zz[k] = _jpeg_extend(br.read(t), t)
-                k += 1
-            coef = [[0.0] * 8 for _ in range(8)]
-            for k in range(64):
-                r, c = _JPEG_ZIGZAG[k] // 8, _JPEG_ZIGZAG[k] % 8
-                coef[r][c] = zz[k] * qtab[k]
-            spat = _idct8x8(coef)
-            n_blocks += 1
-            for y in range(8):
-                for x in range(8):
-                    v = int(round(spat[y][x])) + 128
-                    v = 0 if v < 0 else (255 if v > 255 else v)
-                    total += v
-                    if v > peak:
-                        peak = v
-    return (w, h, w * h, n_blocks, total, peak)
+    blocks = []
+    for _ in range((h // 8) * (w // 8)):
+        zz = [0] * 64
+        t = _huff_decode(br, dc_table)
+        prev_dc += _jpeg_extend(br.read(t) if t else 0, t)
+        zz[0] = prev_dc
+        k = 1
+        while k < 64:
+            sym = _huff_decode(br, ac_table)
+            if sym == 0x00:                      # EOB
+                break
+            if sym == 0xF0:                      # ZRL
+                k += 16
+                continue
+            k += sym >> 4
+            t = sym & 0x0F
+            if k >= 64:
+                raise ValueError("AC run overflows block")
+            zz[k] = _jpeg_extend(br.read(t), t)
+            k += 1
+        blocks.append(zz)
+    coef = np.zeros((len(blocks), 64))
+    coef[:, _JPEG_ZIGZAG] = np.array(blocks, np.int64).reshape(-1, 64) * qtab
+    spat = 0.25 * _JPEG_DCT.T @ coef.reshape(-1, 8, 8) @ _JPEG_DCT
+    pix = np.clip(np.rint(spat) + 128, 0, 255).astype(np.uint8)
+    rows = pix.reshape(h // 8, w // 8, 8, 8).transpose(0, 2, 1, 3)
+    return rows.reshape(h, w)          # block grid -> raster order
+
+
+def decode_jpeg_gray(payload: bytes) -> tuple:
+    """Decode a baseline grayscale JPEG (``_jpeg_pixels``) and return
+    (width, height, n_pixels, n_blocks, sum_lum, peak_lum)."""
+    pix = _jpeg_pixels(payload)
+    h, w = pix.shape
+    return (w, h, w * h, (w // 8) * (h // 8), int(pix.sum(dtype=np.int64)),
+            int(pix.max(initial=0)))
 
 
 def synthesize_jpeg_media(spark, n: int = 48) -> DataFrame:
@@ -843,28 +802,17 @@ def decode_jpeg_features(media: DataFrame) -> DataFrame:
     """REAL transform-coded image decode in Arrow batches: marker walk,
     Huffman entropy decode, dequantize, IDCT, pixel stats - the full
     codec discipline of the WAV/BMP/PNG paths extended to a LOSSY
-    transform container, stdlib-only."""
-    cols = [f.name for f in JPEG_FEATURE_SCHEMA.fields]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    recs.append((mid,) + (None,) * 6)
-                    continue
-                recs.append((mid,) + decode_jpeg_gray(bytes(payload)))
-            yield pd.DataFrame(recs, columns=cols)
-
-    return media.mapInPandas(batches, JPEG_FEATURE_SCHEMA)
+    transform container."""
+    return _map_payloads(media, JPEG_FEATURE_SCHEMA,
+                         lambda p: [decode_jpeg_gray(p)])
 
 
 # ---------------------------------------------------------------------
-# VIDEO: RIFF/AVI container (uncompressed 8-bit DIB frames), stdlib-only
+# VIDEO: RIFF/AVI container (uncompressed 8-bit DIB frames), no codec lib
 # ---------------------------------------------------------------------
 #
 # The LAST stubbed modality retired: genuine AVI files built and parsed
-# with ``struct`` alone against the public RIFF/AVI spec - 'RIFF..AVI '
+# with ``struct`` and numpy against the public RIFF/AVI spec - 'RIFF..AVI '
 # envelope, LIST hdrl (avih MainAVIHeader + LIST strl with a 'vids'/
 # 'DIB ' stream header and a BITMAPINFOHEADER strf + 256-entry gray
 # palette), LIST movi of '00db' uncompressed bottom-up DIB frames with
@@ -955,67 +903,61 @@ def encode_avi_gray(w: int, h: int, n_frames: int, pix,
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def decode_avi_frames(payload: bytes, stride: int = 1) -> list[tuple]:
-    """Parse a real AVI from its bytes alone and SAMPLE every
-    ``stride``-th frame: RIFF walk, avih/strf validation (8-bit
-    uncompressed DIB only), movi '00db' iteration, bottom-up unpadded
-    pixel recovery. Returns one tuple per sampled frame:
-    (frame_idx, width, height, n_frames, sum_lum, peak_lum)."""
+def _riff_leaves(data: bytes) -> Iterator[tuple[bytes, bytes]]:
+    """Depth-first (fourcc, body) over a RIFF chunk sequence: a LIST
+    yields (its list type, b"") and then its children."""
+    pos = 0
+    while pos + 8 <= len(data):
+        fourcc = data[pos:pos + 4]
+        (size,) = struct.unpack_from("<I", data, pos + 4)
+        body = data[pos + 8:pos + 8 + size]
+        pos += 8 + size + (size % 2)
+        if fourcc == b"LIST":
+            yield body[:4], b""
+            yield from _riff_leaves(body[4:])
+        else:
+            yield fourcc, body
+
+
+def _avi_frames(payload: bytes) -> tuple:
+    """The one AVI parser: RIFF walk, avih/strf validation (8-bit
+    uncompressed DIB only), movi '00db' frames, bottom-up padded rows
+    to top-down pixels. Returns (width, height, frames) with frames
+    the (n_frames, h, w) uint8 array; the frame count must match avih."""
     if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
         raise ValueError("not an AVI payload (missing RIFF/AVI magic)")
-
-    w = h = total = None
-    movi_body = None
-
-    def walk(data):
-        nonlocal w, h, total, movi_body
-        pos = 0
-        while pos + 8 <= len(data):
-            fourcc = data[pos:pos + 4]
-            (size,) = struct.unpack_from("<I", data, pos + 4)
-            body = data[pos + 8:pos + 8 + size]
-            if fourcc == b"LIST":
-                if body[:4] == b"movi":
-                    movi_body = body[4:]
-                else:
-                    walk(body[4:])
-            elif fourcc == b"avih":
-                vals = struct.unpack_from("<14I", body, 0)
-                total, w, h = vals[4], vals[8], vals[9]
-            elif fourcc == b"strf":
-                (bsize, bw, bh, planes, bpp,
-                 comp) = struct.unpack_from("<IiiHHI", body, 0)
-                if bpp != 8 or comp != 0:
-                    raise ValueError(
-                        f"unsupported AVI frame format bpp={bpp} comp={comp}")
-            pos += 8 + size + (size % 2)
-
-    walk(payload[12:])
-    if None in (w, h, total) or movi_body is None:
+    w = h = total = frames = None
+    for fourcc, body in _riff_leaves(payload[12:]):
+        if fourcc == b"avih":
+            vals = struct.unpack_from("<14I", body, 0)
+            total, w, h = vals[4], vals[8], vals[9]
+        elif fourcc == b"strf":
+            (_bsize, _bw, _bh, _planes, bpp,
+             comp) = struct.unpack_from("<IiiHHI", body, 0)
+            if bpp != 8 or comp != 0:
+                raise ValueError(
+                    f"unsupported AVI frame format bpp={bpp} comp={comp}")
+        elif fourcc == b"movi":
+            frames = []
+        elif fourcc == b"00db" and frames is not None:
+            frames.append(body)
+    if total is None or frames is None:
         raise ValueError("AVI missing avih/movi")
-    row_stride = (w + 3) & ~3
-    out, pos, fidx = [], 0, 0
-    while pos + 8 <= len(movi_body):
-        fourcc = movi_body[pos:pos + 4]
-        (size,) = struct.unpack_from("<I", movi_body, pos + 4)
-        data = movi_body[pos + 8:pos + 8 + size]
-        pos += 8 + size + (size % 2)
-        if fourcc != b"00db":
-            continue
-        if fidx % stride == 0:
-            tot = peak = 0
-            for y in range(h):
-                row = data[(h - 1 - y) * row_stride:
-                           (h - 1 - y) * row_stride + w]
-                tot += sum(row)
-                m = max(row)
-                if m > peak:
-                    peak = m
-            out.append((fidx, w, h, total, tot, peak))
-        fidx += 1
-    if fidx != total:
-        raise ValueError(f"frame count mismatch: movi {fidx} vs avih {total}")
-    return out
+    if len(frames) != total:
+        raise ValueError(
+            f"frame count mismatch: movi {len(frames)} vs avih {total}")
+    rows = np.frombuffer(b"".join(frames), np.uint8)
+    return w, h, rows.reshape(total, h, (w + 3) & ~3)[:, ::-1, :w]
+
+
+def decode_avi_frames(payload: bytes, stride: int = 1) -> list[tuple]:
+    """Parse a real AVI (``_avi_frames``) and SAMPLE every
+    ``stride``-th frame. Returns one tuple per sampled frame:
+    (frame_idx, width, height, n_frames, sum_lum, peak_lum)."""
+    w, h, frames = _avi_frames(payload)
+    return [(f, w, h, len(frames), int(frames[f].sum(dtype=np.int64)),
+             int(frames[f].max(initial=0)))
+            for f in range(0, len(frames), stride)]
 
 
 def synthesize_avi_media(spark, n: int = 48) -> DataFrame:
@@ -1040,19 +982,9 @@ def sample_avi_frames(media: DataFrame, stride: int = 2) -> DataFrame:
     row explodes into one row per sampled frame (the 1->N mapInPandas
     shape). Only (id, frame_idx, dims, stats) leave the executor -
     pixels never do."""
-    cols = [f.name for f in AVI_FRAME_SCHEMA.fields]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                for tup in decode_avi_frames(bytes(payload), stride):
-                    recs.append((mid,) + tup)
-            yield pd.DataFrame(recs, columns=cols)
-
-    return media.mapInPandas(batches, AVI_FRAME_SCHEMA)
+    return _map_payloads(media, AVI_FRAME_SCHEMA,
+                         lambda p: decode_avi_frames(p, stride),
+                         skip_null=True)
 
 
 # ---------------------------------------------------------------------
@@ -1068,58 +1000,23 @@ def sample_avi_frames(media: DataFrame, stride: int = 2) -> DataFrame:
 # the resized pixels as a new BMP payload, so downstream consumers see
 # a real, decodable image column - resize composes with decode.
 
-RESIZED_MEDIA_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("kind", T.StringType(), False),
-    T.StructField("mime", T.StringType(), True),
-    T.StructField("payload", T.BinaryType(), True),
-    T.StructField("meta", T.StructType([
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.IntegerType(), True),
-    ]), True),
-])
+RESIZED_MEDIA_SCHEMA = MEDIA_SCHEMA      # resize keeps the media envelope
 
 
-def _decode_bmp_pixels(payload: bytes) -> tuple:
-    """Full pixel-grid decode of a 24-bpp BMP: returns (w, h, grid)
-    with grid[y][x] = (b, g, r) in TOP-DOWN row order regardless of the
-    file's bottom-up storage."""
-    magic, _fsize, _r1, _r2, off = struct.unpack_from("<2sIHHI", payload, 0)
-    if magic != b"BM":
-        raise ValueError("not a BMP payload")
-    _hsz, w, h, _planes, bpp, comp = struct.unpack_from("<IiiHHI", payload, 14)
-    if bpp != 24 or comp != 0:
-        raise ValueError(f"unsupported BMP variant bpp={bpp} comp={comp}")
-    height = abs(h)
-    row_size = (w * 3 + 3) & ~3
-    grid = []
-    for y in range(height):
-        frow = (height - 1 - y) if h > 0 else y      # bottom-up unless h<0
-        base = off + frow * row_size
-        px = payload[base:base + w * 3]
-        grid.append([(px[3 * x], px[3 * x + 1], px[3 * x + 2])
-                     for x in range(w)])
-    return w, height, grid
+def _resize_half_box(px: np.ndarray) -> np.ndarray:
+    """Exact 2x2 box downsample of an (h, w, 3) uint8 image: output
+    (x, y) = per-channel floor-mean of the four source pixels; odd
+    trailing row/column is dropped (floor output dims). Integer-only -
+    no float resampling."""
+    h, w = px.shape[0] // 2 * 2, px.shape[1] // 2 * 2
+    p = px[:h, :w].astype(np.uint16)
+    return ((p[0::2, 0::2] + p[0::2, 1::2] + p[1::2, 0::2] + p[1::2, 1::2])
+            // 4).astype(np.uint8)
 
 
-def _resize_half_box(w: int, h: int, grid) -> tuple:
-    """Exact 2x2 box downsample: output (x, y) = per-channel
-    floor-mean of the four source pixels; odd trailing row/column is
-    dropped (floor output dims). Integer-only - no float resampling."""
-    ow, oh = w // 2, h // 2
-    out = []
-    for oy in range(oh):
-        row = []
-        for ox in range(ow):
-            p00 = grid[2 * oy][2 * ox]
-            p10 = grid[2 * oy][2 * ox + 1]
-            p01 = grid[2 * oy + 1][2 * ox]
-            p11 = grid[2 * oy + 1][2 * ox + 1]
-            row.append(tuple((p00[c] + p10[c] + p01[c] + p11[c]) // 4
-                             for c in range(3)))
-        out.append(row)
-    return ow, oh, out
+def _resized_bmp(payload: bytes) -> tuple:
+    out = _resize_half_box(_bmp_pixels(payload))
+    return _encode_bmp(out), (out.shape[1], out.shape[0], None)
 
 
 def resize_bmp_half(media: DataFrame) -> DataFrame:
@@ -1129,24 +1026,9 @@ def resize_bmp_half(media: DataFrame) -> DataFrame:
     accepts, proving resize composes in a pipeline rather than only
     emitting stats. At 100 TB this is the canonical payload-in/
     payload-out shape: pixels exist only inside the executor batch."""
-    cols = [f.name for f in RESIZED_MEDIA_SCHEMA.fields]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for mid, kind, mime, payload in zip(
-                    pdf["media_id"], pdf["kind"], pdf["mime"],
-                    pdf["payload"]):
-                if payload is None:
-                    recs.append((mid, kind, mime, None, None))
-                    continue
-                w, h, grid = _decode_bmp_pixels(bytes(payload))
-                ow, oh, out = _resize_half_box(w, h, grid)
-                enc = _encode_bmp(ow, oh, lambda x, y: out[y][x])
-                recs.append((mid, kind, mime, enc, (ow, oh, None)))
-            yield pd.DataFrame(recs, columns=cols)
-
-    return media.mapInPandas(batches, RESIZED_MEDIA_SCHEMA)
+    return _map_payloads(media, RESIZED_MEDIA_SCHEMA,
+                         lambda p: [_resized_bmp(p)],
+                         keys=("media_id", "kind", "mime"))
 
 
 # ---------------------------------------------------------------------
@@ -1165,6 +1047,21 @@ WAV_ENERGY_SCHEMA = T.StructType([
 ])
 
 
+def _frame_energy(s: np.ndarray) -> np.ndarray:
+    """Per-frame energy: sum of s^2 over consecutive WAV_FRAME-sample
+    frames (the last frame may be short) - exact int64."""
+    e = np.pad(s * s, (0, -len(s) % WAV_FRAME))
+    return e.reshape(-1, WAV_FRAME).sum(axis=1)
+
+
+def _wav_energy(payload: bytes) -> tuple:
+    s = _pcm16(payload)[2]
+    fe = _frame_energy(s)
+    peak = int(np.argmax(fe)) if len(fe) else None
+    return (len(fe), int((s[:-1] * s[1:] < 0).sum()), int((s * s).sum()),
+            peak, int(fe[peak]) if len(fe) else None)
+
+
 def wav_energy_features(media: DataFrame) -> DataFrame:
     """The audio feature-extract leg beyond amplitude stats: decode the
     PCM16 stream and compute the two classic short-time features with
@@ -1176,32 +1073,8 @@ def wav_energy_features(media: DataFrame) -> DataFrame:
     closed-form SQL oracle - no float DSP, no libm divergence.
     Same Arrow-batched shape as every codec pass: pixels/samples stay
     inside the executor batch, only (id, counters) leave."""
-    cols = [f.name for f in WAV_ENERGY_SCHEMA.fields]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        for pdf in it:
-            recs = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    recs.append((mid, None, None, None, None, None))
-                    continue
-                with wave.open(io.BytesIO(bytes(payload))) as w:
-                    nf = w.getnframes()
-                    raw = w.readframes(nf)
-                s = np.frombuffer(raw, dtype="<i2").astype(np.int64)
-                zc = int(((s[:-1] * s[1:]) < 0).sum()) if len(s) > 1 else 0
-                frames = np.arange(len(s)) // WAV_FRAME
-                n_frames = int(frames[-1]) + 1 if len(s) else 0
-                energy = s * s
-                fe = np.bincount(frames, weights=energy).astype(np.int64)
-                peak_idx = int(np.argmax(fe)) if n_frames else None
-                recs.append((mid, n_frames, zc, int(energy.sum()),
-                             peak_idx,
-                             int(fe[peak_idx]) if n_frames else None))
-            yield pd.DataFrame(recs, columns=cols)
-
-    return media.mapInPandas(batches, WAV_ENERGY_SCHEMA)
+    return _map_payloads(media, WAV_ENERGY_SCHEMA,
+                         lambda p: [_wav_energy(p)])
 
 
 # ---------------------------------------------------------------------
@@ -1227,48 +1100,11 @@ MOTION_SCHEMA = T.StructType([
 ])
 
 
-def decode_avi_pixel_frames(payload: bytes) -> tuple:
-    """Parse an AVI payload into (width, height, [np.uint8 frame
-    arrays, row-major top-down, padding stripped]). Shares the RIFF
-    walk contract of decode_avi_frames but returns pixels, which the
-    motion kernel consumes pairwise inside the executor."""
-    if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
-        raise ValueError("not an AVI payload (missing RIFF/AVI magic)")
-    w = h = None
-    movi_body = None
-
-    def walk(data):
-        nonlocal w, h, movi_body
-        pos = 0
-        while pos + 8 <= len(data):
-            fourcc = data[pos:pos + 4]
-            (size,) = struct.unpack_from("<I", data, pos + 4)
-            body = data[pos + 8:pos + 8 + size]
-            if fourcc == b"LIST":
-                if body[:4] == b"movi":
-                    movi_body = body[4:]
-                else:
-                    walk(body[4:])
-            elif fourcc == b"avih":
-                vals = struct.unpack_from("<14I", body, 0)
-                w, h = vals[8], vals[9]
-            pos += 8 + size + (size % 2)
-
-    walk(payload[12:])
-    if None in (w, h) or movi_body is None:
-        raise ValueError("AVI missing avih/movi")
-    row_stride = (w + 3) & ~3
-    frames, pos = [], 0
-    while pos + 8 <= len(movi_body):
-        fourcc = movi_body[pos:pos + 4]
-        (size,) = struct.unpack_from("<I", movi_body, pos + 4)
-        data = movi_body[pos + 8:pos + 8 + size]
-        pos += 8 + size + (size % 2)
-        if fourcc != b"00db":
-            continue
-        arr = np.frombuffer(data, dtype=np.uint8).reshape(h, row_stride)
-        frames.append(arr[::-1, :w])          # bottom-up -> top-down
-    return w, h, frames
+def _motion(payload: bytes) -> list[tuple]:
+    w, h, frames = _avi_frames(payload)
+    d = np.abs(np.diff(frames.astype(np.int16), axis=0))
+    return [(f + 1, w, h, int(x.sum(dtype=np.int64)), int(np.count_nonzero(x)))
+            for f, x in enumerate(d)]
 
 
 def motion_energy(media: DataFrame) -> DataFrame:
@@ -1276,23 +1112,7 @@ def motion_energy(media: DataFrame) -> DataFrame:
     frame pair (frame_idx = the LATER frame), carrying the integer SAD
     and changed-pixel count. mapInPandas keeps whole payloads and all
     pixel math on the executor; only O(frames) scalar rows leave."""
-    cols = [f.name for f in MOTION_SCHEMA.fields]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                w, h, frames = decode_avi_pixel_frames(bytes(payload))
-                for f in range(1, len(frames)):
-                    d = np.abs(frames[f].astype(np.int16)
-                               - frames[f - 1].astype(np.int16))
-                    recs.append((mid, f, w, h,
-                                 int(d.sum()), int((d > 0).sum())))
-            yield pd.DataFrame(recs, columns=cols)
-
-    return media.mapInPandas(batches, MOTION_SCHEMA)
+    return _map_payloads(media, MOTION_SCHEMA, _motion, skip_null=True)
 
 
 AHASH_SIG_SCHEMA = T.StructType([
@@ -1304,29 +1124,14 @@ AHASH_SIG_SCHEMA = T.StructType([
 ])
 
 
-def _bmp_luma_rows(payload: bytes) -> tuple:
-    """Decode a 24-bpp BMP into per-pixel luminance (b+g+r) rows in
-    TOP-DOWN synthesis order (the encoder writes rows bottom-up, so the
-    walk inverts the row index). Returns (w, h, [[lum per x] per y])."""
-    magic, _fsize, _r1, _r2, off = struct.unpack_from("<2sIHHI", payload, 0)
-    if magic != b"BM":
-        raise ValueError("not a BMP payload")
-    _hsz, w, h, _planes, bpp, comp = struct.unpack_from(
-        "<IiiHHI", payload, 14)
-    if bpp != 24 or comp != 0:
-        raise ValueError(f"unsupported BMP variant bpp={bpp} comp={comp}")
-    height = abs(h)
-    row_size = (w * 3 + 3) & ~3
-    rows = []
-    for y in range(height):
-        # bottom-up storage (positive height): synthesis row y sits at
-        # stored row height-1-y; top-down (negative height) stores y at y
-        stored = height - 1 - y if h > 0 else y
-        base = off + stored * row_size
-        px = payload[base:base + w * 3]
-        rows.append([px[3 * x] + px[3 * x + 1] + px[3 * x + 2]
-                     for x in range(w)])
-    return w, height, rows
+def _ahash_rows(payload: bytes) -> list[tuple]:
+    lum = _bmp_pixels(payload).astype(np.int64).sum(axis=2)
+    h, w = lum.shape
+    bits = lum * (w * h) > lum.sum()
+    # Python ints, so a bit past 62 fails at the LongType boundary
+    # instead of wrapping
+    return [(w, h, y, sum(1 << x for x in np.flatnonzero(row).tolist()))
+            for y, row in enumerate(bits)]
 
 
 def ahash_row_signatures(media: DataFrame) -> DataFrame:
@@ -1340,63 +1145,31 @@ def ahash_row_signatures(media: DataFrame) -> DataFrame:
     for Hamming space - candidate pairs come from an equi-join, never
     an all-pairs product. Only O(height) scalar rows leave the executor
     per image; payload bytes never shuffle."""
-    cols = [f.name for f in AHASH_SIG_SCHEMA.fields]
+    return _map_payloads(media, AHASH_SIG_SCHEMA, _ahash_rows,
+                         skip_null=True)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                w, h, rows = _bmp_luma_rows(bytes(payload))
-                np_ = w * h
-                total = sum(lum for r in rows for lum in r)
-                for y, r in enumerate(rows):
-                    sig = 0
-                    for x, lum in enumerate(r):
-                        if lum * np_ > total:
-                            sig |= 1 << x
-                    recs.append((mid, w, h, y, sig))
-            yield pd.DataFrame(recs, columns=cols)
 
-    return media.mapInPandas(batches, AHASH_SIG_SCHEMA)
+def _decimated_wav(payload: bytes) -> bytes:
+    rate, nch, s = _pcm16(payload)
+    if nch != 1:
+        raise ValueError("decimation expects mono PCM16")
+    n = len(s) // 2 * 2
+    return _wav_bytes(max(rate // 2, 1), (s[0:n:2] + s[1:n:2]) // 2)
 
 
 def decimate_wav_half(media: DataFrame) -> DataFrame:
     """Audio RESAMPLE leg (the resize twin for the audio modality):
     decode each PCM16 RIFF/WAVE payload, downsample 2:1 with the exact
-    integer box filter floor((s_2t + s_2t+1) / 2) (Python // floors
+    integer box filter floor((s_2t + s_2t+1) / 2) (numpy // floors
     toward -inf, matching DuckDB's // on the signed samples; a trailing
     odd sample drops), and RE-ENCODE a genuine WAV at half the frame
     rate — payload-in/payload-out, so any downstream decode accepts the
-    result. Bit-deterministic because the filter is integer-only."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_payload = []
-            for payload in pdf["payload"]:
-                if payload is None:
-                    out_payload.append(None)
-                    continue
-                with wave.open(io.BytesIO(bytes(payload))) as w:
-                    sr = w.getframerate()
-                    nf = w.getnframes()
-                    raw = w.readframes(nf)
-                s = struct.unpack(f"<{nf}h", raw)
-                half = [(s[2 * t] + s[2 * t + 1]) // 2
-                        for t in range(nf // 2)]
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(1)
-                    w.setsampwidth(2)
-                    w.setframerate(max(sr // 2, 1))
-                    w.writeframes(struct.pack(f"<{len(half)}h", *half))
-                out_payload.append(buf.getvalue())
-            pdf = pdf.copy()
-            pdf["payload"] = out_payload
-            yield pdf
-
-    return media.mapInPandas(batches, media.schema)
+    result. Every other column passes through, as does a null payload.
+    Bit-deterministic because the filter is integer-only."""
+    return _map_payloads(media, media.schema,
+                         lambda p: [(_decimated_wav(p),)],
+                         keys=tuple(c for c in media.columns
+                                    if c != "payload"))
 
 
 # ---------------------------------------------------------------------
@@ -1421,49 +1194,29 @@ WHT_BAND_SCHEMA = T.StructType([
 ])
 
 
+def _wht_bands(payload: bytes) -> list[tuple]:
+    s = _pcm16(payload)[2]
+    if len(s) < WHT_N:
+        return [(None, None)]
+    c, h = s[:WHT_N], 1
+    while h < WHT_N:             # integer FWHT butterfly, one stage per pass
+        pairs = c.reshape(-1, 2, h)
+        c = np.stack([pairs[:, 0] + pairs[:, 1], pairs[:, 0] - pairs[:, 1]],
+                     axis=1).reshape(-1)
+        h *= 2
+    return list(enumerate((c * c).reshape(WHT_BANDS, -1).sum(axis=1).tolist()))
+
+
 def wht_band_energies(media: DataFrame) -> DataFrame:
     """Per clip: decode PCM16, take the first WHT_N samples, run the
-    in-place integer Walsh-Hadamard butterfly (natural/Hadamard
-    coefficient order), and emit per-band energy = sum of coeff^2 over
+    integer Walsh-Hadamard butterfly (natural/Hadamard coefficient
+    order), and emit per-band energy = sum of coeff^2 over
     WHT_N/WHT_BANDS consecutive coefficients. |coeff| <= 64*32768 <
     2^21 so coeff^2 sums stay far inside int64. Same Arrow-batched
     shape as every codec pass: samples never leave the executor, only
     (id, band, energy) rows do. Clips shorter than WHT_N are skipped
     (None bands) - the synthesizer always emits >= 64 frames."""
-    cols = [f.name for f in WHT_BAND_SCHEMA.fields]
-    step = WHT_N // WHT_BANDS
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    recs.append((mid, None, None))
-                    continue
-                with wave.open(io.BytesIO(bytes(payload))) as w:
-                    nf = w.getnframes()
-                    raw = w.readframes(nf)
-                s = np.frombuffer(raw, dtype="<i2").astype(np.int64)
-                if len(s) < WHT_N:
-                    recs.append((mid, None, None))
-                    continue
-                c = s[:WHT_N].copy()
-                h = 1
-                while h < WHT_N:           # integer FWHT butterfly
-                    for base in range(0, WHT_N, h * 2):
-                        a = c[base:base + h].copy()
-                        b = c[base + h:base + 2 * h].copy()
-                        c[base:base + h] = a + b
-                        c[base + h:base + 2 * h] = a - b
-                    h *= 2
-                e = c * c
-                for band in range(WHT_BANDS):
-                    recs.append((mid, band,
-                                 int(e[band * step:(band + 1) * step]
-                                     .sum())))
-            yield pd.DataFrame(recs, columns=cols)
-
-    return media.mapInPandas(batches, WHT_BAND_SCHEMA)
+    return _map_payloads(media, WHT_BAND_SCHEMA, _wht_bands)
 
 
 # ---------------------------------------------------------------------
@@ -1480,6 +1233,17 @@ WAV_VAD_SCHEMA = T.StructType([
 ])
 
 
+def _vad(payload: bytes, threshold: int) -> tuple:
+    act = _frame_energy(_pcm16(payload)[2]) > threshold
+    n, active = len(act), int(act.sum())
+    # maximal runs of True: edges of the 0-padded gate pair up as
+    # (start, end) of each run
+    edges = np.flatnonzero(np.diff(np.concatenate(([0], act, [0]))))
+    runs = edges[1::2] - edges[0::2]
+    return (n, active, len(runs), int(runs.max(initial=0)),
+            active * 1000 // n if n else None)
+
+
 def wav_vad_segments(media: DataFrame, threshold: int) -> DataFrame:
     """Energy-gated voice-activity segmentation: decode PCM16, gate each
     WAV_FRAME-sample frame on exact integer energy > ``threshold``, and
@@ -1488,41 +1252,8 @@ def wav_vad_segments(media: DataFrame, threshold: int) -> DataFrame:
     floor-permille. Pure integer (the gate is a literal), so the
     segmentation has a closed-form SQL oracle over the synthesis
     formula. Same Arrow-batched shape as the other codec passes."""
-    cols = [f.name for f in WAV_VAD_SCHEMA.fields]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    recs.append((mid, None, None, None, None, None))
-                    continue
-                with wave.open(io.BytesIO(bytes(payload))) as w:
-                    nf = w.getnframes()
-                    raw = w.readframes(nf)
-                s = np.frombuffer(raw, dtype="<i2").astype(np.int64)
-                frames = np.arange(len(s)) // WAV_FRAME
-                n_frames = int(frames[-1]) + 1 if len(s) else 0
-                fe = np.bincount(frames, weights=s * s).astype(np.int64)
-                act = fe > threshold
-                active = int(act.sum())
-                # maximal runs of True: count rising edges; longest run
-                # via cumulative reset (pure integer)
-                n_seg, longest, cur = 0, 0, 0
-                for a in act:
-                    if a:
-                        cur += 1
-                        if cur == 1:
-                            n_seg += 1
-                        longest = max(longest, cur)
-                    else:
-                        cur = 0
-                recs.append((mid, n_frames, active, n_seg, longest,
-                             active * 1000 // n_frames if n_frames
-                             else None))
-            yield pd.DataFrame(recs, columns=cols)
-
-    return media.mapInPandas(batches, WAV_VAD_SCHEMA)
+    return _map_payloads(media, WAV_VAD_SCHEMA,
+                         lambda p: [_vad(p, threshold)])
 
 
 # ---------------------------------------------------------------------
@@ -1702,8 +1433,9 @@ def _decode_gif(payload: bytes) -> tuple:
     idx = _lzw_decode_gif(bytes(comp), mcs)
     if len(idx) != w * h:
         raise ValueError(f"decoded {len(idx)} px, expected {w * h}")
-    lum = [pal[3 * i] for i in idx]
-    return (w, h, w * h, sum(lum), max(lum) if lum else None)
+    lum = np.frombuffer(pal, np.uint8)[0::3][np.frombuffer(idx, np.uint8)]
+    return (w, h, w * h, int(lum.sum(dtype=np.int64)),
+            int(lum.max()) if lum.size else None)
 
 
 def synthesize_gif_media(spark, n: int = 48) -> DataFrame:
@@ -1723,20 +1455,8 @@ def decode_gif_features(media: DataFrame) -> DataFrame:
     """REAL GIF decode in Arrow batches: container parse + variable-
     width LZW inflate per payload; only (id, dims, luminance stats)
     leave the executor."""
-    cols = [f.name for f in GIF_FEATURE_SCHEMA.fields]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    recs.append((mid, None, None, None, None, None))
-                    continue
-                w, h, npx, sl, pk = _decode_gif(bytes(payload))
-                recs.append((mid, w, h, npx, sl, pk))
-            yield pd.DataFrame(recs, columns=cols)
-
-    return media.mapInPandas(batches, GIF_FEATURE_SCHEMA)
+    return _map_payloads(media, GIF_FEATURE_SCHEMA,
+                         lambda p: [_decode_gif(p)])
 
 
 WAV_CLIP_SCHEMA = T.StructType([
@@ -1747,28 +1467,16 @@ WAV_CLIP_SCHEMA = T.StructType([
 ])
 
 
+def _clipping(payload: bytes, lo: int, hi: int) -> tuple:
+    s = _pcm16(payload)[2]
+    n, clipped = len(s), int(((s <= lo) | (s >= hi)).sum())
+    return (n, clipped, clipped * 1000 // n if n else None)
+
+
 def wav_clipping_stats(media: DataFrame, lo: int, hi: int) -> DataFrame:
     """Clipping audit: decode PCM16 and count samples at or beyond the
     [lo, hi] rails — exact integer comparisons, closed-form oracle over
     the synthesis formula. Same Arrow-batched shape as the other codec
     passes."""
-    cols = [f.name for f in WAV_CLIP_SCHEMA.fields]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    recs.append((mid, None, None, None))
-                    continue
-                with wave.open(io.BytesIO(bytes(payload))) as w:
-                    nf = w.getnframes()
-                    raw = w.readframes(nf)
-                s = np.frombuffer(raw, dtype="<i2").astype(np.int64)
-                n = len(s)
-                clipped = int(((s <= lo) | (s >= hi)).sum())
-                recs.append((mid, n, clipped,
-                             clipped * 1000 // n if n else None))
-            yield pd.DataFrame(recs, columns=cols)
-
-    return media.mapInPandas(batches, WAV_CLIP_SCHEMA)
+    return _map_payloads(media, WAV_CLIP_SCHEMA,
+                         lambda p: [_clipping(p, lo, hi)])

@@ -3,16 +3,17 @@ must be identities (BMP/PNG/AVI/WAV are lossless) or bounded (JPEG is
 quantized) on ARBITRARY pixel/sample content, not just the oracle
 corpora's closed-form synthesis. Pure Python - no Spark session."""
 
+import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from python_etl_rest_api_spark.operators.multimodal import (
-    _decode_bmp,
-    _decode_bmp_pixels,
-    _decode_png,
+    _bmp_pixels,
     _encode_bmp,
     _encode_png,
+    _png_pixels,
     _resize_half_box,
+    _rgb_features,
     decode_avi_frames,
     decode_jpeg_gray,
     encode_avi_gray,
@@ -29,19 +30,20 @@ def _pix(seed):
     return f
 
 
+def _grid(w, h, p):
+    """Reference image as nested lists: grid[y][x] = 3 channel values."""
+    return [[[p(x, y), (p(x, y) + 5) % 256, (p(x, y) + 9) % 256]
+             for x in range(w)] for y in range(h)]
+
+
 @settings(max_examples=30, deadline=None)
 @given(dims, seeds)
 def test_bmp_roundtrip_identity(wh, seed):
     w, h = wh
-    p = _pix(seed)
-    payload = _encode_bmp(
-        w, h, lambda x, y: (p(x, y), (p(x, y) + 5) % 256,
-                            (p(x, y) + 9) % 256))
-    dw, dh, grid = _decode_bmp_pixels(payload)
-    assert (dw, dh) == (w, h)
-    assert all(grid[y][x] == (p(x, y), (p(x, y) + 5) % 256,
-                              (p(x, y) + 9) % 256)
-               for x in range(w) for y in range(h))
+    grid = _grid(w, h, _pix(seed))
+    px = _bmp_pixels(_encode_bmp(np.array(grid, np.uint8)))
+    assert px.shape == (h, w, 3)
+    assert px.tolist() == grid
 
 
 @settings(max_examples=30, deadline=None)
@@ -49,11 +51,9 @@ def test_bmp_roundtrip_identity(wh, seed):
 def test_png_roundtrip_identity(wh, seed):
     w, h = wh
     p = _pix(seed)
-    payload = _encode_png(
-        w, h, lambda x, y: (p(x, y), (p(x, y) + 5) % 256,
-                            (p(x, y) + 9) % 256))
-    out = _decode_png(payload)
-    # decode returns (w, h, n_pixels, sum_r, sum_g, sum_b, peak)
+    payload = _encode_png(np.array(_grid(w, h, p), np.uint8))
+    out = _rgb_features(_png_pixels(payload))
+    # features are (w, h, n_pixels, sum_r, sum_g, sum_b, peak)
     assert out[0] == w and out[1] == h
     assert out[3] == sum(p(x, y) for x in range(w) for y in range(h))
 
@@ -109,11 +109,10 @@ def test_avi_roundtrip_identity(w, h, nf, seed):
 @given(dims, seeds)
 def test_resize_is_exact_box_mean(wh, seed):
     w, h = wh
-    p = _pix(seed)
-    grid = [[(p(x, y), (p(x, y) + 5) % 256, (p(x, y) + 9) % 256)
-             for x in range(w)] for y in range(h)]
-    ow, oh, out = _resize_half_box(w, h, grid)
-    assert (ow, oh) == (w // 2, h // 2)
+    grid = _grid(w, h, _pix(seed))
+    out = _resize_half_box(np.array(grid, np.uint8))
+    ow, oh = w // 2, h // 2
+    assert out.shape == (oh, ow, 3)
     for oy in range(oh):
         for ox in range(ow):
             for c in range(3):

@@ -168,10 +168,10 @@ def test_png_decode_real_roundtrip(spark):
 def test_png_decoder_rejects_non_png(spark):
     import pytest as _pytest
 
-    from python_etl_rest_api_spark.operators.multimodal import _decode_png
+    from python_etl_rest_api_spark.operators.multimodal import _png_pixels
 
     with _pytest.raises(ValueError, match="not a PNG"):
-        _decode_png(b"BM" + bytes(64))
+        _png_pixels(b"BM" + bytes(64))
 
 
 def test_jpeg_decode_real_roundtrip(spark):
@@ -364,3 +364,83 @@ def test_wav_energy_features_exact(spark):
         assert r["total_energy"] == sum(v * v for v in s)
         assert (r["peak_frame_idx"], r["peak_frame_energy"]) == (
             peak_idx, fe[peak_idx])
+
+
+# sha256 over (8-byte little-endian length + bytes) of each payload of
+# synthesize_<kind>_media(spark, n=48), in media_id order: the oracle
+# corpora must not move when the encoders are rewritten.
+SYNTH_PAYLOAD_SHA256 = {
+    "bmp": "3303b249d01607635b0b8247a9505baa393fd6f592411ab75ff022eba6164cf8",
+    "png": "54dbf08d369d5e6c9c8a18748f14e28b5ddb3f9af6d7abb4b598c43fd6ec5f24",
+    "jpeg": "2b6fa793cd49825204d050865b62b00ff4577b74940ce66f937f3e8a7194e1c9",
+    "gif": "17cf5516bf60e4ff01eb16ec40faf751ddcfbd562feb49aa7b930485739a4b73",
+    "avi": "37c02a9dbf064459a6721ce719022fba593fc5922001a4bf4a8af2c7d85387f9",
+    "wav": "b8c85c215c71d54e2db31ede2f5a8d24219bd87a502dcbb07d8c24c17dbcb950",
+}
+
+
+@pytest.mark.parametrize("kind", sorted(SYNTH_PAYLOAD_SHA256))
+def test_synthesized_payloads_pinned(spark, kind):
+    import hashlib
+
+    from python_etl_rest_api_spark.operators import multimodal as mm
+
+    media = getattr(mm, f"synthesize_{kind}_media")(spark, n=48)
+    h = hashlib.sha256()
+    for r in media.orderBy("media_id").select("payload").collect():
+        p = bytes(r["payload"])
+        h.update(len(p).to_bytes(8, "little") + p)
+    assert h.hexdigest() == SYNTH_PAYLOAD_SHA256[kind]
+
+
+def _null_cases():
+    from python_etl_rest_api_spark.operators import multimodal as mm
+
+    def feature(n):                     # 1->1: one all-null feature row
+        return [(7,) + (None,) * n]
+
+    return [
+        pytest.param(mm.extract_features, [(7, "audio", None, None)],
+                     id="extract_features"),
+        pytest.param(mm.decode_wav_features, feature(6),
+                     id="decode_wav_features"),
+        pytest.param(mm.decode_bmp_features, feature(7),
+                     id="decode_bmp_features"),
+        pytest.param(mm.decode_png_features, feature(7),
+                     id="decode_png_features"),
+        pytest.param(mm.decode_jpeg_features, feature(6),
+                     id="decode_jpeg_features"),
+        pytest.param(mm.wav_energy_features, feature(5),
+                     id="wav_energy_features"),
+        pytest.param(mm.wht_band_energies, feature(2),
+                     id="wht_band_energies"),
+        pytest.param(lambda m: mm.wav_vad_segments(m, 100), feature(5),
+                     id="wav_vad_segments"),
+        pytest.param(mm.decode_gif_features, feature(5),
+                     id="decode_gif_features"),
+        pytest.param(lambda m: mm.wav_clipping_stats(m, -100, 100),
+                     feature(3), id="wav_clipping_stats"),
+        # 1->N: a null payload has no frames / pairs / scanlines
+        pytest.param(mm.sample_avi_frames, [], id="sample_avi_frames"),
+        pytest.param(mm.motion_energy, [], id="motion_energy"),
+        pytest.param(mm.ahash_row_signatures, [],
+                     id="ahash_row_signatures"),
+        # payload rewriters: the null payload passes through
+        pytest.param(mm.resize_bmp_half,
+                     [(7, "audio", "audio/wav", None, None)],
+                     id="resize_bmp_half"),
+        pytest.param(mm.decimate_wav_half,
+                     [(7, "audio", "audio/wav", None, (1, 2, 3))],
+                     id="decimate_wav_half"),
+    ]
+
+
+@pytest.mark.parametrize("op, expected", _null_cases())
+def test_null_payload_contract(spark, op, expected):
+    """Every per-payload operator keeps its meaning for a null payload:
+    a null feature row, no row, or the null passed through."""
+    from python_etl_rest_api_spark.operators.multimodal import MEDIA_SCHEMA
+
+    media = spark.createDataFrame(
+        [(7, "audio", "audio/wav", None, (1, 2, 3))], MEDIA_SCHEMA)
+    assert [tuple(r) for r in op(media).collect()] == expected
