@@ -16,7 +16,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from python_etl_rest_api_spark import registry
-from python_etl_rest_api_spark.catalog import h1_daily_totals
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
@@ -25,8 +24,10 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: daily_company_totals
     (reference sql/02_view.sql:4-11) mapped onto orders x customer -
     broadcast dim join, one shuffle on the group keys, decimal-exact sums.
+    Runs through the registry, which applies the session conventions to
+    the driver's session first.
     """
-    return h1_daily_totals(spark, SMOKE_SF_DIR)
+    return registry.QUERIES["h1_daily_totals"](spark, SMOKE_SF_DIR)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -21,9 +21,10 @@ from pyspark.sql import functions as F
 from .functions.cleaning import money
 from .operators import analytics
 from .session import tune
+from .sources.tables import with_event_ts
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-# Janitor-free originals for the REST API: its endpoint drains the
+# Janitor-free callables for the REST API: its endpoint drains the
 # caches a request registered in its own finally (per-request scope),
 # so the entry-boundary janitor below would be redundant there. The
 # opcache registry itself is threading.local, so even interleaved
@@ -41,31 +42,39 @@ _ACTIVE = __import__("threading").local()
 
 
 def query(name: str, oracle: str | None = None):
-    """Register a catalog entry. The REGISTRY callable (what the driver,
-    bench, and sweeps invoke) is wrapped with the opcache janitor:
-    starting a DIFFERENT entry releases every operator-internal cache
-    the previous entry registered, so long sweep/bench sessions never
-    accumulate resident caches (measured 100x: prior entries' lingering
-    caches taxed dedup_minhash_lsh 12.7 -> 15.1 s). Consecutive
-    invocations of the SAME entry keep their caches (bench warm-up +
-    timed reps rely on that). The DECORATED SYMBOL stays the original
-    function, so one entry composing another in Python never triggers a
-    mid-entry release; unpersist never breaks lineage, so even a stale
-    lazy frame from a prior entry only recomputes, never crashes."""
+    """Register a catalog entry. BOTH registry callables (QUERIES and
+    QUERIES_RAW - what the driver, bench, sweeps and REST API invoke)
+    first apply the session conventions with tune(): the caller's
+    session may be one get_spark never built, and this is the one place
+    a query applies RUNTIME_CONF. The QUERIES callable is also wrapped
+    with the opcache janitor: starting a DIFFERENT entry releases every
+    operator-internal cache the previous entry registered, so long
+    sweep/bench sessions never accumulate resident caches (measured
+    100x: prior entries' lingering caches taxed dedup_minhash_lsh 12.7
+    -> 15.1 s). Consecutive invocations of the SAME entry keep their
+    caches (bench warm-up + timed reps rely on that). The DECORATED
+    SYMBOL stays the original function, so one entry composing another
+    in Python never re-applies the conventions or triggers a mid-entry
+    release; unpersist never breaks lineage, so even a stale lazy frame
+    from a prior entry only recomputes, never crashes."""
     def deco(fn):
         import functools
 
         from . import opcache
 
         @functools.wraps(fn)
+        def raw(session, sf_dir):
+            return fn(tune(session), sf_dir)
+
+        @functools.wraps(fn)
         def wrapped(spark, sf_dir):
             if getattr(_ACTIVE, "entry", None) != name:
                 opcache.release_all()
                 _ACTIVE.entry = name
-            return fn(spark, sf_dir)
+            return raw(spark, sf_dir)
 
         QUERIES[name] = wrapped
-        QUERIES_RAW[name] = fn
+        QUERIES_RAW[name] = raw
         if oracle is not None:
             ORACLES[name] = oracle
         return fn
@@ -73,33 +82,12 @@ def query(name: str, oracle: str | None = None):
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark)
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Load events.parquet with a timestamp-typed ``ts`` whatever the file
-    encodes. Dispatch on the LOADED dtype: TIMESTAMP(MICROS) (the current
-    testdata) reads natively as a timestamp type and passes through;
-    TIMESTAMP(NANOS) sources load as long (``nanosAsLong``) and convert
-    with exact integer division -- long->double would lose sub-us
-    precision at 2024 epoch magnitudes, and DuckDB's ns->us handling
-    truncates identically."""
-    from pyspark.sql import types as T
-    tune(spark)
-    # compat: lets a TIMESTAMP(NANOS) source load (as long) instead of
-    # failing the scan; a no-op for the micros encoding the testdata uses.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
-    dt = df.schema["ts"].dataType
-    if isinstance(dt, T.LongType):
-        df = df.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(dt, T.TimestampNTZType):
-        # normalize to TIMESTAMP (session tz is pinned UTC in tune(), so
-        # the instant is unchanged); unix_micros()/window() require it.
-        df = df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-    return df
+    """events.parquet with a TIMESTAMP ``ts`` (see with_event_ts)."""
+    return with_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
 
 
 # =====================================================================
@@ -180,7 +168,6 @@ def h5_null_ratio(spark, sf_dir):
 """)
 def h6_sum_column(spark, sf_dir):
     """H6/F6: sum of the 1..100 set (reference api/first100.py:47)."""
-    tune(spark)
     return spark.range(1, 101).agg(F.sum("id").alias("total"))
 
 
@@ -454,7 +441,6 @@ def i2_fk_violations(spark, sf_dir):
 def i3_set_difference(spark, sf_dir):
     """I3: 1..100 minus extracted, as a left-anti join (reference
     api/first100.py:27-29 set semantics, distributed form)."""
-    tune(spark)
     full = spark.range(1, 101).withColumnRenamed("id", "n")
     extracted = spark.createDataFrame([(7,), (42,), (57,)], "n long")
     return full.join(extracted, "n", "left_anti")
@@ -467,7 +453,6 @@ def i3_set_difference(spark, sf_dir):
 def f6_gauss_missing(spark, sf_dir):
     """F6/L2: Gauss closed-form missing number (reference api/first100.py:40-48):
     n(n+1)/2 minus the sum of remaining."""
-    tune(spark)
     remaining = spark.range(1, 101).filter(F.col("id") != 57)
     return remaining.agg((F.lit(5050) - F.sum("id")).alias("missing"))
 

@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 from .catalog import query
 from .operators.clean import clean_pipeline
 from .schemas import CHARGES_RAW_SCHEMA
-from .session import tune
 
 # Spark-side mirror of the oracle's try_strptime coalesce list (the
 # engine's lenient multi-format mode; golden replication uses the strict
@@ -134,7 +133,6 @@ def etl_clean_pipeline(spark, sf_dir):
     """The full clean tier (reference etl/03_transform_and_load.py:33-94):
     every coercion, guard, split and the order-dependent imputation,
     checked value-for-value against the SQL oracle."""
-    tune(spark)
     raw = _dirty_df(spark)
     clean, _ = clean_pipeline(raw, order_col="rid", timestamp_formats=_ETL_FORMATS)
     return clean
@@ -154,7 +152,6 @@ def etl_clean_pipeline(spark, sf_dir):
 def etl_critical_quarantine(spark, sf_dir):
     """The quarantine tier with ordered reason codes (reference
     etl/03_transform_and_load.py:72-83)."""
-    tune(spark)
     raw = _dirty_df(spark)
     _, critical = clean_pipeline(raw, order_col="rid", timestamp_formats=_ETL_FORMATS)
     return critical
@@ -184,7 +181,6 @@ def etl_dim_first_seen(spark, sf_dir):
     per PK in file order (reference etl/03_transform_and_load.py:113,125-131;
     the 5-candidates -> 3-PKs order-dependence from SURVEY B2)."""
     from pyspark.sql import Window
-    tune(spark)
     raw = _dirty_df(spark)
     clean, _ = clean_pipeline(raw, order_col="rid", keep_order_col=True,
                               timestamp_formats=_ETL_FORMATS)
@@ -209,7 +205,6 @@ def etl_tier_counts(spark, sf_dir):
     over the flagged frame (reference etl/03_transform_and_load.py:97-99;
     golden instance 10000/9986/14 asserted in tests/test_clean_golden.py)."""
     from .operators.clean import CRITICAL_FLAG, flag_critical, standardize
-    tune(spark)
     flagged = flag_critical(standardize(_dirty_df(spark), _ETL_FORMATS))
     return flagged.agg(
         F.count(F.lit(1)).alias("n_original"),
@@ -297,7 +292,6 @@ def etl_clean_scaled(spark, sf_dir):
     pipeline remains split_critical_materialized (parse once to
     parquet, impute over the parquet-backed clean tier - see
     clean.py)."""
-    tune(spark)
     raw = _scaled_raw_df(spark, sf_dir)
     clean, _ = clean_pipeline(raw, order_col="rid", timestamp_formats=_ETL_FORMATS)
     return clean
@@ -317,7 +311,6 @@ def etl_clean_scaled(spark, sf_dir):
 def etl_critical_scaled(spark, sf_dir):
     """Quarantine tier of the scaled pipeline (reason-code breakdown at
     volume)."""
-    tune(spark)
     raw = _scaled_raw_df(spark, sf_dir)
     _, critical = clean_pipeline(raw, order_col="rid", timestamp_formats=_ETL_FORMATS)
     return critical

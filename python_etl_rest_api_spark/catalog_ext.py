@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from .catalog import _events, _t, query
 from .functions import intmoney
 from .operators import dedup, similarity, text
-from .session import tune, widen_scan
+from .session import widen_scan
 
 # ---------------------------------------------------------------------
 # Dedup family
@@ -361,7 +361,6 @@ def pipeline_docs_curate(spark, sf_dir):
     value-hashes the final surviving set. At sf0.01: 500 docs -> 315
     survivors (lang/quality and near-dup stages all bite)."""
     from .operators.curate import curate_documents
-    tune(spark)
     return curate_documents(_t(spark, sf_dir, "documents"))
 
 
@@ -896,7 +895,6 @@ def multimodal_feature_extract(spark, sf_dir):
     BOTH engines (element_at cast here, feature[k] cast in the oracle) so
     the widening is bit-identical."""
     from .operators.multimodal import extract_features, synthesize_media
-    tune(spark)
     feat = extract_features(synthesize_media(spark, n=96))
     return feat.select(
         "media_id", "kind", "n_bytes",
@@ -918,7 +916,6 @@ def multimodal_media_stats(spark, sf_dir):
     payload column when the format allows). Payload sizes of the seeded
     table are closed-form (128 + i), so the stats are value-hash checked."""
     from .operators.multimodal import media_stats, synthesize_media
-    tune(spark)
     return media_stats(synthesize_media(spark, n=96))
 
 
@@ -946,7 +943,6 @@ def multimodal_wav_decode(spark, sf_dir):
     value-hashes a true encode->Spark->decode round trip, unlike the
     stubbed image path (multimodal_feature_extract)."""
     from .operators.multimodal import decode_wav_features, synthesize_wav_media
-    tune(spark)
     return decode_wav_features(synthesize_wav_media(spark, n=48))
 
 
@@ -979,7 +975,6 @@ def multimodal_bmp_decode(spark, sf_dir):
     oracle check value-hashes a true encode->Spark->decode image round
     trip."""
     from .operators.multimodal import decode_bmp_features, synthesize_bmp_media
-    tune(spark)
     return decode_bmp_features(synthesize_bmp_media(spark, n=48))
 
 
@@ -1014,7 +1009,6 @@ def multimodal_png_decode(spark, sf_dir):
     reproduces the decoded output exactly and the driver value-hashes a
     true encode->deflate->Spark->inflate->unfilter round trip."""
     from .operators.multimodal import decode_png_features, synthesize_png_media
-    tune(spark)
     return decode_png_features(synthesize_png_media(spark, n=48))
 
 
@@ -1052,7 +1046,6 @@ def multimodal_jpeg_decode(spark, sf_dir):
     lossy path is bounded in tests/test_multimodal.py."""
     from .operators.multimodal import (decode_jpeg_features,
                                        synthesize_jpeg_media)
-    tune(spark)
     return decode_jpeg_features(synthesize_jpeg_media(spark, n=48))
 
 
@@ -1102,7 +1095,6 @@ def multimodal_image_resize(spark, sf_dir):
     from .operators.multimodal import (decode_bmp_features,
                                        resize_bmp_half,
                                        synthesize_bmp_media)
-    tune(spark)
     return decode_bmp_features(
         resize_bmp_half(synthesize_bmp_media(spark, n=48)))
 
@@ -1144,7 +1136,6 @@ def multimodal_wav_energy(spark, sf_dir):
     batches; samples never leave the executor)."""
     from .operators.multimodal import (synthesize_wav_media,
                                        wav_energy_features)
-    tune(spark)
     return wav_energy_features(synthesize_wav_media(spark, n=48))
 
 
@@ -1182,7 +1173,6 @@ def multimodal_avi_frames(spark, sf_dir):
     (encode_avi_gray / _avi_frames / decode_avi_frames /
     sample_avi_frames)."""
     from .operators.multimodal import sample_avi_frames, synthesize_avi_media
-    tune(spark)
     return sample_avi_frames(synthesize_avi_media(spark, n=48), stride=2)
 
 
@@ -1871,7 +1861,6 @@ def pipeline_training_data(spark, sf_dir):
     composed, not reimplemented."""
     from .operators.curate import curate_documents
     from .operators.text import chunk_accounting_cols
-    tune(spark)
     docs = _t(spark, sf_dir, "documents")
     # localCheckpoint: the survivor set feeds BOTH the split branch and
     # the chunk branch; without materialization Spark recomputes the

@@ -37,7 +37,6 @@ from pyspark.sql import functions as F
 from .catalog import _events, _t, query
 from .operators import graph, similarity
 from .operators.twopass import ROW_COL, SUM_COL, global_prefix
-from .session import tune
 
 
 def _vmicros(c):
@@ -617,7 +616,6 @@ def layout_partition_pruning(spark, sf_dir):
 
     The aggregate values are exact (count + floor-micro sum), so the
     entry simultaneously proves the round trip loses nothing."""
-    tune(spark)
     ev = _events(spark, sf_dir).withColumn(
         "event_date", F.col("ts").cast("date"))
     out = tempfile.mkdtemp(prefix="part_prune_")
@@ -666,7 +664,6 @@ def source_parquet_mergeschema(spark, sf_dir):
 
     The per-call two-generation write is the honest demo cost; cents
     are exact floor-scaled integers."""
-    tune(spark)
     orders = _t(spark, sf_dir, "orders").filter(
         F.col("o_orderkey").isNotNull())
     cents = F.floor(F.col("o_totalprice").cast("double") * 100) \
@@ -793,7 +790,6 @@ def privacy_k_anonymity(spark, sf_dir):
     (not rows) shuffle. At 100 TB the class vocabulary is the QI
     cross-product, orders of magnitude below the row count.
     Reference N/A."""
-    tune(spark)
     cust = _t(spark, sf_dir, "customer")
     nat = _t(spark, sf_dir, "nation")
     qi = (cust.join(F.broadcast(nat),

@@ -566,8 +566,6 @@ def multimodal_video_motion(spark, sf_dir):
     grid. operators/multimodal.py (_avi_frames / motion_energy), same
     container/codec as multimodal_avi_frames."""
     from .operators.multimodal import motion_energy, synthesize_avi_media
-    from .session import tune
-    tune(spark)
     return motion_energy(synthesize_avi_media(spark, n=48))
 
 
@@ -873,8 +871,6 @@ def source_orc_roundtrip(spark, sf_dir):
     rewrite is cached per process (the honest one-time cost of the
     demo; a real lake already has the ORC files)."""
     import tempfile as _tf
-    from .session import tune
-    tune(spark)
     if sf_dir not in _ORC_CACHE:
         path = _tf.mkdtemp(prefix="orc_orders_")
         (_t(spark, sf_dir, "orders").write.mode("overwrite").orc(path))

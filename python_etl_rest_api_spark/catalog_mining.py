@@ -41,7 +41,6 @@ from pyspark.sql import functions as F
 
 from .catalog import _events, _t, query
 from .operators.twopass import ROW_COL, SUM_COL, global_prefix
-from .session import tune
 
 # Deterministic per-row event value in integer micro-units - identical
 # guard + flooring on both engines (the stats_permutation_test recipe).
@@ -525,7 +524,6 @@ def source_json_roundtrip(spark, sf_dir):
         (e.write.mode("overwrite")
          .option("timestampFormat", _TS_FMT).json(path))
         _JSON_WRITTEN.add(path)
-    tune(spark)
     schema = ("event_id bigint, ts timestamp, user_id bigint, "
               "event_type string, value double, props string")
     j = (spark.read.schema(schema)
@@ -570,7 +568,6 @@ def multimodal_wht_bands(spark, sf_dir):
     Parseval (sum c^2 = 64 * sum v^2) is asserted in tests."""
     from .operators.multimodal import (synthesize_wav_media,
                                        wht_band_energies)
-    tune(spark)
     return wht_band_energies(synthesize_wav_media(spark, n=48))
 
 
@@ -799,7 +796,6 @@ def embed_cosine_histogram(spark, sf_dir):
     (the order-pinned sequential fold, COVERAGE.md class 5), so the
     integer counts value-hash even though sims are floats."""
     from .operators.similarity import cosine, valid_vectors
-    tune(spark)
     emb = valid_vectors(_t(spark, sf_dir, "embeddings"))
     q = (emb.filter(F.col("vec_id") < 8)
          .select(F.col("vec_id").alias("qid"),
@@ -1188,7 +1184,6 @@ def multimodal_audio_vad(spark, sf_dir):
     recomputes segmentation in closed form from the synthesis formula.
     Everything is integer; the gate is a fixed literal on both sides."""
     from .operators.multimodal import synthesize_wav_media, wav_vad_segments
-    tune(spark)
     return wav_vad_segments(synthesize_wav_media(spark, n=48),
                             threshold=_VAD_THRESH)
 
@@ -1282,7 +1277,6 @@ def multimodal_gif_decode(spark, sf_dir):
     operators/multimodal.py (encode_gif_gray / decode_gif_features)."""
     from .operators.multimodal import (decode_gif_features,
                                        synthesize_gif_media)
-    tune(spark)
     return decode_gif_features(synthesize_gif_media(spark, n=48))
 
 
@@ -1415,7 +1409,6 @@ def dq_uniqueness_audit(spark, sf_dir):
     REAL dirt — lineitem does not enforce its composite key (1401
     duplicate pairs at sf0.001) — which is exactly what it exists to
     surface (pinned in tests)."""
-    tune(spark)
 
     def leg(tbl, label, key_expr):
         t = _t(spark, sf_dir, tbl)
@@ -1569,7 +1562,6 @@ def text_langid_confusion(spark, sf_dir):
     verbatim; the matrix is a (lang x predicted) aggregate joined to
     per-lang totals (broadcast — |langs| rows)."""
     from .operators import text as text_ops
-    tune(spark)
     d = _t(spark, sf_dir, "documents")
     pred = text_ops.language_id(d).select("doc_id", "predicted_lang")
     j = (d.filter(F.col("lang").isNotNull())
@@ -1614,7 +1606,6 @@ def _ann_recall_vs_nprobe(spark, sf_dir):
     entries\' own oracle texts per leg, with the probe rank bound
     rewritten per nprobe."""
     from .operators import similarity
-    tune(spark)
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
@@ -1706,7 +1697,6 @@ def embed_label_margin(spark, sf_dir):
     (vec_id < 200, the sim_cosine_near_dups cap); the production-scale
     path samples pairs per label instead."""
     from .operators.similarity import cosine
-    tune(spark)
     sub = (_t(spark, sf_dir, "embeddings")
            .filter((F.col("vec_id") < 200) & F.col("label").isNotNull()
                    & F.col("embedding").isNotNull()
@@ -1840,7 +1830,6 @@ def _dq_schema_contract(spark, sf_dir):
     footers/catalog). The family normalization is mirrored literally on
     the DuckDB side (DESCRIBE over the same parquet), so the audit
     itself is oracle-verified."""
-    tune(spark)
     actual = []
     for t in _CONTRACT_TABLES:
         for f in _t(spark, sf_dir, t).schema.fields:
@@ -1984,7 +1973,6 @@ def dedup_lsh_scurve(spark, sf_dir):
     fuzzier corpora. The all-pairs leg is the labeled bounded baseline
     (doc_id < 120); at scale the curve is estimated from banding
     candidates + a pair sample, exactly like dedup_minhash_recall."""
-    tune(spark)
     d = (_t(spark, sf_dir, "documents")
          .filter((F.col("doc_id") < 120) & F.col("text").isNotNull()))
     toks = d.select("doc_id", F.split("text", " ").alias("t"))
@@ -2190,7 +2178,6 @@ def dq_split_leakage(spark, sf_dir):
     content (duplicate texts then straddle the boundary and eval
     scores go fraudulent). One content-hash aggregate; all counts
     exact integers."""
-    tune(spark)
     d = (_t(spark, sf_dir, "documents")
          .filter(F.col("text").isNotNull())
          .select(F.md5("text").alias("content_hash")))
@@ -2246,7 +2233,6 @@ def sample_kfold_assign(spark, sf_dir):
     construction — with each fold's share and its deviation from the
     ideal n/5 in floor-permille, the balance audit run before any CV
     result is trusted. One hash-bucket aggregate and a 1-row total."""
-    tune(spark)
     d = (_t(spark, sf_dir, "documents")
          .filter(F.col("text").isNotNull()))
     fold = (F.conv(F.substring(
@@ -2334,7 +2320,6 @@ def embed_norm_histogram(spark, sf_dir):
     class 5: same fold order, correctly-rounded sqrt) — so the floored
     bucket counts value-hash. Zero-shuffle map + one tiny aggregate."""
     from .operators.similarity import l2_norm, valid_vectors
-    tune(spark)
     emb = valid_vectors(_t(spark, sf_dir, "embeddings"))
     bucket = (F.least(F.lit(19),
                       F.floor(l2_norm(F.col("embedding")) * 10.0))
@@ -2376,7 +2361,6 @@ def text_dup_family_spectrum(spark, sf_dir):
     regime; complements dedup_exact, which keeps, and
     dedup_ratio_by_source, which attributes). One 32-byte-hash
     aggregate — bodies never shuffle — then a 4-class rollup."""
-    tune(spark)
     fam = (_t(spark, sf_dir, "documents")
            .filter(F.col("text").isNotNull())
            .groupBy(F.md5("text").alias("h"))
@@ -2487,7 +2471,6 @@ def _register_source_quality_matrix():
         inherits that entry's verified cross-engine rule semantics
         rather than re-deriving them."""
         from .catalog_quality import text_gopher_rules
-        tune(spark)
         gate = text_gopher_rules(spark, sf_dir).select(
             "doc_id", "passes")
         d = (_t(spark, sf_dir, "documents")
@@ -2555,7 +2538,6 @@ def mix_token_budget_allocation(spark, sf_dir):
     aggregate; the remainder rank window runs over |sources| rows.
     Apportionment paradoxes (Alabama etc.) are inherent to Hamilton's
     method and fine here — the budget is a cap, not a seat count."""
-    tune(spark)
     s = (_t(spark, sf_dir, "documents")
          .filter(F.col("source").isNotNull() & F.col("text").isNotNull())
          .groupBy("source")
@@ -2758,7 +2740,6 @@ def text_vocab_coverage_curve(spark, sf_dir):
     coverage published in exact floor-permille. Complements
     text_zipf_topk (the head itself) with the cumulative-mass view."""
     from .operators.twopass import ROW_COL, global_prefix
-    tune(spark)
     d = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     c = (d.select(F.explode(F.split("text", " ")).alias("term"))
          .filter(F.col("term") != "")
@@ -2933,7 +2914,6 @@ def text_term_burstiness(spark, sf_dir):
     key on, published for the top-20 terms by cf (TakeOrdered head;
     the per-term aggregate is one partial+final pass with a
     count-distinct on doc_id)."""
-    tune(spark)
     d = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     tok = (d.select("doc_id",
                     F.explode(F.split("text", " ")).alias("term"))
@@ -3106,7 +3086,6 @@ def privacy_generalization_ladder(spark, sf_dir):
     generalization the release actually needs (the Mondrian/Incognito
     decision input; extends privacy_k_anonymity's single-level audit).
     Three independent aggregates over one scan's projection."""
-    tune(spark)
     c = _t(spark, sf_dir, "customer")
     band = (F.when(F.col("c_acctbal").isNull(), "unknown")
             .when(F.col("c_acctbal") < 0, "neg")
@@ -3219,7 +3198,6 @@ def stats_mann_kendall(spark, sf_dir):
     DAYS, not rows: 100 TB of orders still collapses to a few thousand
     daily aggregates before the self-join (one broadcast of the tiny
     day series)."""
-    tune(spark)
     d = (_t(spark, sf_dir, "orders")
          .groupBy(F.col("o_orderdate").cast("date").alias("day"))
          .agg(F.count(F.lit(1)).alias("c")))
@@ -3272,7 +3250,6 @@ def docs_boilerplate_prefixes(spark, sf_dir):
     Complements text_dup_family_spectrum (whole-doc dupes) and
     dedup_repeated_spans (within-doc repeats) with the cross-doc
     PARTIAL-overlap case."""
-    tune(spark)
     d = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     t = d.select("doc_id", F.split("text", " ").alias("toks"))
     p = (t.filter(F.size("toks") >= 8)
@@ -3315,7 +3292,6 @@ def multimodal_audio_clipping(spark, sf_dir):
     wav_clipping_stats); the closed-form oracle counts the same rails
     from the synthesis formula. Ratio in floor-permille."""
     from .operators.multimodal import synthesize_wav_media, wav_clipping_stats
-    tune(spark)
     return wav_clipping_stats(synthesize_wav_media(spark, n=48),
                               lo=-32768, hi=32512)
 
@@ -3417,7 +3393,6 @@ def _sketch_cms_width_curve(spark, sf_dir):
     in width (wider rows -> fewer collisions; pinned in tests); every
     estimate is the md5-deterministic CM point query of the verified
     sketch_count_min entry, re-parameterized per leg."""
-    tune(spark)
     d = _t(spark, sf_dir, "documents")
     tok = d.select(F.explode(F.split("text", " ")).alias("tok"))
     exact = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))

@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 
 from .catalog import _events, _t, query
 from .operators.twopass import ROW_COL, global_prefix
-from .session import tune
 
 
 def _h32(prefix: str, col):
@@ -91,7 +90,6 @@ def privacy_l_diversity(spark, sf_dir):
     Plan: one map-side-combined (QI, band) aggregate, then a class-level
     rollup — classes shuffle, never rows; count(DISTINCT band) expands
     to at most |band vocabulary| per class. Reference N/A."""
-    tune(spark)
     qi = (_t(spark, sf_dir, "customer")
           .select("c_nationkey", "c_mktsegment", _bal_band()
                   .alias("bal_band")))
@@ -161,7 +159,6 @@ def sketch_kmv_jaccard(spark, sf_dir):
     combined on the 8-byte hash), the bottom-128 is
     TakeOrderedAndProject (per-partition top-k, never a global sort),
     the witnesses ride the same flags aggregate. Reference N/A."""
-    tune(spark)
     ev = (_events(spark, sf_dir)
           .filter(F.col("user_id").isNotNull()
                   & F.col("ts").isNotNull()
@@ -241,7 +238,6 @@ def stats_theilsen_trend(spark, sf_dir):
     the day series), and the median rank comes from the two-pass
     global prefix scan (operators/twopass.py), so no single-partition
     window ever materializes. Reference N/A."""
-    tune(spark)
     d = (_t(spark, sf_dir, "orders")
          .filter(F.col("o_orderdate").isNotNull())
          .groupBy(F.datediff(F.col("o_orderdate").cast("date"),
@@ -325,7 +321,6 @@ def stats_bootstrap_means(spark, sf_dir):
     <= 32 partial rows per partition before the shuffle, so the
     aggregate moves O(32 x partitions) rows regardless of input size.
     Reference N/A."""
-    tune(spark)
     o = (_t(spark, sf_dir, "orders")
          .filter(F.col("o_totalprice").isNotNull()
                  & F.col("o_orderkey").isNotNull())
@@ -413,7 +408,6 @@ def dedup_image_ahash_lsh(spark, sf_dir):
     operators/multimodal.py::ahash_row_signatures. Reference N/A."""
     from .operators.multimodal import (ahash_row_signatures,
                                        synthesize_bmp_media)
-    tune(spark)
     # the signature frame feeds three join legs (two band sides + the
     # verify leg); checkpoint it once so the Python decode runs once —
     # it is O(images x height) scalar rows, tiny at any corpus size
@@ -502,7 +496,6 @@ def search_bm25_topk(spark, sf_dir):
     postings; the top-10 is TakeOrderedAndProject (per-partition
     top-k, never a global sort). Query-term postings are the only
     rows that shuffle. Reference N/A."""
-    tune(spark)
     docs = (_t(spark, sf_dir, "documents")
             .filter(F.col("text").isNotNull()
                     & F.col("doc_id").isNotNull()))
@@ -577,7 +570,6 @@ def stream_late_arrivals(spark, sf_dir):
     withWatermark; this batch form is what the driver can value-hash.
     Reference N/A."""
     from pyspark.sql import Window as W
-    tune(spark)
     e = (_events(spark, sf_dir)
          .filter(F.col("event_id").isNotNull()
                  & F.col("user_id").isNotNull()
@@ -632,7 +624,6 @@ def sketch_ams_f2(spark, sf_dir):
     Plan: the 16x replicate explode is map-side combined to <= 16
     partial rows per partition before the shuffle; the witness is one
     map-side-combined group-count. Reference N/A."""
-    tune(spark)
     e = (_events(spark, sf_dir).filter(F.col("user_id").isNotNull())
          .select("user_id"))
     s = e.select(
@@ -698,7 +689,6 @@ def layout_zonemap_prune(spark, sf_dir):
     decision column is a scalar expression over the zone stats. At
     100 TB the zone table is O(files), the decision never reads data.
     Reference N/A."""
-    tune(spark)
     c = _t(spark, sf_dir, "customer")
     nb = (F.col("c_nationkey") % 16).cast("long")
     ab = F.least(F.greatest(F.floor(F.col("c_acctbal") / 750)
@@ -796,7 +786,6 @@ def stats_permutation_test(spark, sf_dir):
     Plan: ONE scan; the 32x replicate explode is map-side combined to
     <= 32 partial rows per partition (the stats_bootstrap_means shape);
     the observed statistic rides the same scan. Reference N/A."""
-    tune(spark)
     m = F.when(F.col("value").isNotNull() & ~F.isnan(F.col("value"))
                & (F.col("value") >= 0) & (F.col("value") < 1e12),
                F.floor(F.col("value") * 1000000.0).cast("long"))
@@ -898,7 +887,6 @@ def graph_bfs_levels(spark, sf_dir):
     localCheckpoint truncates lineage per round. The seed pick is
     TakeOrderedAndProject. Operator: operators/graph.py::bfs_levels.
     Reference N/A."""
-    tune(spark)
     li = _t(spark, sf_dir, "lineitem").filter(
         F.col("l_orderkey").isNotNull() & F.col("l_partkey").isNotNull())
     from .operators import graph as G
@@ -972,7 +960,6 @@ def stats_join_size_est(spark, sf_dir):
     TakeOrderedAndProject (per-partition heaps); the residual scalars
     are one anti-join aggregate per side; nothing row-scale shuffles
     twice. Reference N/A."""
-    tune(spark)
     a = (_events(spark, sf_dir).filter(F.col("user_id").isNotNull())
          .groupBy(F.col("user_id").alias("k"))
          .agg(F.count(F.lit(1)).alias("c")))
@@ -1049,7 +1036,6 @@ def sink_partition_overwrite(spark, sf_dir):
     pipeline. Partition values are non-null by filter so no
     __HIVE_DEFAULT_PARTITION__ leg. Reference N/A."""
     import tempfile as _tf
-    tune(spark)
     e = (_events(spark, sf_dir)
          .filter(F.col("event_type").isNotNull()
                  & F.col("event_id").isNotNull())
@@ -1131,7 +1117,6 @@ def embed_matryoshka_recall(spark, sf_dir):
     partition per query. The truncated leg is the cheap one at scale:
     half the floats per candidate. Reference N/A."""
     from .operators import similarity
-    tune(spark)
     emb = (similarity.valid_vectors(
                _t(spark, sf_dir, "embeddings"), dim=64)
            .filter(F.col("vec_id").isNotNull())
@@ -1183,7 +1168,6 @@ def privacy_erasure_audit(spark, sf_dir):
     erasure pass is the same broadcast anti-join a 100 TB compaction
     job runs, and the audit rides it as one map-side-combined
     aggregate — the fact table is scanned once. Reference N/A."""
-    tune(spark)
     ev = _events(spark, sf_dir)
     dl = (ev.filter(F.col("user_id").isNotNull()
                     & (F.col("user_id") % 37 == 0))
@@ -1237,7 +1221,6 @@ def stats_capture_recapture(spark, sf_dir):
 
     Plan: one scan, one map-side-combined per-user flag aggregate
     (two bits of state per user), one scalar rollup. Reference N/A."""
-    tune(spark)
     eday = F.datediff(F.col("ts").cast("date"),
                       F.to_date(F.lit("1970-01-01")))
     seen = (_events(spark, sf_dir)
@@ -1310,7 +1293,6 @@ def profile_column_gini(spark, sf_dir):
     an O(distinct) rollup; only value counts shuffle. Reference N/A
     (the reference profiles with pandas df.describe, SURVEY.md A2).
     """
-    tune(spark)
 
     def gini(df, col):
         c = (df.filter(F.col(col).isNotNull()).groupBy(col)
@@ -1383,7 +1365,6 @@ def profile_functional_deps(spark, sf_dir):
     aggregates over one scan of its table; only distinct keys shuffle.
     At 100 TB the same check runs on a sample first, exact-confirming
     survivors only. Reference N/A."""
-    tune(spark)
 
     def fd(df, lhs, rhs, name):
         base = df.filter(F.col(lhs).isNotNull())
@@ -1485,7 +1466,6 @@ def dq_referential_health(spark, sf_dir):
     read (columnar pruning). Reference: the FK relationships implied by
     /root/reference/etl/03_transform_and_load.py's star inserts.
     """
-    tune(spark)
 
     def edge(child, ck, parent, pk, name):
         c = child.filter(F.col(ck).isNotNull()).select(ck)
@@ -1556,7 +1536,6 @@ def events_interarrival_hist(spark, sf_dir):
     has O(log range) cells per type regardless of input size.
     Reference N/A."""
     from pyspark.sql import Window as W
-    tune(spark)
     e = (_events(spark, sf_dir)
          .filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull()
                  & F.col("event_type").isNotNull())
@@ -1630,7 +1609,6 @@ def stats_survival_table(spark, sf_dir):
     bounded-aggregate window (the orders_revenue_concentration
     precedent), never a row-scale one. Reference N/A."""
     from pyspark.sql import Window as W
-    tune(spark)
     o = (_t(spark, sf_dir, "orders")
          .filter(F.col("o_custkey").isNotNull()
                  & F.col("o_orderdate").isNotNull()
@@ -1726,7 +1704,6 @@ def events_markov_stationary(spark, sf_dir):
     and shuffles |states| rows. Fixed rounds keep the loop lazy — one
     pipelined job, no per-round checkpoint. Reference N/A."""
     from pyspark.sql import Window as W
-    tune(spark)
     seq = (_events(spark, sf_dir)
            .filter(F.col("user_id").isNotNull()
                    & F.col("ts").isNotNull()
@@ -1790,7 +1767,6 @@ def text_good_turing(spark, sf_dir):
     Plan: one corpus scan -> token counts (map-side combined) -> one
     count-of-counts rollup; only the vocabulary shuffles.
     Reference N/A."""
-    tune(spark)
     tf = (_t(spark, sf_dir, "documents")
           .filter(F.col("text").isNotNull())
           .select(F.explode(F.split("text", " ")).alias("w"))
@@ -1840,7 +1816,6 @@ def text_encoding_quality(spark, sf_dir):
     combined per-source aggregate — one scan, no UDF, whole-stage
     codegen. Reference N/A (the reference ingests a known-clean CSV).
     """
-    tune(spark)
     docs = (_t(spark, sf_dir, "documents")
             .filter(F.col("text").isNotNull()
                     & F.col("source").isNotNull()))
@@ -1892,7 +1867,6 @@ def dq_sequence_gaps(spark, sf_dir):
     Plan: one map-side-combined per-order aggregate (count, distinct,
     min, max — the distinct expands per-order, bounded by line count),
     then a scalar rollup. Reference N/A."""
-    tune(spark)
     per = (_t(spark, sf_dir, "lineitem")
            .filter(F.col("l_orderkey").isNotNull()
                    & F.col("l_linenumber").isNotNull())
@@ -1954,7 +1928,6 @@ def select_pareto_frontier(spark, sf_dir):
     over ~100 bucket rows -> broadcast candidate self-join.
     Reference N/A."""
     from pyspark.sql import Window as W
-    tune(spark)
     p = (_t(spark, sf_dir, "part")
          .filter(F.col("p_partkey").isNotNull()
                  & F.col("p_retailprice").isNotNull()
@@ -2027,7 +2000,6 @@ def orders_cohort_ltv(spark, sf_dir):
     the cohort join is cust-key equi (AQE-broadcastable at dimension
     scale); cells aggregate map-side. At 100 TB the matrix is
     O(months^2) rows regardless of input. Reference N/A."""
-    tune(spark)
     o = (_t(spark, sf_dir, "orders")
          .filter(F.col("o_custkey").isNotNull()
                  & F.col("o_orderdate").isNotNull()
@@ -2082,7 +2054,6 @@ def text_zipf_topk(spark, sf_dir):
     TakeOrderedAndProject; the rank window runs over 20 collected
     rows. Reference N/A."""
     from pyspark.sql import Window as W
-    tune(spark)
     tf = (_t(spark, sf_dir, "documents")
           .filter(F.col("text").isNotNull())
           .select(F.explode(F.split("text", " ")).alias("w"))
@@ -2160,7 +2131,6 @@ def embed_centroid_drift(spark, sf_dir):
     O(labels). Reference N/A."""
     from .catalog_infer import _limb_cols
     from .operators import similarity
-    tune(spark)
     emb = (similarity.valid_vectors(
                _t(spark, sf_dir, "embeddings"), dim=64)
            .filter(F.col("label").isNotNull()
@@ -2231,7 +2201,6 @@ def source_csv_corrupt_records(spark, sf_dir):
     import os
     import tempfile as _tf
     from pyspark.sql import types as T
-    tune(spark)
     lines = ["id,name,amount"]
     for i in range(100):
         if i % 7 == 3:
@@ -2314,6 +2283,5 @@ def multimodal_audio_decimate(spark, sf_dir):
     from .operators.multimodal import (decimate_wav_half,
                                        decode_wav_features,
                                        synthesize_wav_media)
-    tune(spark)
     return decode_wav_features(
         decimate_wav_half(synthesize_wav_media(spark, n=48)))

@@ -9,6 +9,8 @@ Conventions (SURVEY.md section 7.3):
   reproducible across partitionings and engines.
 - AQE on: runtime re-planning (skew joins, partition coalescing) is the
   scale posture for the 100 TB target.
+- the SQL confs behind these conventions live in RUNTIME_CONF only, and
+  only get_spark and the catalog registry callables apply them.
 """
 
 from __future__ import annotations
@@ -18,12 +20,22 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-# Runtime confs that are safe to (re)apply to an externally provided session
-# (e.g. the verification driver's). All of these are runtime-mutable.
+# The engine's SQL conventions - the ONE list of them. get_spark builds
+# its session with them, and every catalog registry callable (QUERIES /
+# QUERIES_RAW) re-applies them via tune() before it runs its entry, so a
+# session someone else built (e.g. the verification driver's) gets them
+# too. Operators, loaders and the decorated catalog symbols assume a
+# session that already has them and never set confs themselves: a query
+# that wrote session conf would make later requests depend on which one
+# ran first. All of these are runtime-mutable.
 RUNTIME_CONF = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    # a TIMESTAMP(NANOS) parquet column loads as long (instead of failing
+    # the scan); sources.tables.with_event_ts converts it. A no-op for
+    # the TIMESTAMP(MICROS) encoding the testdata uses.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 # NOT tuned here: spark.sql.files.openCostInBytes. Lowering it raises
 # the REPORTED split count (a 34 MB table goes 10 -> 32 "splits"), but
@@ -35,7 +47,8 @@ RUNTIME_CONF = {
 
 
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime conventions to an existing session (idempotent)."""
+    """Apply RUNTIME_CONF to an existing session (idempotent). Called by
+    get_spark and by the catalog registry callables only."""
     for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
@@ -221,7 +234,8 @@ def get_spark(app_name: str = "python_etl_rest_api_spark",
     """Build (or fetch) the engine session.
 
     local[N] for tests/bench; on a real cluster the master/memory settings
-    come from spark-submit and only the SQL confs below matter.
+    come from spark-submit and only the SQL confs below (RUNTIME_CONF
+    plus the shuffle/Arrow/codec settings) matter.
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
     # Initial shuffle parallelism follows the session's actual core
@@ -240,10 +254,8 @@ def get_spark(app_name: str = "python_etl_rest_api_spark",
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
+        .config(map=RUNTIME_CONF)
         .config("spark.sql.shuffle.partitions", n_shuffle)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")

@@ -15,6 +15,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import with_event_ts
+
+
 def tumbling_agg(events: DataFrame, bucket: str = "hour") -> DataFrame:
     """Tumbling-window counts + exact value sums per event_type.
 
@@ -180,18 +183,10 @@ def run_stream_on_batch(spark: SparkSession, events_path: str,
                         output_mode: str = "append") -> None:
     """Execute a streaming transform over a bounded parquet source using
     availableNow (test/backfill harness: stream semantics, batch data).
-
-    Dispatches on the loaded ``ts`` dtype like the batch-side _events
-    loader: TIMESTAMP(MICROS) sources pass through; TIMESTAMP(NANOS)
-    sources load as long (nanosAsLong compat conf) and convert with exact
-    integer division."""
+    ``ts`` gets the batch-side _events dtype dispatch (with_event_ts)."""
     import os
     import tempfile
 
-    from pyspark.sql import types as T
-    # compat: lets a TIMESTAMP(NANOS) source load (as long) instead of
-    # failing the scan; a no-op for the micros encoding the testdata uses.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if os.path.isfile(events_path):
         # the file-stream source requires a directory; shim single files
         d = tempfile.mkdtemp(prefix="stream_src_")
@@ -199,15 +194,9 @@ def run_stream_on_batch(spark: SparkSession, events_path: str,
                    os.path.join(d, os.path.basename(events_path)))
         events_path = d
     schema = spark.read.parquet(events_path).schema
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(events_path))
-    if isinstance(schema["ts"].dataType, T.LongType):
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(schema["ts"].dataType, T.TimestampNTZType):
-        # normalize to TIMESTAMP (session tz pinned UTC); watermarks and
-        # window() require it, matching the batch-side _events loader.
-        stream = stream.withColumn("ts", F.col("ts").cast(T.TimestampType()))
+    stream = with_event_ts(spark.readStream.schema(schema)
+                           .option("maxFilesPerTrigger", 1)
+                           .parquet(events_path))
     writer = transform(stream).writeStream \
         .option("checkpointLocation", out_path + "_chk") \
         .outputMode(output_mode) \
