@@ -11,8 +11,8 @@ plus the engine endpoints that make this an analytics service:
 - GET  /catalog, /catalog/{name} -> the whole analytics catalog over REST
 - GET  /health
 
-State is table-backed (append-only parquet store, re-read inside every
-operation, duplicate races adjudicated read-after-write - see
+State is table-backed (append-only parquet store, read once per check,
+duplicate races adjudicated read-after-write - see
 operators/first100.py), not a process global: multiple workers converge
 on the same state, unlike the reference (SURVEY.md L7). A single
 SparkSession lives for the app's lifetime. Client-supplied paths are

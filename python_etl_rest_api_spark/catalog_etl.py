@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from .catalog import query
 from .operators.clean import clean_pipeline
 from .schemas import CHARGES_RAW_SCHEMA
+from .session import local_frame
 
 # Spark-side mirror of the oracle's try_strptime coalesce list (the
 # engine's lenient multi-format mode; golden replication uses the strict
@@ -45,13 +46,14 @@ DIRTY_ROWS = [
 
 
 def _dirty_df(spark):
-    """The dirty literals as a raw-schema DataFrame + rid (a fresh schema
-    copy each call - StructType.add mutates in place)."""
+    """The dirty literals as a raw-schema DataFrame + rid, planned as a
+    LocalRelation (a fresh schema copy each call - StructType.add
+    mutates in place)."""
     from pyspark.sql import types as T
     schema = T.StructType(list(CHARGES_RAW_SCHEMA.fields)
                           + [T.StructField("rid", T.LongType(), False)])
-    return spark.createDataFrame(
-        [row[1:] + (row[0],) for row in DIRTY_ROWS], schema)
+    return local_frame(spark, [row[1:] + (row[0],) for row in DIRTY_ROWS],
+                       schema)
 
 
 def _values_sql() -> str:

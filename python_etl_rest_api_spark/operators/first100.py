@@ -3,8 +3,9 @@
 The reference keeps a mutable in-process set of 1..100 with extract /
 missing / reset operations and fails under multiple workers (its own
 documented flaw, SURVEY.md L7). Here state lives in an APPEND-ONLY
-parquet store re-read inside every operation, so concurrent workers
-converge on the same state:
+parquet store, read once per check (extract reads before and after its
+write, missing reads once), so concurrent workers converge on the same
+state:
 
 - each extraction appends one (n, token) row - no worker ever overwrites
   another's writes;
@@ -16,8 +17,13 @@ converge on the same state:
 - reset() truncates by overwriting with an empty frame (last writer
   wins - the reference's reset has the same semantics).
 
-'remaining' stays a declarative anti-join over ``spark.range`` - set
-semantics, no driver-side loops.
+The store is read with its declared schema (no schema-inference job),
+and the rows written are built as Arrow LocalRelations
+(session.local_frame), so no request starts a Python worker. Jobs per
+call: reset 1, extract 3 (read, append, read-after-write), missing 1.
+missing() answers from the set it has just loaded; ``remaining_df`` /
+``missing_via_set`` keep the declarative anti-join over ``spark.range``
+as the DataFrame cross-check.
 """
 
 from __future__ import annotations
@@ -25,13 +31,15 @@ from __future__ import annotations
 import os
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from ..session import local_frame
 
 _STORE_SCHEMA = "n long, token string"
 
-# The store pattern below RE-READS AND COLLECTS the whole table inside
-# every operation. That is valid ONLY because state is bounded at <= n
+# The store pattern below RE-READS AND COLLECTS the whole table in
+# every check. That is valid ONLY because state is bounded at <= n
 # rows by construction (extractions of a set 1..n); the recipe must not
 # be cloned for an unbounded keyspace, where _read_store() becomes a
 # driver-side full-table collect. The constructor enforces the bound.
@@ -69,38 +77,42 @@ class First100:
 
     # -- state store ------------------------------------------------------
     def _read_store(self) -> list[tuple[int, str]]:
-        """All (n, token) rows currently in the store ([] when absent).
+        """All (n, token) rows currently in the store ([] when the path
+        does not exist). Any other read failure - a corrupt or unreadable
+        file - raises: reading it as empty would silently reset the set.
         Legacy token-less rows read as token='' (sorts first, keeps the
         original extraction as the winner)."""
         try:
-            df = self.spark.read.parquet(self.store_path)
-        except Exception:
-            return []
-        if "token" not in df.columns:
-            df = df.withColumn("token", F.lit(""))
+            df = self.spark.read.schema(_STORE_SCHEMA).parquet(self.store_path)
+        except AnalysisException as exc:
+            if exc.getCondition() == "PATH_NOT_FOUND":
+                return []
+            raise
         return [(r["n"], r["token"] or "") for r in df.collect()]
 
-    def _load(self) -> None:
-        """Refresh the in-process view from the shared store. Called at the
-        top of every operation so multi-worker deployments never serve
-        stale state (each worker sees every other worker's appends)."""
+    def _load(self) -> list[tuple[int, str]]:
+        """Refresh the in-process view with one read of the shared store
+        and return the rows read. Every check starts from a fresh read,
+        so multi-worker deployments never serve stale state (each worker
+        sees every other worker's appends)."""
         if not self.store_path:
-            return
-        self._extracted = sorted({n for n, _ in self._read_store()})
+            return []
+        rows = self._read_store()
+        self._extracted = sorted({n for n, _ in rows})
+        return rows
 
     def _append(self, number: int, token: str) -> None:
-        df = self.spark.createDataFrame([(number, token)], _STORE_SCHEMA)
+        df = local_frame(self.spark, [(number, token)], _STORE_SCHEMA)
         df.coalesce(1).write.mode("append").parquet(self.store_path)
 
     def _truncate(self) -> None:
-        df = self.spark.createDataFrame([], _STORE_SCHEMA)
+        df = local_frame(self.spark, [], _STORE_SCHEMA)
         df.write.mode("overwrite").parquet(self.store_path)
 
     # -- set algebra as DataFrames ---------------------------------------
     def extracted_df(self) -> DataFrame:
-        if not self._extracted:
-            return self.spark.createDataFrame([], "n long")
-        return self.spark.createDataFrame([(k,) for k in self._extracted], "n long")
+        return local_frame(self.spark, [(k,) for k in self._extracted],
+                           "n long")
 
     def remaining_df(self) -> DataFrame:
         """1..n minus extracted - left-anti join (reference I3 semantics)."""
@@ -122,8 +134,7 @@ class First100:
             # token wins and the other call reports the duplicate.
             token = f"{time.time_ns():020d}-{os.getpid()}"
             self._append(number, token)
-            claims = sorted(t for n_, t in self._read_store() if n_ == number)
-            self._load()
+            claims = sorted(t for n_, t in self._load() if n_ == number)
             if claims and claims[0] != token:
                 raise ValidationError(f"{number} was already extracted")
         else:
@@ -139,10 +150,8 @@ class First100:
             raise ValidationError(
                 "missing() requires exactly one extracted number, "
                 f"got {len(self._extracted)}")
-        expected = self.n * (self.n + 1) // 2
-        remaining_sum = (self.remaining_df()
-                         .agg(F.sum("n").alias("s")).collect()[0]["s"]) or 0
-        return expected - remaining_sum
+        remaining = set(range(1, self.n + 1)).difference(self._extracted)
+        return self.n * (self.n + 1) // 2 - sum(remaining)
 
     def missing_via_set(self) -> list[int]:
         """Alternate impl (reference api/first100.py:31-38): direct set

@@ -10,12 +10,14 @@ int-vs-float, float32-vs-float64, decimal-scale drift) can never again
 pass a local sweep.
 """
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(ROOT, "tools"))
 
 from check_oracle import _canon_duck, _canon_spark, typed_diffs  # noqa: E402
 

@@ -100,3 +100,74 @@ def test_constructor_bounds_state_size(spark):
     with pytest.raises(ValidationError):
         First100(spark, n=0)
     assert First100(spark, n=MAX_N).n == MAX_N
+
+
+def _jobs(spark, fn):
+    """(fn's result, number of Spark jobs fn submitted), counted under a
+    job group of its own."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"test-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job status arrives through the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_one_store_read_per_check(spark, tmp_path):
+    """reset / extract / missing submit 1 / 3 / 1 jobs: the store is read
+    with its declared schema (no inference job), the rows written are
+    LocalRelations (no Python-worker job), extract adjudicates from its
+    single read-after-write and missing answers from the set it read."""
+    f = First100(spark, store_path=str(tmp_path / "jobs"))
+    for k in (31, 64):
+        assert _jobs(spark, f.reset) == (
+            {"status": "reset", "remaining_count": 100}, 1)
+        assert _jobs(spark, lambda: f.extract(k)) == (
+            {"extracted": k, "remaining_count": 99}, 3)
+        assert _jobs(spark, f.missing) == (k, 1)
+
+
+def test_broken_store_raises(spark, tmp_path):
+    """Only a missing store path reads as the empty set; a corrupt file
+    must fail the request instead of silently resetting the set."""
+    path = tmp_path / "broken"
+    f = First100(spark, store_path=str(path))
+    assert f._read_store() == []          # absent path: empty store
+    f.extract(3)
+    (path / "part-0.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception) as info:
+        f.extract(5)
+    assert not isinstance(info.value, ValidationError)
+
+
+def test_legacy_token_less_rows(spark, tmp_path):
+    """A store file written with only an ``n`` column reads back as
+    token='', wins adjudication against a later tokened claim, and is
+    what missing() returns."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "legacy"
+
+    def write_legacy():
+        path.mkdir(exist_ok=True)
+        pq.write_table(pa.table({"n": pa.array([7], pa.int64())}),
+                       str(path / "part-legacy.parquet"))
+
+    # b's first read sees an empty store; the legacy row lands before
+    # b's own append, so only the read-after-write can reject b's claim
+    b = First100(spark, store_path=str(path))
+    append = b._append
+    b._append = lambda number, token: (write_legacy(), append(number, token))
+    with pytest.raises(ValidationError, match="already extracted"):
+        b.extract(7)
+    a = First100(spark, store_path=str(path))
+    tokens = sorted(t for n, t in a._read_store() if n == 7)
+    assert len(tokens) == 2 and tokens[0] == ""   # legacy row, b's claim
+    assert a.missing() == 7
+    assert a.missing_via_set() == [7]

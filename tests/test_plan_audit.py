@@ -2,9 +2,11 @@
 must flag true products and pass the sanctioned bounded-broadcast
 patterns (scalar subquery, top-k broadcast, salt replication)."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from tools.plan_audit import audit_one  # noqa: E402
 

@@ -27,11 +27,13 @@ Usage: python tools/check_oracle.py [sf_dir] [query_name ...]
 from __future__ import annotations
 
 import math
+import os
 import re
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = set(sys.argv[2:])

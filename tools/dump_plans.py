@@ -11,10 +11,12 @@ from the live plans, so it cannot drift from the code.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
@@ -95,7 +97,7 @@ def main() -> None:
         out.append("```")
         out.append("")
         print(f"# {name}: {'; '.join(facts)}", file=sys.stderr)
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out) + "\n")
     print("wrote PLANS.md", file=sys.stderr)
 

@@ -39,9 +39,11 @@ Defaults: /root/testdata/sf0.1 /tmp/sf1x 10
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 OFFSET = 10_000_000
 CLUSTER_BOUND = 10        # max near-dup cluster size in documents

@@ -12,9 +12,11 @@ Exit 1 on any unexpected antipattern.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # entry -> {antipattern: reason} documented exemptions
 WHITELIST: dict[str, dict[str, str]] = {

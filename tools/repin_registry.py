@@ -23,17 +23,19 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
     from python_etl_rest_api_spark.registry import QUERIES
 
     green_round: dict[str, int] = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
         rnd = int(path.split("_r")[-1].split(".")[0])
         for name, rec in json.load(open(path)).items():
             if rec.get("rows_match") and rec.get("schema_match") \

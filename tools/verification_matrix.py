@@ -13,16 +13,18 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> None:
     from python_etl_rest_api_spark.registry import QUERIES
 
     rounds: dict[str, dict] = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
         rnd = path.split("_r")[-1].split(".")[0]
         rounds[rnd] = json.load(open(path))
 
@@ -68,7 +70,7 @@ def main() -> None:
         "per the registry's debt-first order as the per-round window "
         "reaches them; all are locally tri-scale green).",
     ]
-    with open("/root/repo/VERIFICATION.md", "w") as f:
+    with open(os.path.join(ROOT, "VERIFICATION.md"), "w") as f:
         f.write("\n".join(out) + "\n")
     print(f"wrote VERIFICATION.md ({len(QUERIES)} entries, "
           f"{never_driver} awaiting first driver window)")
