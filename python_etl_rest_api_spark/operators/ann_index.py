@@ -21,7 +21,9 @@ A one-row ``meta`` parquet pins the build parameters (dim, bits,
 tables, n_centroids, refine_steps, m_sub, n_codewords); serve functions
 read their geometry from it so an index can never be probed with
 mismatched hyperplanes/codebooks. Serve results are value-identical to
-the recompute paths (same candidate sets, same sequential-fold cosine),
+the recompute paths: both run the candidate, exact-cosine and top-k
+code of ``similarity`` (``_probe_top_k`` for SRP/IVF, the ADC serve
+halves for PQ/IVF-PQ), only the index rows come from parquet. This is
 proven by the ``sim_ann_index_*_serve`` catalog entries sharing the
 recompute entries' oracles, and the amortization is measured in bench
 (build once vs per-batch recompute).
@@ -30,10 +32,11 @@ recompute entries' oracles, and the amortization is measured in bench
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import similarity
+from ..session import local_frame
 
 META_SCHEMA = ("dim int, bits int, tables int, n_centroids int, "
                "refine_steps int, m_sub int, n_codewords int, "
@@ -60,9 +63,9 @@ def build_ann_index(corpus: DataFrame, path: str, dim: int,
     corpus pass per family - the build cost the serve paths amortize).
     Returns ``path``."""
     spark = corpus.sparkSession
-    spark.createDataFrame(
-        [(dim, bits, tables, n_centroids, refine_steps, m_sub,
-          n_codewords, ",".join(kinds))], META_SCHEMA) \
+    local_frame(spark, [(dim, bits, tables, n_centroids, refine_steps,
+                         m_sub, n_codewords, ",".join(kinds))],
+                META_SCHEMA) \
         .coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
     if "srp" in kinds:
         (similarity.srp_buckets(corpus, dim, bits, tables, id_col, vec_col)
@@ -72,10 +75,8 @@ def build_ann_index(corpus: DataFrame, path: str, dim: int,
         cent = similarity.ivf_centroids(
             corpus, n_centroids, dim, refine_steps=refine_steps,
             id_col=id_col, vec_col=vec_col)
-        spark.createDataFrame(
-            [(int(i), [float(x) for x in row])
-             for i, row in enumerate(cent)],
-            "centroid_id long, centroid array<double>") \
+        local_frame(spark, [(i, row.tolist()) for i, row in enumerate(cent)],
+                    "centroid_id long, centroid array<double>") \
             .coalesce(1).write.mode("overwrite") \
             .parquet(f"{path}/ivf_centroids")
         (similarity.ivf_assignments(corpus, cent, nprobe=1,
@@ -85,10 +86,10 @@ def build_ann_index(corpus: DataFrame, path: str, dim: int,
     if "pq" in kinds:
         cb = similarity.pq_codebooks(corpus, n_codewords, m_sub, dim,
                                      id_col, vec_col)
-        spark.createDataFrame(
-            [(int(m), int(c), [float(x) for x in cb[m, c]])
-             for m in range(cb.shape[0]) for c in range(cb.shape[1])],
-            "m int, c int, sub array<double>") \
+        local_frame(spark, [(m, c, cb[m, c].tolist())
+                            for m in range(cb.shape[0])
+                            for c in range(cb.shape[1])],
+                    "m int, c int, sub array<double>") \
             .coalesce(1).write.mode("overwrite") \
             .parquet(f"{path}/pq_codebooks")
         (similarity.pq_encode(corpus, cb, id_col, vec_col)
@@ -99,6 +100,16 @@ def build_ann_index(corpus: DataFrame, path: str, dim: int,
 
 def _meta(spark, path: str):
     return spark.read.parquet(f"{path}/meta").collect()[0]
+
+
+def _load_centroids(spark, path: str) -> np.ndarray:
+    """The stored IVF codebook as a (k, dim) matrix; (0, dim) for an
+    index built on an empty corpus."""
+    rows = (spark.read.parquet(f"{path}/ivf_centroids")
+            .orderBy("centroid_id").collect())
+    if not rows:
+        return np.zeros((0, _meta(spark, path).dim))
+    return np.array([r["centroid"] for r in rows], dtype=np.float64)
 
 
 def append_to_ann_index(new_rows: DataFrame, path: str,
@@ -143,10 +154,7 @@ def append_to_ann_index(new_rows: DataFrame, path: str,
          .select("table_id", "bucket_key", id_col)
          .write.mode("append").parquet(f"{path}/srp_buckets"))
     if "ivf" in kinds:
-        cent_rows = (spark.read.parquet(f"{path}/ivf_centroids")
-                     .orderBy("centroid_id").collect())
-        cent = np.array([r["centroid"] for r in cent_rows],
-                        dtype=np.float64)
+        cent = _load_centroids(spark, path)
         if cent.size == 0:
             # assignment against zero centroids would die with an
             # opaque numpy shape error inside the executor UDF
@@ -193,27 +201,11 @@ def topk_ann_srp_indexed(corpus: DataFrame, queries: DataFrame, path: str,
     use_tables = m.tables if tables is None else min(tables, m.tables)
     idx = spark.read.parquet(f"{path}/srp_buckets") \
         .filter(F.col("table_id") < use_tables)
-    qb = (similarity.srp_buckets(
-        queries.select(F.col(qid_col).alias(id_col),
-                       F.col("qv").alias(vec_col)),
-        m.dim, m.bits, use_tables, id_col, vec_col)
-        .select(F.col(id_col).alias(qid_col), F.col(vec_col).alias("qv"),
-                F.col("table_id").alias("q_table"),
-                F.col("bucket_key").alias("q_bucket")))
-    cand = (idx.join(F.broadcast(qb),
-                     (F.col("table_id") == F.col("q_table")) &
-                     (F.col("bucket_key") == F.col("q_bucket")) &
-                     (F.col(qid_col) != F.col(id_col)))
-            .select(qid_col, "qv", id_col)
-            .dropDuplicates([qid_col, id_col])
-            .join(corpus.select(id_col, vec_col), id_col))
-    pairs = cand.select(qid_col, id_col,
-                        similarity.cosine(F.col("qv"), F.col(vec_col))
-                        .alias("sim"))
-    w = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(),
-                                            F.col(id_col).asc())
-    return (pairs.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return similarity._probe_top_k(
+        idx, queries,
+        lambda q: similarity.srp_buckets(q, m.dim, m.bits, use_tables,
+                                         id_col, vec_col),
+        ("table_id", "bucket_key"), k, id_col, vec_col, qid_col, corpus)
 
 
 def topk_ann_ivf_indexed(corpus: DataFrame, queries: DataFrame, path: str,
@@ -228,29 +220,12 @@ def topk_ann_ivf_indexed(corpus: DataFrame, queries: DataFrame, path: str,
     (recall/latency trade per batch); the codebook geometry comes from
     the index meta."""
     spark = corpus.sparkSession
-    cent_rows = (spark.read.parquet(f"{path}/ivf_centroids")
-                 .orderBy("centroid_id").collect())
-    cent = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
-    inv = spark.read.parquet(f"{path}/ivf_assignments")
-    probes = (similarity.ivf_assignments(
-        queries.select(F.col(qid_col).alias(id_col),
-                       F.col("qv").alias(vec_col)),
-        cent, nprobe=nprobe, id_col=id_col, vec_col=vec_col)
-        .select(F.col(id_col).alias(qid_col), F.col(vec_col).alias("qv"),
-                F.col("centroid_id").alias("probe_centroid")))
-    cand = (inv.join(F.broadcast(probes),
-                     (F.col("centroid_id") == F.col("probe_centroid")) &
-                     (F.col(qid_col) != F.col(id_col)))
-            .select(qid_col, "qv", id_col)
-            .dropDuplicates([qid_col, id_col])
-            .join(corpus.select(id_col, vec_col), id_col))
-    pairs = cand.select(qid_col, id_col,
-                        similarity.cosine(F.col("qv"), F.col(vec_col))
-                        .alias("sim"))
-    w = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(),
-                                            F.col(id_col).asc())
-    return (pairs.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    cent = _load_centroids(spark, path)
+    return similarity._probe_top_k(
+        spark.read.parquet(f"{path}/ivf_assignments"), queries,
+        lambda q: similarity.ivf_assignments(q, cent, nprobe, id_col,
+                                             vec_col),
+        ("centroid_id",), k, id_col, vec_col, qid_col, corpus)
 
 
 def _load_pq_codebooks(spark, path: str, dim: int, m_sub: int
@@ -279,9 +254,7 @@ def topk_ann_ivfpq_indexed(corpus: DataFrame, queries: DataFrame,
     (one :func:`build_ann_index` call covers it)."""
     spark = corpus.sparkSession
     m = _meta(spark, path)
-    cent_rows = (spark.read.parquet(f"{path}/ivf_centroids")
-                 .orderBy("centroid_id").collect())
-    cent = np.array([r["centroid"] for r in cent_rows], dtype=np.float64)
+    cent = _load_centroids(spark, path)
     inv = spark.read.parquet(f"{path}/ivf_assignments")
     cb = _load_pq_codebooks(spark, path, m.dim, m.m_sub)
     codes = spark.read.parquet(f"{path}/pq_codes")

@@ -1,26 +1,59 @@
 """Similarity search over embedding columns (extension surface).
 
-Two paths over ``embeddings`` (vec_id, embedding: array<float>, label):
+Every path reads ``embeddings`` (vec_id, embedding: array<float>, label)
+and a small query frame (qid, qv), and answers in one pipeline: generate
+candidates, verify them by exact cosine, rank them per query (ties
+broken by neighbor id).
 
-- brute-force cosine top-k: the exactness baseline. Query set is small ->
-  broadcast it against the corpus; per-pair dot product is a sequential
-  fold over the array (F.aggregate), JVM-side, in double.
-- LSH-bucketed ANN (random hyperplane / SRP): H deterministic hyperplanes
-  derived from md5 bytes -> sign bits -> bucket key; candidates share a
-  bucket, then exact cosine re-rank. At 100 TB the bucket join replaces
-  the corpus-wide cross product; recall tunes with tables x bits.
+- Brute force (``topk_bruteforce``): every corpus vector is a candidate.
+  The exactness baseline; the query set is broadcast against the corpus.
+- SRP (``srp_buckets``, ``topk_ann_srp``): random-hyperplane LSH. tables
+  x bits md5-derived hyperplanes give sign bits, packed into one bucket
+  key per table; candidates share a (table, bucket) with the query. At
+  100 TB the bucket join replaces the corpus-wide cross product; recall
+  tunes with tables x bits.
+- IVF (``ivf_centroids``, ``ivf_assignments``, ``topk_ann_ivf``): an
+  inverted file of centroid cells; candidates sit in the query's
+  ``nprobe`` nearest cells.
+- PQ (``pq_codebooks``, ``pq_encode``, ``topk_ann_pq``): m_sub one-byte
+  codes per vector; candidates are the top ``pool`` by Asymmetric
+  Distance Computation (ADC) over the codes.
+- IVF-PQ (``topk_ann_ivfpq``): ADC over the probed IVF cells only.
+- MMR (``mmr_rerank``): greedy relevance/diversity re-rank of a
+  brute-force pool.
 
-Determinism: folds run left-to-right in double on both engines
-(F.aggregate <-> DuckDB list_reduce), so cosine values are bit-identical
-for the oracle; ranking ties broken by id.
+``operators/ann_index.py`` persists the SRP, IVF and PQ artifacts and
+serves from them through the same candidate and re-rank code.
+
+Sequential-fold rule: every dot product, norm and squared distance is a
+left-to-right fold over dimensions in float64 (0.0 + x1*y1 + x2*y2 +
+...): ``dot`` (F.aggregate) on the JVM side, ``_seq_dot`` in the numpy
+kernels, and ADC scores add their m_sub table entries in subspace order
+the same way. That is DuckDB's ``list_reduce`` order, so the SQL oracle
+reproduces cosine values, SRP bucket keys, IVF cells, PQ codes, ADC
+scores and every ranking bit for bit. Never switch a fold to matmul or
+np.dot: blocked, SIMD or fused multiply-add summation rounds
+differently, and a sign or an argmin near its decision boundary would
+then disagree with the oracle.
 """
 
 from __future__ import annotations
 
+import sys
+
 import numpy as np
 import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+
+from ..session import local_frame, widen_scan
+
+# The UDF kernels call this module's numpy helpers. Pickling the module
+# by value ships those helpers inside each UDF, so a Python worker needs
+# numpy and pandas on its path, not this package.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -50,15 +83,112 @@ def valid_vectors(df: DataFrame, vec_col: str = "embedding",
     given, whose length differs from the index geometry - before any
     numpy/fold consumer: partial or corrupt upstream records must
     degrade to exclusion from the vector index, not kill the job
-    (null/fuzz-sweep hardening; np.stack over a batch containing None
-    or ragged lengths raises). Degenerate rows carry no usable
-    geometry, so every consumer's semantics is unchanged on clean
-    data."""
+    (null/fuzz-sweep hardening; stacking a batch containing None or
+    ragged lengths raises). Degenerate rows carry no usable geometry,
+    so every consumer's semantics is unchanged on clean data."""
     cond = F.col(vec_col).isNotNull() & (F.size(vec_col) > 0)
     if dim is not None:
         cond = F.col(vec_col).isNotNull() & (F.size(vec_col) == dim)
     return df.filter(cond)
 
+
+# -- numpy kernels -----------------------------------------------------
+
+def _seq_sum(n: int, term) -> np.ndarray:
+    """term(0) + term(1) + ... + term(n - 1), added left to right onto
+    0.0 in float64: the one fold every numpy kernel runs."""
+    acc = np.float64(0.0)
+    for i in range(n):
+        acc = acc + term(i)
+    return acc
+
+
+def _seq_dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Dot product over the last axis, vectorised over the broadcast
+    leading axes."""
+    return _seq_sum(a.shape[-1], lambda d: a[..., d] * b[..., d])
+
+
+def _cosine(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Cosine over the last axis; NaN where a norm is zero (the
+    ``cosine`` expression's NULL), so the row fails every threshold."""
+    denom = np.sqrt(_seq_dot(a, a)) * np.sqrt(_seq_dot(b, b))
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return np.where(denom > 0, _seq_dot(a, b) / denom, np.nan)
+
+
+def _matrix(col: pd.Series, dtype=np.float64) -> np.ndarray:
+    """(n, width) matrix from a batch of an equal-length array column."""
+    return np.vstack(col.to_numpy()).astype(dtype, copy=False)
+
+
+def _rows(mat: np.ndarray) -> pd.Series:
+    """One array cell per matrix row: the output of an array UDF."""
+    return pd.Series(list(mat))
+
+
+def _seed_vectors(corpus: DataFrame, n: int, dim: int, id_col: str,
+                  vec_col: str) -> np.ndarray:
+    """The ``n`` lowest-id valid vectors as an (n', dim) matrix, n' <= n:
+    deterministic seeding without RNG state, which the oracle repeats."""
+    seeds = (valid_vectors(corpus, vec_col, dim).orderBy(id_col)
+             .limit(n).select(vec_col).collect())
+    return np.array([r[0] for r in seeds], dtype=np.float64).reshape(-1, dim)
+
+
+# -- ranking tails -----------------------------------------------------
+
+def _top_k(df: DataFrame, score_col: str, k: int, id_col: str,
+           qid_col: str) -> DataFrame:
+    """The ``k`` best rows per query by ``score_col`` (ties: lower id),
+    numbered 1..k in ``rank``."""
+    w = Window.partitionBy(qid_col).orderBy(F.col(score_col).desc(),
+                                            F.col(id_col).asc())
+    return (df.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k))
+
+
+def _rerank(cand: DataFrame, k: int, id_col: str, vec_col: str,
+            qid_col: str, *keep: str) -> DataFrame:
+    """Exact cosine over (qid, qv, id, vec) candidates, then the top k:
+    (qid, id, *keep, sim, rank)."""
+    pairs = cand.select(qid_col, id_col, *keep,
+                        cosine(F.col("qv"), F.col(vec_col)).alias("sim"))
+    return _top_k(pairs, "sim", k, id_col, qid_col)
+
+
+def _probes(queries: DataFrame, assign, keys: tuple[str, ...],
+            id_col: str, vec_col: str, qid_col: str) -> DataFrame:
+    """Run a corpus-side assigner (``srp_buckets``/``ivf_assignments``)
+    over the query frame: (qid, qv, q_<key> for each key column)."""
+    out = assign(queries.select(F.col(qid_col).alias(id_col),
+                                F.col("qv").alias(vec_col)))
+    return out.select(F.col(id_col).alias(qid_col), F.col(vec_col).alias("qv"),
+                      *[F.col(c).alias(f"q_{c}") for c in keys])
+
+
+def _probe_top_k(index: DataFrame, queries: DataFrame, assign,
+                 keys: tuple[str, ...], k: int, id_col: str, vec_col: str,
+                 qid_col: str, corpus: DataFrame | None = None
+                 ) -> DataFrame:
+    """The SRP/IVF serve tail: index rows that share every ``keys``
+    value with one of a query's probe rows are its candidates (once per
+    pair, self excluded), re-ranked by exact cosine. A stored index
+    holds no vectors; ``corpus`` then supplies them by id."""
+    probes = _probes(queries, assign, keys, id_col, vec_col, qid_col)
+    cond = F.col(keys[0]) == F.col(f"q_{keys[0]}")
+    for c in keys[1:]:
+        cond = cond & (F.col(c) == F.col(f"q_{c}"))
+    cols = [qid_col, "qv", id_col] + ([vec_col] if corpus is None else [])
+    cand = (index.join(F.broadcast(probes),
+                       cond & (F.col(qid_col) != F.col(id_col)))
+            .select(*cols).dropDuplicates([qid_col, id_col]))
+    if corpus is not None:
+        cand = cand.join(corpus.select(id_col, vec_col), id_col)
+    return _rerank(cand, k, id_col, vec_col, qid_col)
+
+
+# -- brute force -------------------------------------------------------
 
 def topk_bruteforce(corpus: DataFrame, queries: DataFrame, k: int = 10,
                     id_col: str = "vec_id", vec_col: str = "embedding",
@@ -69,66 +199,39 @@ def topk_bruteforce(corpus: DataFrame, queries: DataFrame, k: int = 10,
     never shuffles. Ranking window partitions by qid (k small -> window
     state tiny); ties broken by neighbor id for determinism.
     """
-    from ..session import widen_scan
     # widen: the per-row dot-product fold (64 double multiplies per
     # query) is CPU-bound; an under-split corpus scan serializes it
     # (12 of 32 cores at the 100x point). No-op at real scan widths.
     corpus = widen_scan(valid_vectors(corpus, vec_col))
     queries = valid_vectors(queries, "qv")
-    pairs = (corpus.join(F.broadcast(queries),
-                         F.col(qid_col) != F.col(id_col))
-             .select(qid_col, id_col,
-                     cosine(F.col("qv"), F.col(vec_col)).alias("sim")))
-    w = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(),
-                                            F.col(id_col).asc())
-    return (pairs.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    pairs = corpus.join(F.broadcast(queries),
+                        F.col(qid_col) != F.col(id_col))
+    return _rerank(pairs, k, id_col, vec_col, qid_col)
 
 
 def seq_cosine_udf():
-    """Arrow-batched cosine over two array columns: vectorized across the
-    batch, SEQUENTIAL left-to-right over dimensions in float64 — the same
-    IEEE op order as the ``cosine()`` expression fold and DuckDB's
-    ``list_reduce``, so values stay bit-identical to the SQL oracle while
-    running ~5x faster than the interpreted per-element lambda on pair
-    frames (measured on the 20k-pair near-dup verify at sf0.01)."""
-    from pyspark.sql.functions import pandas_udf
-
-    def _fold_dot(x: np.ndarray, y: np.ndarray) -> np.ndarray:
-        acc = np.zeros(x.shape[0])
-        for d in range(x.shape[1]):          # sequential over dims
-            acc = acc + x[:, d] * y[:, d]
-        return acc
+    """Arrow-batched cosine over two array columns, vectorised across the
+    batch and folded by the module's sequential-fold rule, so values
+    equal the ``cosine()`` expression and the SQL oracle bit for bit
+    while running ~5x faster than the interpreted per-element lambda on
+    pair frames (measured on the 20k-pair near-dup verify at sf0.01)."""
 
     @pandas_udf("double")
     def seq_cosine(va: pd.Series, vb: pd.Series) -> pd.Series:
         if len(va) == 0:
             return pd.Series([], dtype="float64")
         lens = {len(v) for v in va} | {len(v) for v in vb}
-        if len(lens) != 1 or lens == {0}:
-            # ragged batch (corrupt upstream vectors): score each pair
-            # only when lengths agree and are nonzero; NaN otherwise -
-            # NaN fails every >= threshold comparison, so corrupt rows
-            # self-exclude (fuzz-sweep hardening, never hit on clean
-            # corpora where the fast homogeneous path below runs).
-            out = []
-            for x, y in zip(va, vb):
-                if len(x) == len(y) and len(x) > 0:
-                    xa = np.asarray(x, dtype=np.float64)[None, :]
-                    ya = np.asarray(y, dtype=np.float64)[None, :]
-                    denom = float(np.sqrt(_fold_dot(xa, xa))
-                                  * np.sqrt(_fold_dot(ya, ya)))
-                    out.append(float(_fold_dot(xa, ya)[0]) / denom
-                               if denom > 0 else float("nan"))
-                else:
-                    out.append(float("nan"))
-            return pd.Series(out, dtype="float64")
-        a = np.stack(va.to_numpy()).astype(np.float64)
-        b = np.stack(vb.to_numpy()).astype(np.float64)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            sims = _fold_dot(a, b) / (np.sqrt(_fold_dot(a, a))
-                                      * np.sqrt(_fold_dot(b, b)))
-        return pd.Series(sims)
+        if len(lens) == 1 and lens != {0}:
+            return pd.Series(_cosine(_matrix(va), _matrix(vb)))
+        # ragged batch (corrupt upstream vectors): score each pair only
+        # when lengths agree and are nonzero; NaN otherwise - NaN fails
+        # every >= threshold comparison, so corrupt rows self-exclude
+        # (fuzz-sweep hardening, never hit on clean corpora).
+        return pd.Series(
+            [float(_cosine(np.asarray(x, dtype=np.float64),
+                           np.asarray(y, dtype=np.float64)))
+             if len(x) == len(y) and len(x) > 0 else np.nan
+             for x, y in zip(va, vb)], dtype="float64")
 
     return seq_cosine
 
@@ -152,6 +255,8 @@ def cosine_near_dup_pairs(df: DataFrame, threshold: float = 0.9,
             .filter(F.col("sim") >= threshold))
 
 
+# -- SRP ---------------------------------------------------------------
+
 def _hyperplane(dim: int, plane: int) -> list[float]:
     """Deterministic pseudo-random hyperplane from md5 bytes (no RNG state,
     reproducible across runs/engines/partitions)."""
@@ -167,46 +272,27 @@ def _hyperplane(dim: int, plane: int) -> list[float]:
 def srp_buckets(df: DataFrame, dim: int, bits: int = 16, tables: int = 1,
                 id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Multi-table signed-random-projection bucketing: per table t, the
-    bucket key packs ``bits`` sign bits of hyperplane projections. Output
-    is one row per (vector, table) - candidates share (table_id,
-    bucket_key). More tables -> higher recall at linear cost.
+    bucket key packs ``bits`` sign bits of hyperplane projections (plane
+    t*bits + b is bit b). Output is one row per (vector, table) -
+    candidates share (table_id, bucket_key). More tables -> higher
+    recall at linear cost.
 
     The projection is a vectorized Pandas UDF - the canonical case where
     built-in expressions can't express the computation efficiently:
     tables x bits hyperplanes as native per-element folds build an
     enormous interpreted expression (measured minutes for 24 planes on
     500 vectors); the numpy version is milliseconds.
-
-    The per-plane projection accumulates SEQUENTIALLY over dimensions
-    (dim vectorized adds, left to right, in float64) rather than as one
-    matmul: matmul uses blocked/SIMD summation whose order differs from
-    a sequential fold, and the sign of a near-zero projection could then
-    differ from the SQL oracle's list_reduce fold. Sequential order makes
-    the bucket keys bit-reproducible by DuckDB (md5-derived planes +
-    left-to-right fold), which is what upgrades the driver check from
-    rows-only to value-hash.
     """
-    from pyspark.sql.functions import pandas_udf
-
-    planes = np.array(
-        [_hyperplane(dim, j) for j in range(tables * bits)]).T  # (dim, T*B)
+    planes = np.array([_hyperplane(dim, j) for j in range(tables * bits)])
+    weights = 1 << np.arange(bits, dtype=np.int64)
 
     @pandas_udf("array<long>")
     def bucket_keys(embs: pd.Series) -> pd.Series:
         if len(embs) == 0:
             return pd.Series([], dtype="object")
-        mat = np.stack(embs.to_numpy()).astype(np.float64)  # (n, dim)
-        proj = np.zeros((mat.shape[0], planes.shape[1]))
-        for d in range(planes.shape[0]):      # sequential over dims
-            proj += mat[:, d:d + 1] * planes[d:d + 1, :]
-        signs = proj >= 0                                    # (n, T*B)
-        weights = (1 << np.arange(bits, dtype=np.int64))
-        out = [
-            [int(signs[r, t * bits:(t + 1) * bits] @ weights)
-             for t in range(tables)]
-            for r in range(signs.shape[0])
-        ]
-        return pd.Series(out)
+        mat = _matrix(embs)                                  # (n, dim)
+        signs = _seq_dot(mat[:, None, :], planes[None]) >= 0  # (n, T*B)
+        return _rows(signs.reshape(len(mat), tables, bits) @ weights)
 
     df = valid_vectors(df, vec_col, dim)
     return (df.select(id_col, vec_col,
@@ -214,48 +300,47 @@ def srp_buckets(df: DataFrame, dim: int, bits: int = 16, tables: int = 1,
                       .alias("table_id", "bucket_key")))
 
 
+def topk_ann_srp(corpus: DataFrame, queries: DataFrame, dim: int,
+                 k: int = 10, bits: int = 8, tables: int = 4,
+                 id_col: str = "vec_id", vec_col: str = "embedding",
+                 qid_col: str = "qid") -> DataFrame:
+    """ANN top-k: SRP-bucket the corpus once (L tables), probe with the
+    query's buckets, distinct candidates, exact cosine re-rank. Recall < 1
+    by design (tunable via bits x tables); bruteforce is the exactness
+    baseline. At 100 TB the bucketed equi-join replaces the corpus-wide
+    cross product and the corpus side shuffles only on bucket keys."""
+    def assign(df):
+        return srp_buckets(df, dim, bits, tables, id_col, vec_col)
+    return _probe_top_k(assign(corpus), queries, assign,
+                        ("table_id", "bucket_key"), k, id_col, vec_col,
+                        qid_col)
+
+
+# -- IVF ---------------------------------------------------------------
+
 def ivf_assignments(df: DataFrame, centroids: np.ndarray, nprobe: int = 1,
                     id_col: str = "vec_id",
                     vec_col: str = "embedding") -> DataFrame:
     """Assign each vector to its ``nprobe`` nearest centroids (cosine) via
     one Arrow-batched numpy pass against the broadcast centroid matrix — no
     shuffle, no per-centroid scan. Output: (id, vec, centroid_id) with one
-    row per probe. Ties broken by centroid index (argsort is stable).
-
-    Arithmetic is ordered for oracle reproducibility: cosine =
-    seq_dot(v, c) / (sqrt(seq_dot(v, v)) * sqrt(seq_dot(c, c))) with every
-    dot a sequential left-to-right fold over dimensions in float64 —
-    bit-identical to DuckDB's list_reduce, so the cell assignment (and
+    row per probe. Ties broken by centroid index (argsort is stable). The
+    cosine follows the sequential-fold rule, so the cell assignment (and
     hence the whole IVF candidate set) is value-checkable by SQL."""
-    from pyspark.sql.functions import pandas_udf
-
     if nprobe < 1:
         # argsort[:, :0] would assign ZERO probes and every downstream
         # serve would silently return no neighbors — contract error.
         raise ValueError(f"nprobe must be >= 1, got {nprobe}")
     cm = np.asarray(centroids, dtype=np.float64)                 # (k, dim)
 
-    def _seq_dot(a, b):
-        # sequential fold over dims, vectorized over rows/planes
-        acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
-        for d in range(a.shape[-1]):
-            acc = acc + a[..., d] * b[..., d]
-        return acc
-
-    c_norm = np.sqrt(_seq_dot(cm, cm))                           # (k,)
-
     @pandas_udf("array<long>")
     def nearest(embs: pd.Series) -> pd.Series:
         if len(embs) == 0:
             return pd.Series([], dtype="object")
-        mat = np.stack(embs.to_numpy()).astype(np.float64)       # (n, dim)
-        v_norm = np.sqrt(_seq_dot(mat, mat))                     # (n,)
-        dots = _seq_dot(mat[:, None, :], cm[None, :, :])         # (n, k)
-        sims = dots / (v_norm[:, None] * c_norm[None, :])
-        top = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
-        return pd.Series([[int(c) for c in row] for row in top])
+        sims = _cosine(_matrix(embs)[:, None, :], cm[None])     # (n, k)
+        return _rows(np.argsort(-sims, axis=1, kind="stable")[:, :nprobe])
 
-    df = valid_vectors(df, vec_col, int(cm.shape[1]) if cm.size else None)
+    df = valid_vectors(df, vec_col, int(cm.shape[1]) if cm.ndim == 2 else None)
     return df.select(id_col, vec_col,
                      F.explode(nearest(F.col(vec_col))).alias("centroid_id"))
 
@@ -265,12 +350,11 @@ def ivf_centroids(corpus: DataFrame, n_centroids: int, dim: int,
                   vec_col: str = "embedding") -> np.ndarray:
     """Deterministic IVF codebook: seed with the ``n_centroids`` smallest
     ids (reproducible without RNG state), then ``refine_steps`` Lloyd
-    iterations — each is one distributed assign (matmul UDF) + one groupBy
+    iterations — each is one distributed assign (numpy UDF) + one groupBy
     mean per (centroid, position) — the k-means training loop expressed as
-    Spark aggregates, driver holding only the (k, dim) codebook."""
-    seeds = (valid_vectors(corpus, vec_col, dim).orderBy(id_col)
-             .limit(n_centroids).select(vec_col).collect())
-    cent = np.array([r[0] for r in seeds], dtype=np.float64)
+    Spark aggregates, driver holding only the (k, dim) codebook (0 rows on
+    an empty corpus)."""
+    cent = _seed_vectors(corpus, n_centroids, dim, id_col, vec_col)
     for _ in range(refine_steps):
         assigned = ivf_assignments(corpus, cent, nprobe=1, id_col=id_col,
                                    vec_col=vec_col)
@@ -280,14 +364,9 @@ def ivf_centroids(corpus: DataFrame, n_centroids: int, dim: int,
                  .groupBy("centroid_id", "pos")
                  .agg(F.avg("val").alias("m"))
                  .collect())
-        nxt = cent.copy()
-        by_c: dict[int, dict[int, float]] = {}
+        cent = cent.copy()
         for r in means:
-            by_c.setdefault(r.centroid_id, {})[r.pos] = r.m
-        for cid, posmap in by_c.items():
-            for pos, m in posmap.items():
-                nxt[cid, pos] = m
-        cent = nxt
+            cent[r.centroid_id, r.pos] = r.m
     return cent
 
 
@@ -307,54 +386,13 @@ def topk_ann_ivf(corpus: DataFrame, queries: DataFrame, dim: int,
                          id_col=id_col, vec_col=vec_col)
     inv = ivf_assignments(corpus, cent, nprobe=1, id_col=id_col,
                           vec_col=vec_col)
-    probes = ivf_assignments(
-        queries.select(F.col(qid_col).alias(id_col),
-                       F.col("qv").alias(vec_col)),
-        cent, nprobe=nprobe, id_col=id_col, vec_col=vec_col) \
-        .select(F.col(id_col).alias(qid_col), F.col(vec_col).alias("qv"),
-                F.col("centroid_id").alias("probe_centroid"))
-    cand = (inv.join(F.broadcast(probes),
-                     (F.col("centroid_id") == F.col("probe_centroid")) &
-                     (F.col(qid_col) != F.col(id_col)))
-            .select(qid_col, "qv", id_col, vec_col)
-            .dropDuplicates([qid_col, id_col]))
-    pairs = cand.select(qid_col, id_col,
-                        cosine(F.col("qv"), F.col(vec_col)).alias("sim"))
-    w = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(),
-                                            F.col(id_col).asc())
-    return (pairs.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
+    return _probe_top_k(
+        inv, queries,
+        lambda q: ivf_assignments(q, cent, nprobe, id_col, vec_col),
+        ("centroid_id",), k, id_col, vec_col, qid_col)
 
 
-def topk_ann_srp(corpus: DataFrame, queries: DataFrame, dim: int,
-                 k: int = 10, bits: int = 8, tables: int = 4,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 qid_col: str = "qid") -> DataFrame:
-    """ANN top-k: SRP-bucket the corpus once (L tables), probe with the
-    query's buckets, distinct candidates, exact cosine re-rank. Recall < 1
-    by design (tunable via bits x tables); bruteforce is the exactness
-    baseline. At 100 TB the bucketed equi-join replaces the corpus-wide
-    cross product and the corpus side shuffles only on bucket keys."""
-    bucketed = srp_buckets(corpus, dim, bits, tables, id_col, vec_col)
-    qb = srp_buckets(queries.select(F.col(qid_col).alias(id_col),
-                                    F.col("qv").alias(vec_col)),
-                     dim, bits, tables, id_col, vec_col) \
-        .select(F.col(id_col).alias(qid_col), F.col(vec_col).alias("qv"),
-                F.col("table_id").alias("q_table"),
-                F.col("bucket_key").alias("q_bucket"))
-    cand = (bucketed.join(F.broadcast(qb),
-                          (F.col("table_id") == F.col("q_table")) &
-                          (F.col("bucket_key") == F.col("q_bucket")) &
-                          (F.col(qid_col) != F.col(id_col)))
-            .select(qid_col, "qv", id_col, vec_col)
-            .dropDuplicates([qid_col, id_col]))
-    pairs = cand.select(qid_col, id_col,
-                        cosine(F.col("qv"), F.col(vec_col)).alias("sim"))
-    w = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(),
-                                            F.col(id_col).asc())
-    return (pairs.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k))
-
+# -- MMR ---------------------------------------------------------------
 
 def pairwise_cosine(vecs: DataFrame, id_col: str = "vec_id",
                     vec_col: str = "embedding") -> DataFrame:
@@ -415,6 +453,8 @@ def mmr_rerank(corpus: DataFrame, query: DataFrame, pool: int = 12,
     return selected
 
 
+# -- PQ and IVF-PQ -----------------------------------------------------
+
 def pq_codebooks(corpus: DataFrame, n_codewords: int = 16, m_sub: int = 4,
                  dim: int = 64, id_col: str = "vec_id",
                  vec_col: str = "embedding") -> np.ndarray:
@@ -423,47 +463,37 @@ def pq_codebooks(corpus: DataFrame, n_codewords: int = 16, m_sub: int = 4,
     ``n_codewords`` lowest-id vectors (deterministic seeding, same
     convention as ivf_centroids refine_steps=0 - no RNG, no
     order-dependent float means, so the SQL oracle reproduces the
-    codebooks exactly). Returns (m_sub, n_codewords, dim/m_sub).
-    Driver holds only the codebook (k x dim floats), never the corpus."""
-    seeds = (valid_vectors(corpus, vec_col, dim).orderBy(id_col)
-             .limit(n_codewords).select(vec_col).collect())
-    cb = np.array([r[0] for r in seeds], dtype=np.float64)   # (K, dim)
-    s = dim // m_sub
-    if cb.shape[0] == 0:                    # empty corpus: empty codebook
-        return np.zeros((m_sub, 0, s))
-    return cb.reshape(cb.shape[0], m_sub, s).transpose(1, 0, 2)
+    codebooks exactly). Returns (m_sub, n_codewords, dim/m_sub), with 0
+    codewords on an empty corpus. Driver holds only the codebook
+    (k x dim floats), never the corpus."""
+    cb = _seed_vectors(corpus, n_codewords, dim, id_col, vec_col)
+    return cb.reshape(len(cb), m_sub, dim // m_sub).transpose(1, 0, 2)
 
 
 def pq_encode(corpus: DataFrame, codebooks: np.ndarray,
               id_col: str = "vec_id",
               vec_col: str = "embedding") -> DataFrame:
     """Encode every vector as ``m_sub`` one-byte codes: per subspace,
-    the codeword minimizing squared L2 distance (sequential fold over
-    the subspace dims in float64; ties -> lowest codeword index, numpy
-    argmin first-occurrence == SQL ORDER BY d, c). One Arrow-batched
-    map pass, no shuffle: this is the compression step that turns a
-    256-byte float vector into m_sub bytes - the representation a
-    billion-vector corpus actually stores."""
-    from pyspark.sql.functions import pandas_udf
-
-    cb = np.ascontiguousarray(codebooks)            # (m, K, s)
+    the codeword minimizing squared L2 distance (ties -> lowest codeword
+    index, numpy argmin first-occurrence == SQL ORDER BY d, c). One
+    Arrow-batched map pass, no shuffle: this is the compression step
+    that turns a 256-byte float vector into m_sub bytes - the
+    representation a billion-vector corpus actually stores."""
+    cb = np.asarray(codebooks, dtype=np.float64)             # (m, K, s)
     m_sub, _, s = cb.shape
 
     @pandas_udf("array<int>")
     def encode(embs: pd.Series) -> pd.Series:
         if len(embs) == 0:
             return pd.Series([], dtype="object")
-        mat = np.stack(embs.to_numpy()).astype(np.float64)   # (n, dim)
-        n = mat.shape[0]
-        codes = np.zeros((n, m_sub), dtype=np.int64)
-        for m in range(m_sub):
-            sub = mat[:, m * s:(m + 1) * s]                  # (n, s)
-            acc = np.zeros((n, cb.shape[1]))
-            for i in range(s):                   # sequential over dims
-                diff = sub[:, i:i + 1] - cb[m, None, :, i]
-                acc = acc + diff * diff
-            codes[:, m] = np.argmin(acc, axis=1)  # first occurrence
-        return pd.Series([[int(c) for c in row] for row in codes])
+        sub = _matrix(embs).reshape(len(embs), m_sub, 1, s)
+
+        def sq_diff(i):
+            d = sub[..., i] - cb[None, :, :, i]              # (n, m, K)
+            return d * d
+
+        dist = _seq_sum(s, sq_diff)
+        return _rows(np.argmin(dist, axis=2).astype(np.int32))
 
     corpus = valid_vectors(corpus, vec_col, int(m_sub * s))
     return corpus.select(id_col, vec_col, encode(F.col(vec_col))
@@ -490,12 +520,9 @@ def topk_ann_pq(corpus: DataFrame, queries: DataFrame, dim: int = 64,
     scoring pass touches only (id, m_sub bytes) - at a billion vectors
     that is GBs instead of TBs, and the ADC pass is a narrow map over
     codes with the tiny per-query tables broadcast. Compose with the
-    IVF inverted file (topk_ann_ivf) for cell-pruned IVF-PQ. Every
-    float op is an explicit sequential fold (dims, then subspaces), so
-    the DuckDB oracle reproduces codes, ADC scores, pool membership,
-    and the re-ranked result bit-for-bit."""
-    from pyspark.sql.functions import pandas_udf
-
+    IVF inverted file (topk_ann_ivf) for cell-pruned IVF-PQ. The
+    DuckDB oracle reproduces codes, ADC scores, pool membership, and
+    the re-ranked result bit-for-bit."""
     cb = pq_codebooks(corpus, n_codewords, m_sub, dim, id_col, vec_col)
     codes = pq_encode(corpus, cb, id_col, vec_col)
     return pq_adc_topk(codes, cb, corpus, queries, dim=dim, k=k, pool=pool,
@@ -519,12 +546,9 @@ def topk_ann_ivfpq(corpus: DataFrame, queries: DataFrame, dim: int = 64,
     (nprobe/n_centroids for recall-vs-cells, pool for rerank cost).
 
     Exactness discipline matches the parents: pinned seed centroids and
-    codebooks (refine_steps=0 for the oracle entry), sequential-fold
-    float64 everywhere, ADC summed in fixed subspace order, ties on
-    ids - so cells, probes, codes, ADC scores, pool membership and the
-    final ranking are all reproduced bit-exactly by the SQL oracle."""
-    from pyspark.sql.functions import pandas_udf
-
+    codebooks (refine_steps=0 for the oracle entry) and ties on ids, so
+    cells, probes, codes, ADC scores, pool membership and the final
+    ranking are all reproduced bit-exactly by the SQL oracle."""
     cent = ivf_centroids(corpus, n_centroids, dim,
                          refine_steps=refine_steps,
                          id_col=id_col, vec_col=vec_col)
@@ -538,6 +562,51 @@ def topk_ann_ivfpq(corpus: DataFrame, queries: DataFrame, dim: int = 64,
                           max_query_batch=max_query_batch)
 
 
+def _adc_tables(queries: DataFrame, cb: np.ndarray, dim: int, m_sub: int,
+                qid_col: str, max_query_batch: int, caller: str):
+    """Collect the query batch and build its ADC tables: (valid queries,
+    qids in order, (Q, m_sub, K) tables), or None when there is nothing
+    to score (no queries, or a codebook without codewords).
+
+    The tables live on the driver (Q x m_sub x K floats) and are
+    closure-broadcast into the scoring UDF - bounded by design for query
+    BATCHES, so an unbounded query frame fails loudly here rather than
+    OOM the driver. K is the actual codeword count: pq_codebooks seeds
+    from the corpus, so a corpus smaller than n_codewords yields fewer
+    (sizing the tables to the request broke numpy broadcasting on tiny
+    input)."""
+    queries = valid_vectors(queries, "qv", dim)
+    qrows = queries.limit(max_query_batch + 1).orderBy(qid_col).collect()
+    if len(qrows) > max_query_batch:
+        raise ValueError(
+            f"{caller} query batch exceeds max_query_batch="
+            f"{max_query_batch}; chunk the query set (the ADC tables "
+            "are driver-resident per batch)")
+    if cb.shape[1] == 0 or not qrows:
+        return None
+    s = cb.shape[2]
+    qmat = np.array([r["qv"] for r in qrows], dtype=np.float64)
+    qsub = qmat[:, :m_sub * s].reshape(len(qrows), m_sub, 1, s)
+    return queries, [r[qid_col] for r in qrows], _seq_dot(qsub, cb[None])
+
+
+def _adc_empty(corpus: DataFrame, id_col: str, qid_col: str) -> DataFrame:
+    return local_frame(corpus.sparkSession, [],
+                       f"{qid_col} long, {id_col} long, adc double, "
+                       "sim double, rank int")
+
+
+def _adc_rerank(scored: DataFrame, corpus: DataFrame, queries: DataFrame,
+                pool: int, k: int, id_col: str, vec_col: str,
+                qid_col: str) -> DataFrame:
+    """Keep the ADC top-``pool`` per query, fetch their vectors and
+    re-rank them by exact cosine: (qid, id, adc, sim, rank)."""
+    pooled = _top_k(scored, "adc", pool, id_col, qid_col).drop("rank")
+    cand = (pooled.join(corpus.select(id_col, vec_col), id_col)
+            .join(F.broadcast(queries), qid_col))
+    return _rerank(cand, k, id_col, vec_col, qid_col, "adc")
+
+
 def ivfpq_adc_topk(inv: DataFrame, codes: DataFrame, cb: np.ndarray,
                    cent: np.ndarray, corpus: DataFrame,
                    queries: DataFrame, dim: int = 64, k: int = 10,
@@ -549,49 +618,28 @@ def ivfpq_adc_topk(inv: DataFrame, codes: DataFrame, cb: np.ndarray,
     file (``inv``: id -> cell) and code table: the serve half of
     :func:`topk_ann_ivfpq`, shared with the persisted-index path
     (operators/ann_index.py loads all four artifacts from parquet)."""
-    from pyspark.sql.functions import pandas_udf
-
-    s = dim // m_sub
-    queries = valid_vectors(queries, 'qv', dim)
-    qrows = queries.limit(max_query_batch + 1).orderBy(qid_col).collect()
-    if len(qrows) > max_query_batch:
-        raise ValueError(
-            f"topk_ann_ivfpq query batch exceeds max_query_batch="
-            f"{max_query_batch}; chunk the query set")
-    if cb.shape[1] == 0 or not qrows:
-        return corpus.sparkSession.createDataFrame(
-            [], f"{qid_col} long, {id_col} long, adc double, sim double, "
-                "rank int")
-    qids = [r[qid_col] for r in qrows]
-    qmat = np.array([r["qv"] for r in qrows], dtype=np.float64)
-    tables = np.zeros((len(qids), m_sub, cb.shape[1]))
-    for m in range(m_sub):
-        for i in range(s):                       # sequential over dims
-            tables[:, m, :] = (tables[:, m, :]
-                               + qmat[:, m * s + i, None] * cb[None, m, :, i])
-
-    probes = ivf_assignments(
-        queries.select(F.col(qid_col).alias(id_col),
-                       F.col("qv").alias(vec_col)),
-        cent, nprobe=nprobe, id_col=id_col, vec_col=vec_col) \
-        .select(F.col(id_col).alias(qid_col),
-                F.col("centroid_id").alias("probe_centroid"))
+    batch = _adc_tables(queries, cb, dim, m_sub, qid_col, max_query_batch,
+                        "topk_ann_ivfpq")
+    if batch is None:
+        return _adc_empty(corpus, id_col, qid_col)
+    queries, qids, tables = batch
+    probes = _probes(queries,
+                     lambda q: ivf_assignments(q, cent, nprobe, id_col,
+                                               vec_col),
+                     ("centroid_id",), id_col, vec_col, qid_col)
 
     @pandas_udf("double")
     def adc_pair(codes_col: pd.Series, qidx_col: pd.Series) -> pd.Series:
         if len(codes_col) == 0:
             return pd.Series([], dtype="float64")
-        cmat = np.stack(codes_col.to_numpy()).astype(np.int64)
+        cmat = _matrix(codes_col, np.int64)
         qi = qidx_col.to_numpy().astype(np.int64)
-        acc = np.zeros(cmat.shape[0])
-        for m in range(m_sub):              # fixed subspace order
-            acc = acc + tables[qi, m, cmat[:, m]]
-        return pd.Series(acc)
+        return pd.Series(_seq_sum(m_sub, lambda m: tables[qi, m, cmat[:, m]]))
 
     qid_arr = F.array(*[F.lit(q) for q in qids])
     cand = (codes.join(inv, id_col)
             .join(F.broadcast(probes),
-                  (F.col("centroid_id") == F.col("probe_centroid")) &
+                  (F.col("centroid_id") == F.col("q_centroid_id")) &
                   (F.col(qid_col) != F.col(id_col)))
             .select(qid_col, id_col, "codes"))
     scored = cand.select(
@@ -599,19 +647,8 @@ def ivfpq_adc_topk(inv: DataFrame, codes: DataFrame, cb: np.ndarray,
         adc_pair(F.col("codes"),
                  F.array_position(qid_arr, F.col(qid_col)) - 1)
         .alias("adc"))
-    w_pool = Window.partitionBy(qid_col).orderBy(F.col("adc").desc(),
-                                                 F.col(id_col).asc())
-    pooled = (scored.withColumn("prn", F.row_number().over(w_pool))
-              .filter(F.col("prn") <= pool).drop("prn"))
-    rerank = (pooled
-              .join(corpus.select(id_col, vec_col), id_col)
-              .join(F.broadcast(queries), qid_col)
-              .select(qid_col, id_col, "adc",
-                      cosine(F.col("qv"), F.col(vec_col)).alias("sim")))
-    w_k = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(),
-                                              F.col(id_col).asc())
-    return (rerank.withColumn("rank", F.row_number().over(w_k))
-            .filter(F.col("rank") <= k))
+    return _adc_rerank(scored, corpus, queries, pool, k, id_col, vec_col,
+                       qid_col)
 
 
 def pq_adc_topk(codes: DataFrame, cb: np.ndarray, corpus: DataFrame,
@@ -622,46 +659,20 @@ def pq_adc_topk(codes: DataFrame, cb: np.ndarray, corpus: DataFrame,
     """ADC scoring + exact re-rank over an ALREADY-ENCODED corpus: the
     serve half of :func:`topk_ann_pq`, shared with the persisted-index
     path (operators/ann_index.py loads ``codes`` and ``cb`` from parquet
-    instead of recomputing them)."""
-    from pyspark.sql.functions import pandas_udf
-
-    s = dim // m_sub
-    # The ADC tables live on the driver (Q x m_sub x K floats) and are
-    # closure-broadcast into the scoring UDF - bounded by design for
-    # query BATCHES, so an unbounded query frame must fail loudly here
-    # rather than OOM the driver. Large query sets: chunk the callers.
-    queries = valid_vectors(queries, 'qv', dim)
-    qrows = queries.limit(max_query_batch + 1).orderBy(qid_col).collect()
-    if len(qrows) > max_query_batch:
-        raise ValueError(
-            f"topk_ann_pq query batch exceeds max_query_batch="
-            f"{max_query_batch}; chunk the query set (the ADC tables "
-            "are driver-resident per batch)")
-    if cb.shape[1] == 0 or not qrows:
-        # empty corpus or no queries: empty result, stable schema
-        return corpus.sparkSession.createDataFrame(
-            [], f"{qid_col} long, {id_col} long, adc double, sim double, "
-                "rank int")
-    qids = [r[qid_col] for r in qrows]
-    qmat = np.array([r["qv"] for r in qrows], dtype=np.float64)  # (Q, dim)
-    # K = actual codewords: pq_codebooks seeds from the corpus, so a
-    # corpus smaller than n_codewords yields fewer (r4 advice: sizing
-    # the tables to the REQUEST broke numpy broadcasting on tiny input)
-    tables = np.zeros((len(qids), m_sub, cb.shape[1]))
-    for m in range(m_sub):
-        for i in range(s):                       # sequential over dims
-            tables[:, m, :] = (tables[:, m, :]
-                               + qmat[:, m * s + i, None] * cb[None, m, :, i])
+    instead of recomputing them). Every code row is scored against the
+    whole query batch in one pass."""
+    batch = _adc_tables(queries, cb, dim, m_sub, qid_col, max_query_batch,
+                        "topk_ann_pq")
+    if batch is None:
+        return _adc_empty(corpus, id_col, qid_col)
+    queries, qids, tables = batch
 
     @pandas_udf("array<double>")
     def adc(codes_col: pd.Series) -> pd.Series:
         if len(codes_col) == 0:
             return pd.Series([], dtype="object")
-        cmat = np.stack(codes_col.to_numpy()).astype(np.int64)  # (n, m)
-        acc = np.zeros((cmat.shape[0], tables.shape[0]))        # (n, Q)
-        for m in range(m_sub):                  # sequential over subspaces
-            acc = acc + tables[:, m, cmat[:, m]].T
-        return pd.Series([[float(v) for v in row] for row in acc])
+        cmat = _matrix(codes_col, np.int64)                  # (n, m)
+        return _rows(_seq_sum(m_sub, lambda m: tables[:, m, cmat[:, m]].T))
 
     qid_map = F.array(*[F.lit(q) for q in qids])
     scored = (codes.select(id_col,
@@ -670,16 +681,5 @@ def pq_adc_topk(codes: DataFrame, cb: np.ndarray, corpus: DataFrame,
               .select(id_col, F.element_at(qid_map, F.col("qidx") + 1)
                       .alias(qid_col), "adc")
               .filter(F.col(qid_col) != F.col(id_col)))
-    w_pool = Window.partitionBy(qid_col).orderBy(F.col("adc").desc(),
-                                                 F.col(id_col).asc())
-    pooled = (scored.withColumn("prn", F.row_number().over(w_pool))
-              .filter(F.col("prn") <= pool).drop("prn"))
-    rerank = (pooled
-              .join(corpus.select(id_col, vec_col), id_col)
-              .join(F.broadcast(queries), qid_col)
-              .select(qid_col, id_col, "adc",
-                      cosine(F.col("qv"), F.col(vec_col)).alias("sim")))
-    w_k = Window.partitionBy(qid_col).orderBy(F.col("sim").desc(),
-                                              F.col(id_col).asc())
-    return (rerank.withColumn("rank", F.row_number().over(w_k))
-            .filter(F.col("rank") <= k))
+    return _adc_rerank(scored, corpus, queries, pool, k, id_col, vec_col,
+                       qid_col)

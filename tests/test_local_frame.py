@@ -69,3 +69,16 @@ def test_dirty_df_is_a_local_relation(spark):
     assert df.schema["rid"].nullable is False
     assert [tuple(r) for r in df.orderBy("rid").collect()] == [
         row[1:] + (row[0],) for row in DIRTY_ROWS]
+
+
+@pytest.mark.parametrize("kind", ["pq", "ivfpq"])
+def test_empty_adc_result_is_a_local_relation(spark, kind):
+    from pyspark.sql import functions as F
+    from python_etl_rest_api_spark.operators import similarity
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    no_queries = emb.filter(F.col("vec_id") < 0).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
+    out = getattr(similarity, f"topk_ann_{kind}")(emb, no_queries, dim=64)
+    assert _plan_node(out) == "LocalRelation"
+    assert out.columns == ["qid", "vec_id", "adc", "sim", "rank"]
+    assert out.collect() == []

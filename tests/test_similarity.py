@@ -223,3 +223,124 @@ def test_pq_codes_match_numpy(spark):
             d = ((sub[None, :] - cb[m]) ** 2).sum(axis=1)
             want.append(int(np.argmin(d)))
         assert got[r["vec_id"]] == want
+
+
+ANN_EMPTY_COLUMNS = {
+    "srp": ["qid", "vec_id", "sim", "rank"],
+    "ivf": ["qid", "vec_id", "sim", "rank"],
+    "pq": ["qid", "vec_id", "adc", "sim", "rank"],
+    "ivfpq": ["qid", "vec_id", "adc", "sim", "rank"],
+}
+
+
+@pytest.mark.parametrize("kind", sorted(ANN_EMPTY_COLUMNS))
+def test_ann_empty_corpus_answers_empty(spark, kind):
+    """An empty corpus with a non-empty query set answers no rows in the
+    family's result columns (IVF used to fail in the probe UDF: its
+    codebook came back as shape (0,) instead of (0, dim))."""
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    q = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
+    # empty only at run time, so no plan rule prunes the probe side
+    empty = emb.filter(F.col("vec_id") < 0)
+    out = getattr(similarity, f"topk_ann_{kind}")(empty, q, dim=64, k=5)
+    assert out.columns == ANN_EMPTY_COLUMNS[kind]
+    assert out.collect() == []
+
+
+# -- fold order --------------------------------------------------------
+#
+# Each vector below puts one decision exactly on its boundary under the
+# left-to-right float64 fold: a big term, small terms that the fold
+# absorbs one at a time (each under half an ulp of the big term), then
+# the big term's negation. Any other summation order (pairwise, SIMD
+# lanes, fused multiply-add) lets the small terms or the product's
+# rounding error survive and lands on the other side, so a kernel moved
+# to matmul or np.dot fails here.
+
+FOLD_DIM = 16
+
+
+def _fold(xs, ys):
+    acc = 0.0
+    for x, y in zip(xs, ys):
+        acc = acc + x * y
+    return acc
+
+
+def _srp_boundary_vector(p):
+    """v with fold(v, p) == 0.0 exactly, where the exact sum is < 0 and
+    the last product is inexact (so an FMA fold also goes negative)."""
+    from fractions import Fraction
+    for k in range(1, 1024):
+        big = math.copysign(2.0 ** 80 * (1 + k / 1024), p[0])
+        head = p[0] * big
+        small = 0.4 * math.ulp(head)
+        last = -head / p[-1]
+        for step in range(-4, 5):
+            cand = last
+            for _ in range(abs(step)):
+                cand = math.nextafter(cand, math.copysign(math.inf, step))
+            if (p[-1] * cand == -head and
+                    Fraction(p[-1]) * Fraction(cand) < -Fraction(head)):
+                return ([big] + [-math.copysign(small / abs(x), x)
+                                 for x in p[1:-1]] + [cand])
+    raise AssertionError("no boundary vector found")
+
+
+def _vec_frame(spark, vecs):
+    return spark.createDataFrame(list(enumerate(vecs)),
+                                 "vec_id long, embedding array<double>")
+
+
+def test_srp_keys_follow_the_sequential_fold(spark):
+    bits = 4
+    planes = [similarity._hyperplane(FOLD_DIM, j) for j in range(bits)]
+    v = _srp_boundary_vector(planes[0])
+    assert _fold(v, planes[0]) == 0.0
+    assert math.fsum(a * b for a, b in zip(v, planes[0])) < -1e-15
+    want = sum(1 << b for b in range(bits) if _fold(v, planes[b]) >= 0)
+    assert want & 1                 # the boundary bit is set by the fold
+    got = similarity.srp_buckets(_vec_frame(spark, [v]), FOLD_DIM,
+                                 bits=bits).collect()
+    assert [r.bucket_key for r in got] == [want]
+
+
+def test_ivf_probe_follows_the_sequential_fold(spark):
+    head = 2.0 ** 60 * 1.375
+    small = -0.4 * math.ulp(head)
+    v = [head] + [small] * (FOLD_DIM - 3) + [-head, 0.0]
+    c_fold = [1.0] * (FOLD_DIM - 1) + [0.0]     # dot == 0.0 by the fold
+    c_zero = [0.0] * (FOLD_DIM - 1) + [1.0]     # dot == 0.0 in any order
+    assert _fold(v, c_fold) == 0.0 == _fold(v, c_zero)
+    assert math.fsum(a * b for a, b in zip(v, c_fold)) < -1e-15
+    cents = [c_fold, c_zero]
+    sims = [_fold(v, c) / (math.sqrt(_fold(v, v)) * math.sqrt(_fold(c, c)))
+            for c in cents]
+    want = sorted(range(len(cents)), key=lambda i: (-sims[i], i))[0]
+    assert want == 0                # the tie goes to the lower index
+    got = similarity.ivf_assignments(_vec_frame(spark, [v]), cents,
+                                     nprobe=1).collect()
+    assert [r.centroid_id for r in got] == [want]
+
+
+def test_pq_codes_follow_the_sequential_fold(spark):
+    import numpy as np
+    head = 2.0 ** 30 * 1.375
+    t = math.sqrt(0.4 * math.ulp(head * head))
+    x = [head] + [0.0] * (FOLD_DIM - 1)
+    c_fold = [0.0] + [t] * (FOLD_DIM - 1)   # head^2 + absorbed t^2 terms
+    c_zero = [0.0] * FOLD_DIM               # head^2 exactly
+
+    def dist(c):
+        d = [a - b for a, b in zip(x, c)]
+        return _fold(d, d)
+
+    assert dist(c_fold) == dist(c_zero)
+    assert math.fsum((a - b) ** 2 for a, b in zip(x, c_fold)) > dist(c_zero)
+    cents = [c_fold, c_zero]
+    want = min(range(len(cents)), key=lambda i: (dist(cents[i]), i))
+    assert want == 0
+    cb = np.array(cents)[None]          # (m_sub=1, K=2, s=FOLD_DIM)
+    got = similarity.pq_encode(_vec_frame(spark, [x]), cb).collect()
+    assert [r.codes for r in got] == [[want]]
