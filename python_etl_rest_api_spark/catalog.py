@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from .functions.cleaning import money
 from .operators import analytics
-from .session import tune
+from .session import local_frame, tune
 from .sources.tables import with_event_ts
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -442,7 +442,7 @@ def i3_set_difference(spark, sf_dir):
     """I3: 1..100 minus extracted, as a left-anti join (reference
     api/first100.py:27-29 set semantics, distributed form)."""
     full = spark.range(1, 101).withColumnRenamed("id", "n")
-    extracted = spark.createDataFrame([(7,), (42,), (57,)], "n long")
+    extracted = local_frame(spark, [(7,), (42,), (57,)], "n long")
     return full.join(extracted, "n", "left_anti")
 
 

@@ -5,8 +5,8 @@ strongest possible proof that index-path == recompute-path, since the
 driver value-hashes both against one SQL definition. Build-vs-serve
 amortization is measured in bench.py's ann-index section.
 
-The build is cached per sf_dir for the process lifetime (a dict of
-scratch paths): the four serve entries share one
+The build is made once per embeddings input (session.scratch_dir) and
+reused for the process lifetime: the four serve entries share one
 ``build_ann_index(..., kinds=ALL_KINDS)`` call, so a verification sweep
 pays the corpus-sized build cost ONCE (~6 s at sf0.1) and each entry
 verifies at serve cost (~1 s) - exactly how a production deployment
@@ -20,37 +20,30 @@ bit-identical to three solo builds.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from . import catalog_pipe  # noqa: F401 - registers the PQ oracle first
 from .catalog import ORACLES, _t, query
 from .catalog_ext import _IVF_ORACLE_SQL, _SRP_ORACLE_SQL
 from .operators import ann_index
+from .session import scratch_dir
 
-_INDEX_CACHE: dict[str, str] = {}
 
-
-def _emb_and_queries(spark, sf_dir):
+def _emb_queries_index(spark, sf_dir):
+    """The corpus, its first 3 vectors as queries, and the full-family
+    index all four serve entries read, built once per embeddings input.
+    Parameters match the recompute entries so the shared oracles stay
+    exact."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
-    return emb, queries
-
-
-def _shared_index(spark, sf_dir):
-    """Build (once per process per corpus) the full-family index all
-    four serve entries read. Parameters match the recompute entries so
-    the shared oracles stay exact."""
-    if sf_dir not in _INDEX_CACHE:
-        emb = _t(spark, sf_dir, "embeddings")
-        path = tempfile.mkdtemp(prefix="annidx_shared_")
-        ann_index.build_ann_index(
-            emb, path, dim=64, kinds=ann_index.ALL_KINDS, bits=6,
-            n_centroids=16, refine_steps=0, m_sub=4, n_codewords=16)
-        _INDEX_CACHE[sf_dir] = path
-    return _INDEX_CACHE[sf_dir]
+    path = scratch_dir(
+        "annidx_shared_",
+        lambda d: ann_index.build_ann_index(
+            emb, d, dim=64, kinds=ann_index.ALL_KINDS, bits=6,
+            n_centroids=16, refine_steps=0, m_sub=4, n_codewords=16),
+        [f"{sf_dir}/embeddings.parquet"])
+    return emb, queries, path
 
 
 @query("sim_ann_index_srp_serve", _SRP_ORACLE_SQL)
@@ -60,8 +53,7 @@ def sim_ann_index_srp_serve(spark, sf_dir):
     joins candidates back to the corpus by id). Same parameters and
     same oracle as sim_topk_ann_srp - a value-hash match proves the
     stored index reproduces the recompute path bit-for-bit."""
-    emb, queries = _emb_and_queries(spark, sf_dir)
-    path = _shared_index(spark, sf_dir)
+    emb, queries, path = _emb_queries_index(spark, sf_dir)
     return ann_index.topk_ann_srp_indexed(emb, queries, path, k=10) \
         .select("qid", "vec_id", "sim", "rank")
 
@@ -72,8 +64,7 @@ def sim_ann_index_ivf_serve(spark, sf_dir):
     (refine_steps=0 seed codebook, like the recompute entry, so the SQL
     oracle reproduces assignments exactly). nprobe stays a query-time
     knob; the stored geometry comes from the index meta."""
-    emb, queries = _emb_and_queries(spark, sf_dir)
-    path = _shared_index(spark, sf_dir)
+    emb, queries, path = _emb_queries_index(spark, sf_dir)
     return ann_index.topk_ann_ivf_indexed(emb, queries, path, k=10,
                                           nprobe=4) \
         .select("qid", "vec_id", "sim", "rank")
@@ -88,8 +79,7 @@ def sim_ann_index_ivfpq_serve(spark, sf_dir):
     the pool exactly - the full billion-vector read pattern with zero
     recomputation of corpus-sized artifacts. Oracle shared verbatim
     with sim_topk_ann_ivfpq."""
-    emb, queries = _emb_and_queries(spark, sf_dir)
-    path = _shared_index(spark, sf_dir)
+    emb, queries, path = _emb_queries_index(spark, sf_dir)
     return ann_index.topk_ann_ivfpq_indexed(emb, queries, path, k=10,
                                             pool=30, nprobe=4)
 
@@ -101,7 +91,6 @@ def sim_ann_index_pq_serve(spark, sf_dir):
     corpus-sized scan in the ADC pass, and the pooled candidates join
     back to the corpus for the exact re-rank. Oracle shared verbatim
     with sim_topk_ann_pq."""
-    emb, queries = _emb_and_queries(spark, sf_dir)
-    path = _shared_index(spark, sf_dir)
+    emb, queries, path = _emb_queries_index(spark, sf_dir)
     return ann_index.topk_ann_pq_indexed(emb, queries, path, k=10,
                                          pool=30)

@@ -15,13 +15,12 @@ is exactly why their arithmetic is integer, not float.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from .catalog import _events, _t, query
 from .operators import cluster, dedup, graph
 from .operators.similarity import valid_vectors
+from .session import scratch_dir
 
 
 def _umicros(c):
@@ -190,9 +189,6 @@ _BAND_SQL = """
              min((897581057 * x + 27182) % 2147483647) AS h7
       FROM (SELECT doc_id, ('0x' || substr(md5(s), 1, 8))::BIGINT % 2147483647 AS x FROM {src}) GROUP BY doc_id"""
 
-_INCR_INDEX_CACHE: dict[str, str] = {}
-
-
 @query("dedup_incremental_index", """
     WITH toks AS (
       SELECT doc_id, string_split(text, ' ') AS t FROM documents
@@ -257,21 +253,19 @@ def dedup_incremental_index(spark, sf_dir):
     the collided pairs, fetching corpus shingles through a semi-join so
     corpus work is proportional to candidates, not corpus size. This is
     how dedup runs at ingest time on a 100 TB corpus: build once,
-    probe per shard, never re-sketch the corpus. Index build is cached
-    per corpus for the process (like catalog_ann's shared index), so a
-    verification sweep pays it once. Everything is md5-portable, so the
-    oracle reproduces index + probe end-to-end and the driver
-    value-hashes the matched pairs. operators/dedup.py
+    probe per shard, never re-sketch the corpus. The index is built
+    once per documents input (session.scratch_dir, like catalog_ann's
+    shared index), so a verification sweep pays it once. Everything is
+    md5-portable, so the oracle reproduces index + probe end-to-end and
+    its value hash covers the matched pairs. operators/dedup.py
     (build_band_index / probe_band_index)."""
     docs = _t(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
     batch = docs.filter(F.col("doc_id") % 5 == 0)
-    if sf_dir not in _INCR_INDEX_CACHE:
-        path = tempfile.mkdtemp(prefix="bandidx_")
-        dedup.build_band_index(corpus, path)
-        _INCR_INDEX_CACHE[sf_dir] = path
-    return dedup.probe_band_index(
-        spark, _INCR_INDEX_CACHE[sf_dir], batch, corpus, threshold=0.5)
+    path = scratch_dir("bandidx_",
+                       lambda d: dedup.build_band_index(corpus, d),
+                       [f"{sf_dir}/documents.parquet"])
+    return dedup.probe_band_index(spark, path, batch, corpus, threshold=0.5)
 
 
 # ---------------------------------------------------------------------
@@ -847,9 +841,6 @@ def docs_url_canonicalize(spark, sf_dir):
 # ORC source round trip (columnar-format parity)
 # ---------------------------------------------------------------------
 
-_ORC_CACHE: dict[str, str] = {}
-
-
 @query("source_orc_roundtrip", """
     SELECT o_orderstatus, o_orderpriority,
            COUNT(*) AS n_orders,
@@ -868,14 +859,13 @@ def source_orc_roundtrip(spark, sf_dir):
     every value and type (BIGINT keys, DOUBLE money, VARCHAR enums,
     TIMESTAMP dates) bit-exactly - the format-parity guarantee that
     lets a lakehouse mix ORC and parquet shards in one table. The
-    rewrite is cached per process (the honest one-time cost of the
-    demo; a real lake already has the ORC files)."""
-    import tempfile as _tf
-    if sf_dir not in _ORC_CACHE:
-        path = _tf.mkdtemp(prefix="orc_orders_")
-        (_t(spark, sf_dir, "orders").write.mode("overwrite").orc(path))
-        _ORC_CACHE[sf_dir] = path
-    o = spark.read.orc(_ORC_CACHE[sf_dir])
+    rewrite is made once per orders input (session.scratch_dir; the
+    one-time cost of the demo, a real lake already has the ORC
+    files)."""
+    o = spark.read.orc(scratch_dir(
+        "orc_orders_",
+        lambda d: _t(spark, sf_dir, "orders").write.mode("overwrite").orc(d),
+        [f"{sf_dir}/orders.parquet"]))
     return (o.groupBy("o_orderstatus", "o_orderpriority")
             .agg(F.count("*").alias("n_orders"),
                  F.sum(F.col("o_totalprice").cast("decimal(18,2)"))

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from . import catalog_ext  # noqa: F401 — registers the components oracle we wrap
 from .catalog import _t, query
 from .operators import dedup, similarity
+from .session import local_frame
 
 
 # ---------------------------------------------------------------------
@@ -325,7 +326,7 @@ def sim_mmr_rerank(spark, sf_dir):
         T.StructField("vec_id", T.LongType(), False),
         T.StructField("relevance", T.DoubleType(), False),
         T.StructField("mmr_score", T.DoubleType(), False)])
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 # ---------------------------------------------------------------------

@@ -33,14 +33,12 @@ discipline:
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .catalog import _events, _t, query
 from .operators.twopass import ROW_COL, SUM_COL, global_prefix
+from .session import local_frame, scratch_dir
 
 # Deterministic per-row event value in integer micro-units - identical
 # guard + flooring on both engines (the stats_permutation_test recipe).
@@ -470,32 +468,6 @@ def text_hashing_features(spark, sf_dir):
 # ---------------------------------------------------------------------
 
 _TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
-_JSON_WRITTEN: set[str] = set()
-
-
-_JSON_SCRATCH: dict[str, str] = {}
-
-
-def _json_scratch(sf_dir: str) -> str:
-    """Per-process scratch directory for the JSONL rewrite of one
-    corpus: an UNPREDICTABLE tempfile.mkdtemp path, created once per
-    (process, sf_dir) and cached in a module global so repeated runs
-    in one process overwrite a single directory instead of each
-    leaking a fresh events-sized JSONL. mkdtemp (0700, random suffix)
-    is what actually closes the multi-user /tmp hazards: any
-    DETERMINISTIC name — even one embedding uid+pid — is enumerable
-    and pre-creatable (symlink planting), and mode("overwrite") is
-    delete-then-rewrite, not atomic for a concurrent reader of a
-    shared path. Leakage is bounded to one directory per live process
-    per corpus, reaped with the OS tempdir; best-effort cleanup at
-    interpreter exit."""
-    if sf_dir not in _JSON_SCRATCH:
-        d = tempfile.mkdtemp(prefix="json_events_")
-        import atexit
-        import shutil as _sh
-        atexit.register(_sh.rmtree, d, True)
-        _JSON_SCRATCH[sf_dir] = os.path.join(d, "events_jsonl")
-    return _JSON_SCRATCH[sf_dir]
 
 
 @query("source_json_roundtrip", f"""
@@ -518,12 +490,11 @@ def source_json_roundtrip(spark, sf_dir):
     the format-parity guarantee for JSON landing zones. Completes the
     source matrix: CSV (A1), parquet (everywhere), ORC
     (source_orc_roundtrip), JSONL (here)."""
-    e = _events(spark, sf_dir)
-    path = _json_scratch(sf_dir)
-    if path not in _JSON_WRITTEN:
-        (e.write.mode("overwrite")
-         .option("timestampFormat", _TS_FMT).json(path))
-        _JSON_WRITTEN.add(path)
+    path = scratch_dir(
+        "json_events_",
+        lambda d: _events(spark, sf_dir).write.mode("overwrite")
+        .option("timestampFormat", _TS_FMT).json(d),
+        [f"{sf_dir}/events.parquet"])
     schema = ("event_id bigint, ts timestamp, user_id bigint, "
               "event_type string, value double, props string")
     j = (spark.read.schema(schema)
@@ -1834,10 +1805,10 @@ def _dq_schema_contract(spark, sf_dir):
     for t in _CONTRACT_TABLES:
         for f in _t(spark, sf_dir, t).schema.fields:
             actual.append((t, f.name, _spark_family(f.dataType)))
-    a = spark.createDataFrame(
-        actual, "tbl string, col string, actual_family string")
-    e = spark.createDataFrame(
-        list(_CONTRACT),
+    a = local_frame(
+        spark, actual, "tbl string, col string, actual_family string")
+    e = local_frame(
+        spark, list(_CONTRACT),
         "tbl string, col string, expected_family string")
     j = e.join(a, ["tbl", "col"], "full_outer")
     status = (F.when(F.col("expected_family").isNull(),

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from .catalog import _events, _t, query
 from .operators import dedup, twopass
+from .session import local_frame
 
 
 # ---------------------------------------------------------------------
@@ -1137,9 +1138,7 @@ def text_bpe_merges(spark, sf_dir):
     scalar; everything corpus-sized stays distributed."""
     from .operators.text import bpe_merges
     rows = bpe_merges(_t(spark, sf_dir, "documents"), steps=3)
-    return spark.createDataFrame(
-        [(s, p, c) for s, p, c in rows],
-        "step int, pair string, cnt long")
+    return local_frame(spark, rows, "step int, pair string, cnt long")
 
 
 @query("text_bpe_encode", """
@@ -1296,9 +1295,7 @@ def text_bpe_merges_batched(spark, sf_dir):
     from .operators.text import bpe_merges_batched
     rows = bpe_merges_batched(_t(spark, sf_dir, "documents"),
                               steps=8, round_size=4, window=32)
-    return spark.createDataFrame(
-        [(s, p, c) for s, p, c in rows],
-        "step int, pair string, cnt long")
+    return local_frame(spark, rows, "step int, pair string, cnt long")
 
 
 # ---------------------------------------------------------------------

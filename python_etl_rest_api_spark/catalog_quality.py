@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from .catalog import _t, query
 from .operators import twopass
+from .session import local_frame
 
 # Stopwords chosen from the synthetic corpus vocabulary; the operator
 # semantics (>=2 distinct stopwords present) mirror Gopher's "has at
@@ -592,5 +593,5 @@ def embed_top_pc(spark, sf_dir):
     # Python round() is banker's half-to-even and would hash-diverge
     # from DuckDB ROUND on an exact .5e-6 boundary (r4 advice)
     rows = [(int(i), float(v[i])) for i in range(dim)]
-    return (spark.createDataFrame(rows, "pos int, comp double")
+    return (local_frame(spark, rows, "pos int, comp double")
             .select("pos", F.round("comp", 6).alias("comp")))

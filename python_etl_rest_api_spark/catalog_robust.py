@@ -26,10 +26,13 @@ which the driver's type-sensitive hash rejects — the round-5 lesson).
 
 from __future__ import annotations
 
+import pathlib
+
 from pyspark.sql import functions as F
 
 from .catalog import _events, _t, query
 from .operators.twopass import ROW_COL, global_prefix
+from .session import local_frame, scratch_dir
 
 
 def _h32(prefix: str, col):
@@ -900,12 +903,12 @@ def graph_bfs_levels(spark, sf_dir):
     n_reached = levels.count()
     # the oracle emits every level 0..rounds even when a frontier is
     # empty (COUNT over an empty set is still one 0 row) — mirror that
-    grid = spark.createDataFrame([(d,) for d in range(4)], "dist int")
+    grid = local_frame(spark, [(d,) for d in range(4)], "dist int")
     lv = (grid.join(lv, "dist", "left")
           .select("dist", F.coalesce("n_nodes", F.lit(0))
                   .cast("long").alias("n_nodes")))
-    unreached = spark.createDataFrame(
-        [(-1, n_total - n_reached)], "dist int, n_nodes long")
+    unreached = local_frame(
+        spark, [(-1, n_total - n_reached)], "dist int, n_nodes long")
     return lv.select(F.col("dist").cast("int"), "n_nodes") \
              .union(unreached)
 
@@ -1031,22 +1034,26 @@ def sink_partition_overwrite(spark, sf_dir):
     would have dropped them — that is the failure mode this mode
     exists to prevent.
 
-    The per-call two-generation write is the honest demo cost (the
-    layout_bucketed_join precedent); at scale the write IS the
+    Both generations are written once per events input
+    (session.scratch_dir) and reused by later calls, as the
+    layout_bucketed_join layout is; at scale the write IS the
     pipeline. Partition values are non-null by filter so no
     __HIVE_DEFAULT_PARTITION__ leg. Reference N/A."""
-    import tempfile as _tf
     e = (_events(spark, sf_dir)
          .filter(F.col("event_type").isNotNull()
                  & F.col("event_id").isNotNull())
          .select("event_type", "event_id"))
-    out = _tf.mkdtemp(prefix="dynpart_") + "/events"
-    (e.write.mode("overwrite").partitionBy("event_type").parquet(out))
     corrected = e.filter((F.col("event_type") == "click")
                          & (F.col("event_id") % 2 == 0))
-    (corrected.write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("event_type").parquet(out))
+
+    def write_generations(out):
+        (e.write.mode("overwrite").partitionBy("event_type").parquet(out))
+        (corrected.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("event_type").parquet(out))
+
+    out = scratch_dir("dynpart_", write_generations,
+                      [f"{sf_dir}/events.parquet"])
     # explicit schema so a 0-row generation (empty-input robustness)
     # reads back as an empty frame instead of failing inference
     back = spark.read.schema(e.schema).parquet(out)
@@ -2198,8 +2205,6 @@ def source_csv_corrupt_records(spark, sf_dir):
     disallows queries selecting ONLY the internal corrupt column from
     the raw scan. At scale the corrupt slice writes to a quarantine
     sink (etl_critical_quarantine's split)."""
-    import os
-    import tempfile as _tf
     from pyspark.sql import types as T
     lines = ["id,name,amount"]
     for i in range(100):
@@ -2209,10 +2214,8 @@ def source_csv_corrupt_records(spark, sf_dir):
             lines.append(f"{i},row{i},{i*3+50},extra")  # arity violation
         else:
             lines.append(f"{i},row{i},{i*3+50}")
-    d = _tf.mkdtemp(prefix="csv_corrupt_")
-    path = os.path.join(d, "rows.csv")
-    with open(path, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
+    path = scratch_dir("csv_corrupt_", lambda d: pathlib.Path(
+        d, "rows.csv").write_text("\n".join(lines) + "\n")) + "/rows.csv"
     schema = T.StructType([
         T.StructField("id", T.LongType()),
         T.StructField("name", T.StringType()),

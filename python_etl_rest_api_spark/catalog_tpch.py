@@ -44,11 +44,6 @@ def _price():
     return F.col("l_extendedprice").cast("decimal(18,2)")
 
 
-def _rev():
-    disc = F.col("l_discount").cast("decimal(4,2)")
-    return (_price() * (F.lit(1) - disc)).cast("decimal(18,4)")
-
-
 def _qty():
     return F.col("l_quantity").cast("decimal(18,2)")
 

@@ -31,7 +31,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session import widen_scan
+from ..session import local_frame, widen_scan
 from .text import tokens
 
 # Frames cached by the most recent near-dup invocation. Each new call
@@ -786,8 +786,8 @@ def build_band_index(df: DataFrame, path: str, id_col: str = "doc_id",
     bands_df = minhash_bands(df, id_col, text_col, n, num_hashes, bands)
     bands_df.write.mode("overwrite").parquet(path)
     spark = bands_df.sparkSession
-    (spark.createDataFrame([(_band_scheme(n, num_hashes, bands),)],
-                           "scheme string")
+    (local_frame(spark, [(_band_scheme(n, num_hashes, bands),)],
+                 "scheme string")
      .coalesce(1).write.mode("overwrite").parquet(f"{path}/_scheme"))
 
 

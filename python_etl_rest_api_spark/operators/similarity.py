@@ -421,16 +421,17 @@ def mmr_rerank(corpus: DataFrame, query: DataFrame, pool: int = 12,
     by the pool parameter exactly like TakeOrderedAndProject's driver
     merge, never corpus-sized. Ties break on candidate id; float ops
     are plain IEEE double (0.7*rel - 0.3*maxsim), bit-identical to the
-    SQL oracle's expression.
+    SQL oracle's expression. The corpus is ranked once: the pool is
+    collected first and its vectors are fetched back by id.
 
     Returns [(rank, id, relevance, mmr_score)] with rank 1..k.
     """
-    cand = topk_bruteforce(corpus, query, k=pool,
-                           id_col=id_col, vec_col=vec_col)
-    cand_vecs = corpus.join(cand.select(id_col), id_col, "left_semi")
+    rel = {r[id_col]: r.sim
+           for r in topk_bruteforce(corpus, query, k=pool, id_col=id_col,
+                                    vec_col=vec_col).collect()}
+    pool_vecs = corpus.filter(F.col(id_col).isin(list(rel)))
     sims = {(r.id_a, r.id_b): r.sim
-            for r in pairwise_cosine(cand_vecs, id_col, vec_col).collect()}
-    rel = {r[id_col]: r.sim for r in cand.collect()}
+            for r in pairwise_cosine(pool_vecs, id_col, vec_col).collect()}
 
     selected: list[tuple[int, int, float, float]] = []
     chosen: list[int] = []

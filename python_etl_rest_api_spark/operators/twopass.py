@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 ROW_COL = "_grow"      # global 1-based row number in order_by order
 SUM_COL = "_gsum"      # inclusive global prefix sum of sum_col
 
@@ -86,8 +88,7 @@ def global_prefix(df: DataFrame, order_by: list[Column],
         row_off += r["_cnt"]
         if sum_col is not None:
             sum_off += int(r["_s"] or 0)
-    off = spark.createDataFrame(
-        rows, "_pid int, _rowoff long, _sumoff long")
+    off = local_frame(spark, rows, "_pid int, _rowoff long, _sumoff long")
 
     w = Window.partitionBy("_pid").orderBy(*order_by)
     out = (ranged.join(F.broadcast(off), "_pid")

@@ -15,7 +15,12 @@ Conventions (SURVEY.md section 7.3):
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
+import shutil
+import tempfile
+import threading
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -84,6 +89,72 @@ def local_frame(spark: SparkSession, rows, schema):
          for col, field in zip(columns, arrow_schema)],
         schema=arrow_schema)
     return spark.createDataFrame(table, schema)
+
+
+_SCRATCH_LOCK = threading.RLock()
+_SCRATCH_ROOT: str | None = None
+
+
+def scratch_root() -> str:
+    """This process's scratch root: the one directory the package keeps
+    scratch copies under, made on first use and removed at interpreter
+    exit.
+
+    It comes from ``tempfile.mkdtemp`` (under ``TMPDIR``), so it is mode
+    0700 with an unpredictable name. That is what closes the multi-user
+    /tmp hazards: any deterministic name, even one embedding uid and
+    pid, is enumerable and can be pre-created (symlink planting), and a
+    ``mode("overwrite")`` write is delete-then-rewrite, not atomic for a
+    concurrent reader of a shared path. Names inside the root may be
+    deterministic, because no other user can enter it."""
+    global _SCRATCH_ROOT
+    with _SCRATCH_LOCK:
+        if _SCRATCH_ROOT is None:
+            _SCRATCH_ROOT = tempfile.mkdtemp(prefix="spark_graft_")
+            atexit.register(shutil.rmtree, _SCRATCH_ROOT, True)
+    return _SCRATCH_ROOT
+
+
+def _signature(inputs) -> str:
+    """Hash of the sorted (input, relpath, size, mtime_ns) of the files
+    under ``inputs``: an input rewritten in place gets a new hash."""
+    stats = []
+    for top in map(os.path.abspath, inputs):
+        files = [os.path.join(d, f) for d, _, fs in os.walk(top) for f in fs]
+        for path in files or [top]:
+            if os.path.isfile(path):
+                st = os.stat(path)
+                stats.append((top, os.path.relpath(path, top),
+                              st.st_size, st.st_mtime_ns))
+    return hashlib.sha256(repr(sorted(stats)).encode()).hexdigest()[:16]
+
+
+def scratch_dir(prefix: str, build, inputs=()) -> str:
+    """The scratch directory ``build`` fills from ``inputs``, built once
+    per process and reused.
+
+    The directory is ``<scratch_root()>/<prefix><signature of inputs>``,
+    so an entry that rewrites the same bytes for the same input writes
+    them once, and an input rewritten in place (a client replacing an
+    ``sf_dir`` under the REST data root) gets a fresh copy, never a
+    stale one. The first caller runs ``build(staging)`` on an empty
+    directory under the scratch lock and renames staging into place; a
+    build that raises leaves nothing, and the next call builds again.
+    Later callers get the path without writing or waiting."""
+    final = os.path.join(scratch_root(), prefix + _signature(inputs))
+    if os.path.isdir(final):
+        return final
+    with _SCRATCH_LOCK:
+        if not os.path.isdir(final):
+            staging = final + ".staging"
+            os.mkdir(staging)
+            try:
+                build(staging)
+                os.rename(staging, final)
+            except BaseException:
+                shutil.rmtree(staging, ignore_errors=True)
+                raise
+    return final
 
 
 def no_pushdown_barrier(df):

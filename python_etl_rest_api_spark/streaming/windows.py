@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import scratch_dir
 from ..sources.tables import with_event_ts
 
 
@@ -185,14 +186,14 @@ def run_stream_on_batch(spark: SparkSession, events_path: str,
     availableNow (test/backfill harness: stream semantics, batch data).
     ``ts`` gets the batch-side _events dtype dispatch (with_event_ts)."""
     import os
-    import tempfile
 
     if os.path.isfile(events_path):
         # the file-stream source requires a directory; shim single files
-        d = tempfile.mkdtemp(prefix="stream_src_")
-        os.symlink(os.path.abspath(events_path),
-                   os.path.join(d, os.path.basename(events_path)))
-        events_path = d
+        src = os.path.abspath(events_path)
+        events_path = scratch_dir(
+            "stream_src_",
+            lambda d: os.symlink(src, os.path.join(d, os.path.basename(src))),
+            [src])
     schema = spark.read.parquet(events_path).schema
     stream = with_event_ts(spark.readStream.schema(schema)
                            .option("maxFilesPerTrigger", 1)

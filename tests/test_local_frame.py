@@ -82,3 +82,19 @@ def test_empty_adc_result_is_a_local_relation(spark, kind):
     assert _plan_node(out) == "LocalRelation"
     assert out.columns == ["qid", "vec_id", "adc", "sim", "rank"]
     assert out.collect() == []
+
+
+@pytest.mark.parametrize("module,entry", [
+    ("catalog_llm", "sim_mmr_rerank"),
+    ("catalog_pipe", "text_bpe_merges"),
+])
+def test_driver_built_entry_is_a_local_relation(spark, module, entry):
+    """Entries that assemble their answer on the driver return it as a
+    LocalRelation with the declared schema, not a pickle RDD."""
+    import importlib
+    from conftest import SF_DIR
+    fn = getattr(importlib.import_module(
+        f"python_etl_rest_api_spark.{module}"), entry)
+    out = fn(spark, SF_DIR)
+    assert _plan_node(out) == "LocalRelation"
+    assert out.count() > 0

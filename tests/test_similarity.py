@@ -344,3 +344,23 @@ def test_pq_codes_follow_the_sequential_fold(spark):
     cb = np.array(cents)[None]          # (m_sub=1, K=2, s=FOLD_DIM)
     got = similarity.pq_encode(_vec_frame(spark, [x]), cb).collect()
     assert [r.codes for r in got] == [[want]]
+
+
+def test_mmr_ranks_the_corpus_once(spark):
+    """mmr_rerank runs the corpus-wide brute force once: beyond one
+    topk_bruteforce collect it only scans the pool by id and collects
+    the pool's pairwise sims (2 jobs). Ranking the corpus again under
+    the pool's semi-join took 11 jobs against top-k's 4."""
+    from conftest import SF_DIR
+    from test_first100 import _jobs
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    q = emb.filter(F.col("vec_id") == 0).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
+    ranked, topk_jobs = _jobs(
+        spark, lambda: similarity.topk_bruteforce(emb, q, k=12).collect())
+    picked, mmr_jobs = _jobs(
+        spark, lambda: similarity.mmr_rerank(emb, q, pool=12, k=5))
+    assert mmr_jobs <= topk_jobs + 2, (mmr_jobs, topk_jobs)
+    pool = {r["vec_id"]: r["sim"] for r in ranked}
+    assert len(picked) == 5
+    assert all(pool[d] == rel for _, d, rel, _ in picked)
