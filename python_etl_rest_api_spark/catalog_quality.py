@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from .catalog import _t, query
 from .operators import twopass
 from .session import local_frame
+from .worker_imports import steady_zip_imports
 
 # Stopwords chosen from the synthetic corpus vocabulary; the operator
 # semantics (>=2 distinct stopwords present) mirror Gopher's "has at
@@ -248,6 +249,7 @@ def embed_gram_matrix(spark, sf_dir):
     iu, ju = np.triu_indices(dim)
 
     def gram(batches):
+        steady_zip_imports()
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -563,6 +565,7 @@ def embed_top_pc(spark, sf_dir):
     dim = 64
 
     def gram_full(batches):
+        steady_zip_imports()
         for pdf in batches:
             if not len(pdf):
                 continue

@@ -49,10 +49,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..session import local_frame, widen_scan
+from ..worker_imports import steady_zip_imports
 
 # The UDF kernels call this module's numpy helpers. Pickling the module
 # by value ships those helpers inside each UDF, so a Python worker needs
-# numpy and pandas on its path, not this package.
+# numpy and pandas on its path, not this package (worker_imports is
+# pickled by value too).
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
@@ -218,6 +220,7 @@ def seq_cosine_udf():
 
     @pandas_udf("double")
     def seq_cosine(va: pd.Series, vb: pd.Series) -> pd.Series:
+        steady_zip_imports()
         if len(va) == 0:
             return pd.Series([], dtype="float64")
         lens = {len(v) for v in va} | {len(v) for v in vb}
@@ -288,6 +291,7 @@ def srp_buckets(df: DataFrame, dim: int, bits: int = 16, tables: int = 1,
 
     @pandas_udf("array<long>")
     def bucket_keys(embs: pd.Series) -> pd.Series:
+        steady_zip_imports()
         if len(embs) == 0:
             return pd.Series([], dtype="object")
         mat = _matrix(embs)                                  # (n, dim)
@@ -335,6 +339,7 @@ def ivf_assignments(df: DataFrame, centroids: np.ndarray, nprobe: int = 1,
 
     @pandas_udf("array<long>")
     def nearest(embs: pd.Series) -> pd.Series:
+        steady_zip_imports()
         if len(embs) == 0:
             return pd.Series([], dtype="object")
         sims = _cosine(_matrix(embs)[:, None, :], cm[None])     # (n, k)
@@ -485,6 +490,7 @@ def pq_encode(corpus: DataFrame, codebooks: np.ndarray,
 
     @pandas_udf("array<int>")
     def encode(embs: pd.Series) -> pd.Series:
+        steady_zip_imports()
         if len(embs) == 0:
             return pd.Series([], dtype="object")
         sub = _matrix(embs).reshape(len(embs), m_sub, 1, s)
@@ -631,6 +637,7 @@ def ivfpq_adc_topk(inv: DataFrame, codes: DataFrame, cb: np.ndarray,
 
     @pandas_udf("double")
     def adc_pair(codes_col: pd.Series, qidx_col: pd.Series) -> pd.Series:
+        steady_zip_imports()
         if len(codes_col) == 0:
             return pd.Series([], dtype="float64")
         cmat = _matrix(codes_col, np.int64)
@@ -670,6 +677,7 @@ def pq_adc_topk(codes: DataFrame, cb: np.ndarray, corpus: DataFrame,
 
     @pandas_udf("array<double>")
     def adc(codes_col: pd.Series) -> pd.Series:
+        steady_zip_imports()
         if len(codes_col) == 0:
             return pd.Series([], dtype="object")
         cmat = _matrix(codes_col, np.int64)                  # (n, m)

@@ -25,6 +25,10 @@ import threading
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+# the directory that holds this package: what a Python worker needs on
+# its path to import it
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # The engine's SQL conventions - the ONE list of them. get_spark builds
 # its session with them, and every catalog registry callable (QUERIES /
 # QUERIES_RAW) re-applies them via tune() before it runs its entry, so a
@@ -363,4 +367,15 @@ def get_spark(app_name: str = "python_etl_rest_api_spark",
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # Python workers unpickle the package's operators by reference, so
+    # they need the package on their path whatever the driver's cwd is.
+    # sc.environment is spark.executorEnv.* as the context read it, and
+    # Spark merges its PYTHONPATH into every worker's path. It is set
+    # here, not on the builder: a builder value would replace one from
+    # spark-defaults or spark-submit, and an existing session ignores it.
+    env = spark.sparkContext.environment
+    paths = env.get("PYTHONPATH", "")
+    if _PACKAGE_PARENT not in paths.split(os.pathsep):
+        env["PYTHONPATH"] = os.pathsep.join(filter(None, [_PACKAGE_PARENT,
+                                                          paths]))
     return tune(spark)

@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
+from ..worker_imports import steady_zip_imports
+
 OUTPUT_SCHEMA = T.StructType([
     T.StructField("user_id", T.LongType(), False),
     T.StructField("n_new", T.IntegerType(), False),
@@ -39,6 +41,7 @@ N = 100
 def _update(key: tuple[Any, ...],
             pdfs: Iterator[pd.DataFrame],
             state: GroupState) -> Iterator[pd.DataFrame]:
+    steady_zip_imports()
     extracted = set(state.get[0]) if state.exists else set()
     n_new = n_rejected = 0
     for pdf in pdfs:

@@ -98,3 +98,17 @@ def test_driver_built_entry_is_a_local_relation(spark, module, entry):
     out = fn(spark, SF_DIR)
     assert _plan_node(out) == "LocalRelation"
     assert out.count() > 0
+
+
+@pytest.mark.parametrize("kind", ["", "wav_", "bmp_", "png_", "jpeg_",
+                                  "avi_", "gif_"])
+def test_synthesized_media_is_a_local_relation(spark, kind):
+    """The multimodal synthesizers coalesce a LocalRelation, so scanning
+    one starts no Python worker."""
+    from python_etl_rest_api_spark.operators import multimodal as mm
+    media = getattr(mm, f"synthesize_{kind}media")(spark, n=4)
+    plan = media._jdf.queryExecution().logical()
+    assert plan.getClass().getSimpleName() == "Repartition"
+    assert plan.child().getClass().getSimpleName() == "LocalRelation"
+    assert media.schema == mm.MEDIA_SCHEMA
+    assert media.count() == 4

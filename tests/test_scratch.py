@@ -37,9 +37,14 @@ SCRATCH_ENTRIES = {
 }
 
 
-def _call_sites(module, attr):
+def _package_files():
+    return [os.path.join(d, f) for d, _, files in os.walk(PACKAGE)
+            for f in sorted(files) if f.endswith(".py")]
+
+
+def _call_sites(module, attr, paths=None):
     """(file, innermost enclosing function) of every ``module.attr(...)``
-    or bare ``attr(...)`` call in the package."""
+    or bare ``attr(...)`` call in ``paths`` (default: the package)."""
     sites = []
 
     class Visitor(ast.NodeVisitor):
@@ -61,13 +66,10 @@ def _call_sites(module, attr):
                 sites.append((self.path, self.scope[-1]))
             self.generic_visit(node)
 
-    for d, _, files in os.walk(PACKAGE):
-        for f in sorted(files):
-            if f.endswith(".py"):
-                path = os.path.join(d, f)
-                with open(path) as fh:
-                    Visitor(os.path.relpath(path, PACKAGE)).visit(
-                        ast.parse(fh.read()))
+    for path in paths or _package_files():
+        with open(path) as fh:
+            Visitor(os.path.relpath(path, PACKAGE)).visit(
+                ast.parse(fh.read()))
     return sites
 
 
@@ -77,6 +79,13 @@ def test_one_scratch_owner(module, attr):
     """The package makes a temp dir, and registers an exit hook, in one
     place: session.scratch_root. A new per-call site fails here."""
     assert _call_sites(module, attr) == [("session.py", "scratch_root")]
+
+
+def test_bench_makes_no_temp_dir():
+    """bench.py keeps its scratch copies under the package's scratch
+    root too, so a bench run leaves no directory behind."""
+    assert _call_sites("tempfile", "mkdtemp",
+                       [os.path.join(ROOT, "bench.py")]) == []
 
 
 def test_concurrent_callers_build_once(tmp_path):
