@@ -11,6 +11,12 @@ plus the engine endpoints that make this an analytics service:
 - GET  /catalog, /catalog/{name} -> the whole analytics catalog over REST
 - GET  /health
 
+The endpoint bodies are the plain methods of :class:`Api`: each returns
+the response dict or raises ``ApiError(status, detail)``, so they run
+without fastapi. :func:`build_app` is only the route table over them.
+The view and /catalog/{name} page alike, by ``offset=`` or by the keyset
+cursor ``after=`` that every full page returns as ``next``.
+
 State is table-backed (append-only parquet store, read once per check,
 duplicate races adjudicated read-after-write - see
 operators/first100.py), not a process global: multiple workers converge
@@ -21,21 +27,33 @@ confined to a configured data root (403 outside it).
 
 from __future__ import annotations
 
+import datetime
 import os
 import tempfile
+from contextlib import contextmanager
 
 try:
     from fastapi import FastAPI, HTTPException
+    from fastapi.exception_handlers import http_exception_handler
     from pydantic import BaseModel, Field
+
+    class ExtractRequest(BaseModel):
+        # reference api/main.py:12-13: Pydantic ge/le -> 422; the
+        # explicit range check in First100 -> 400 for raw ints
+        number: int = Field(..., ge=1, le=100)
+
     HAVE_FASTAPI = True
 except ImportError:  # container may lack fastapi; engine still importable
     HAVE_FASTAPI = False
 
 from pyspark.sql import functions as F
 
+from .. import opcache, registry
 from ..operators.analytics import daily_company_totals
 from ..operators.clean import build_dim_fact, clean_pipeline
 from ..operators.first100 import First100, ValidationError
+from ..operators.load import atomic_overwrite
+from ..session import get_spark
 from ..sources.csv_source import read_charges_csv
 
 MAX_PAGE = 10_000
@@ -188,24 +206,20 @@ def parse_cursor(view, after: str) -> tuple:
         probe_df = view.sparkSession.range(1).select(
             *[F.lit(v).try_cast(view.schema[c].dataType).alias(f"c{i}")
               for i, (c, v) in enumerate(zip(cols, cursor))])
+        # Evaluate WITHOUT a Spark job: every try_cast above is
+        # foldable, so the optimizer constant-folds the projection to
+        # literals at plan time (driver-side). Reading null-ness off
+        # the optimized plan keeps exact Spark cast semantics with zero
+        # scheduler round-trips — a per-request one-row job serialized
+        # on the shared session was a throughput tax under concurrent
+        # paging clients.
+        probe = _folded_nulls(probe_df)
+        if probe is None:  # plan shape not the expected Project[literals]
+            probe = [probe_df.first()[i] is None for i in range(len(cols))]
     except AnalysisException:
+        # at select() time, or deferred to the fallback's action time
         raise ValueError("cursor cells are not castable to the view's "
                          f"column types ({cols})")
-    # Evaluate WITHOUT a Spark job: every try_cast above is foldable,
-    # so the optimizer constant-folds the projection to literals at
-    # plan time (driver-side). Reading null-ness off the optimized
-    # plan keeps exact Spark cast semantics with zero scheduler
-    # round-trips — a per-request one-row job serialized on the shared
-    # session was a throughput tax under concurrent paging clients.
-    probe = _folded_nulls(probe_df)
-    if probe is None:  # plan shape not the expected Project[literals]
-        try:
-            probe = [probe_df.first()[i] is None for i in range(len(cols))]
-        except AnalysisException:
-            # analysis deferred to action time must keep the same
-            # 400 contract as analysis at select() time
-            raise ValueError("cursor cells are not castable to the "
-                             f"view's column types ({cols})")
     uncastable = [cols[i] for i, v in enumerate(cursor)
                   if v is not None and probe[i]]
     if uncastable:
@@ -228,149 +242,144 @@ def next_cursor(columns, page, limit: int):
     return [None if last[c] is None else str(last[c]) for c in columns]
 
 
-def build_app(spark=None, state_path: str | None = None,
-              data_root: str | None = None):
-    """``data_root`` confines every client-supplied filesystem path
-    (csv_path, out_dir, warehouse_dir): paths are realpath-resolved and
-    must stay under the root, else 403 (round-1 advice: unauthenticated
-    endpoints must not read or overwrite arbitrary host paths). Default
-    root: $SPARK_ETL_DATA_ROOT, else the system temp dir."""
-    if not HAVE_FASTAPI:
-        raise RuntimeError("fastapi not installed in this environment")
-    if spark is None:
-        from ..session import get_spark
-        spark = get_spark("python_etl_rest_api_spark-api")
-    state_path = state_path or os.path.join(
-        tempfile.gettempdir(), "first100_state")
-    data_root = os.path.realpath(
-        data_root or os.environ.get("SPARK_ETL_DATA_ROOT")
-        or tempfile.gettempdir())
+class ApiError(Exception):
+    """``ApiError(status, detail)``: an endpoint failure and the HTTP
+    status it maps to; the route table's one exception handler turns it
+    into the response."""
 
-    def _confined(client_path: str) -> str:
+
+@contextmanager
+def _bad_request(errors=ValueError):
+    """Re-raise ``errors`` as a 400 carrying their message."""
+    try:
+        yield
+    except errors as e:
+        raise ApiError(400, str(e)) from e
+
+
+def _page(view, limit: int, offset: int, after: str | None) -> dict:
+    """One bounded page of ``view`` as a response body.
+
+    ``after`` (the JSON full-row cursor a previous page returned as
+    ``next``) selects keyset paging, O(limit) at any depth; otherwise
+    ``offset`` paging, rejected past ``MAX_OFFSET``. EVERY full page
+    carries ``next`` (null when the page was short = done), so an
+    offset client can switch to keyset before MAX_OFFSET bites. A bad
+    cursor or offset is a 400."""
+    with _bad_request():
+        cursor = None if after is None else parse_cursor(view, after)
+        page, limit, offset = paginate(view, limit, offset, after=cursor)
+    return {"rows": [r.asDict() for r in page], "limit": limit,
+            "offset": offset, "next": next_cursor(view.columns, page, limit)}
+
+
+class Api:
+    """The endpoint bodies as plain methods: each returns the response
+    dict or raises :class:`ApiError`, so they run (and are tested)
+    without fastapi; :func:`build_app` only routes to them.
+
+    Holds the one SparkSession, the table-backed First100 state and
+    the data root. ``data_root`` confines every client-supplied
+    filesystem path (csv_path, out_dir, warehouse_dir, sf_dir): paths
+    are realpath-resolved and must stay under the root, else 403
+    (unauthenticated endpoints must not read or overwrite arbitrary
+    host paths). Default root: $SPARK_ETL_DATA_ROOT, else the system
+    temp dir."""
+
+    def __init__(self, spark, state_path: str | None = None,
+                 data_root: str | None = None):
+        self.spark = spark
+        self.state = First100(spark, store_path=state_path or os.path.join(
+            tempfile.gettempdir(), "first100_state"))
+        self.data_root = os.path.realpath(data_root or os.environ.get(
+            "SPARK_ETL_DATA_ROOT") or tempfile.gettempdir())
+
+    def _confined(self, client_path: str) -> str:
         p = os.path.realpath(client_path)
-        if p != data_root and not p.startswith(data_root + os.sep):
-            raise HTTPException(
-                status_code=403,
-                detail=f"path outside data root {data_root}: {client_path}")
+        if p != self.data_root and not p.startswith(self.data_root + os.sep):
+            raise ApiError(403, f"path outside data root {self.data_root}: "
+                                f"{client_path}")
         return p
 
-    app = FastAPI(title="python_etl_rest_api_spark",
-                  description="PySpark-native analytics engine - "
-                              "Spark jobs orchestrated via REST")
-    state = First100(spark, store_path=state_path)
+    def health(self) -> dict:
+        return {"status": "ok", "spark_version": self.spark.version}
 
-    class ExtractRequest(BaseModel):
-        # mirror reference api/main.py:12-13 (Pydantic ge/le -> 422; the
-        # explicit range check in First100 -> 400 for raw ints)
-        number: int = Field(..., ge=1, le=100)
+    def extract(self, number: int) -> dict:
+        with _bad_request(ValidationError):  # reference api/main.py:24-25
+            return self.state.extract(number)
 
-    @app.get("/health")
-    def health():
-        return {"status": "ok", "spark_version": spark.version}
+    def missing(self) -> dict:
+        with _bad_request(ValidationError):  # reference api/main.py:32-33
+            return {"missing": self.state.missing()}
 
-    @app.post("/extract")
-    def extract(req: ExtractRequest):
-        try:
-            return state.extract(req.number)
-        except ValidationError as e:  # reference api/main.py:24-25
-            raise HTTPException(status_code=400, detail=str(e))
+    def reset(self) -> dict:
+        return self.state.reset()
 
-    @app.get("/missing")
-    def missing():
-        try:
-            return {"missing": state.missing()}
-        except ValidationError as e:  # reference api/main.py:32-33
-            raise HTTPException(status_code=400, detail=str(e))
-
-    @app.post("/reset")
-    def reset():
-        return state.reset()
-
-    @app.post("/etl/run")
-    def etl_run(csv_path: str, out_dir: str):
+    def etl_run(self, csv_path: str, out_dir: str) -> dict:
         """The reference's batch ETL (etl/03_transform_and_load.py) as an
-        on-demand Spark job: clean + quarantine + dim/fact parquet."""
-        csv_path = _confined(csv_path)
-        out_dir = _confined(out_dir)
+        on-demand Spark job: clean + quarantine + dim/fact parquet. The
+        clean frame's cache is released when the request ends, so a
+        long-running service holds none per request served."""
+        csv_path, out_dir = self._confined(csv_path), self._confined(out_dir)
         if not os.path.exists(csv_path):
-            raise HTTPException(status_code=404, detail=f"no such file: {csv_path}")
-        raw = read_charges_csv(spark, csv_path)
-        clean, critical = clean_pipeline(raw)
-        clean = clean.cache()
-        companies, charges = build_dim_fact(clean)
-        counts = {"original": raw.count(), "clean": clean.count(),
-                  "critical": critical.count()}
-        from ..operators.load import atomic_overwrite
-        atomic_overwrite(clean, os.path.join(out_dir, "clean"))
-        atomic_overwrite(critical, os.path.join(out_dir, "critical"))
-        atomic_overwrite(companies, os.path.join(out_dir, "companies"))
-        atomic_overwrite(charges, os.path.join(out_dir, "charges"))
+            raise ApiError(404, f"no such file: {csv_path}")
+        try:
+            raw = read_charges_csv(self.spark, csv_path)
+            clean, critical = clean_pipeline(raw)
+            clean = opcache.cache(clean)
+            companies, charges = build_dim_fact(clean)
+            counts = {"original": raw.count(), "clean": clean.count(),
+                      "critical": critical.count()}
+            for name, df in (("clean", clean), ("critical", critical),
+                             ("companies", companies), ("charges", charges)):
+                atomic_overwrite(df, os.path.join(out_dir, name))
+        finally:
+            opcache.release_all()
         return {"counts": counts, "out_dir": out_dir}
 
-    @app.get("/view/daily_company_totals")
-    def view_daily(warehouse_dir: str, date: str | None = None,
+    def view_daily(self, warehouse_dir: str, date: str | None = None,
                    start: str | None = None, end: str | None = None,
                    limit: int = 1000, offset: int = 0,
-                   after: str | None = None):
+                   after: str | None = None) -> dict:
         """The flagship view with the reference's two filter patterns
-        (readme.md:156-162): date equality and BETWEEN.
+        (readme.md:156-162): one ``date``, or BETWEEN ``start`` and
+        ``end`` (given together); dates are YYYY-MM-DD. Responses are
+        paged by :func:`_page` (default page 1000, hard cap
+        ``MAX_PAGE``): the view is unbounded in the date-range case and
+        an uncapped collect of a 100 TB-scale warehouse would OOM the
+        driver."""
+        bounds = (date, date) if date else (start, end)  # absent: None or ""
+        if any(bounds) and not all(bounds):
+            raise ApiError(400, "start and end must be given together")
+        # parsed here: under ANSI a malformed date literal fails its cast
+        # at collect time, a 500 instead of the client's 400
+        with _bad_request():
+            days = [datetime.date.fromisoformat(d) for d in bounds if d]
+        warehouse_dir = self._confined(warehouse_dir)
+        view = daily_company_totals(*(
+            self.spark.read.parquet(os.path.join(warehouse_dir, t))
+            for t in ("charges", "companies")))
+        if days:
+            view = view.filter(F.col("transaction_date").between(*days))
+        return _page(view, limit, offset, after)
 
-        Responses are paginated via :func:`paginate` (default page 1000,
-        hard cap ``MAX_PAGE``): the view is unbounded in the date-range
-        case and an uncapped collect of a 100 TB-scale warehouse would
-        OOM the driver. Two paging styles:
-
-        - ``offset=N`` - simple but O(offset+limit) per page, rejected
-          past ``MAX_OFFSET``;
-        - ``after=<JSON full-row tuple>`` - keyset cursor over ALL view
-          columns, O(limit) at any depth, tie-safe even where no column
-          prefix is unique. EVERY full page carries ``next`` (offset or
-          keyset style): pass it back verbatim as ``after`` for the
-          following page (null when the page was short = done), so an
-          offset client can switch to keyset before MAX_OFFSET bites.
-        """
-        warehouse_dir = _confined(warehouse_dir)
-        charges = spark.read.parquet(os.path.join(warehouse_dir, "charges"))
-        companies = spark.read.parquet(os.path.join(warehouse_dir, "companies"))
-        view = daily_company_totals(charges, companies)
-        if date:
-            view = view.filter(F.col("transaction_date") == F.lit(date).cast("date"))
-        elif start and end:
-            view = view.filter(F.col("transaction_date").between(start, end))
-        try:
-            cursor = parse_cursor(view, after) if after is not None \
-                else None
-            page, limit, offset = paginate(view, limit, offset,
-                                           after=cursor)
-        except ValueError as e:
-            raise HTTPException(status_code=400, detail=str(e))
-        return {"rows": [r.asDict() for r in page],
-                "limit": limit, "offset": offset,
-                "next": next_cursor(view.columns, page, limit)}
-
-    @app.get("/catalog")
-    def catalog_index():
+    def catalog_index(self) -> dict:
         """The whole analytics surface, discoverable: every registered
         catalog entry (name + first docstring line), so a client can
         enumerate what the engine can compute."""
-        from .. import registry
         return {"count": len(registry.QUERIES),
                 "queries": {n: (fn.__doc__ or "").strip().splitlines()[0]
                             for n, fn in sorted(registry.QUERIES.items())}}
 
-    @app.get("/catalog/{name}")
-    def catalog_run(name: str, sf_dir: str, limit: int = 1000,
-                    offset: int = 0):
+    def catalog_run(self, name: str, sf_dir: str, limit: int = 1000,
+                    offset: int = 0, after: str | None = None) -> dict:
         """Run any registered catalog entry against a confined dataset
         directory and return a bounded page - the whole 315-entry
-        analytics surface served over REST with the same pagination
-        discipline as the flagship view (total-order sort, MAX_PAGE
-        cap, never an unbounded collect)."""
-        from .. import registry
+        analytics surface served with the same paging as the flagship
+        view (total-order sort, MAX_PAGE cap, offset or keyset cursor,
+        never an unbounded collect)."""
         if name not in registry.QUERIES_RAW:
-            raise HTTPException(status_code=404,
-                                detail=f"no such catalog entry: {name}")
-        sf_dir = _confined(sf_dir)
+            raise ApiError(404, f"no such catalog entry: {name}")
         # RAW (janitor-free) callable: the entry-boundary janitor is a
         # sweep/bench-session concern; here each request drains exactly
         # the caches IT registered, in a finally AFTER the page
@@ -378,19 +387,45 @@ def build_app(spark=None, state_path: str | None = None,
         # drain can never touch a concurrent request's in-flight cache,
         # and threadpool threads — long-lived and reused — don't
         # accumulate one resident cache per request served).
-        from .. import opcache
         try:
-            df = registry.QUERIES_RAW[name](spark, sf_dir)
-            try:
-                page, limit, offset = paginate(df, limit, offset)
-            except ValueError as e:
-                raise HTTPException(status_code=400, detail=str(e))
+            df = registry.QUERIES_RAW[name](self.spark, self._confined(sf_dir))
             return {"name": name, "columns": df.columns,
-                    "rows": [r.asDict() for r in page],
-                    "limit": limit, "offset": offset}
+                    **_page(df, limit, offset, after)}
         finally:
             opcache.release_all()
 
+
+def build_app(spark=None, state_path: str | None = None,
+              data_root: str | None = None):
+    """The route table over one :class:`Api`: each route is one call to
+    its method, and one exception handler turns :class:`ApiError` into
+    the ``{"detail": ...}`` response an ``HTTPException`` gives. Only
+    /extract keeps a pydantic body, so an out-of-range number gets the
+    reference's 422 (reference api/main.py:12-13)."""
+    if not HAVE_FASTAPI:
+        raise RuntimeError("fastapi not installed in this environment")
+    if spark is None:
+        spark = get_spark("python_etl_rest_api_spark-api")
+    api = Api(spark, state_path, data_root)
+    app = FastAPI(title="python_etl_rest_api_spark",
+                  description="PySpark-native analytics engine - "
+                              "Spark jobs orchestrated via REST")
+
+    @app.exception_handler(ApiError)
+    async def api_error(request, exc):
+        return await http_exception_handler(request, HTTPException(*exc.args))
+
+    @app.post("/extract")
+    def extract(req: ExtractRequest):
+        return api.extract(req.number)
+
+    for verb, path, method in (
+            ("GET", "/health", api.health), ("GET", "/missing", api.missing),
+            ("POST", "/reset", api.reset), ("POST", "/etl/run", api.etl_run),
+            ("GET", "/view/daily_company_totals", api.view_daily),
+            ("GET", "/catalog", api.catalog_index),
+            ("GET", "/catalog/{name}", api.catalog_run)):
+        app.add_api_route(path, method, methods=[verb])
     return app
 
 
@@ -401,7 +436,6 @@ def main() -> None:
     parser = argparse.ArgumentParser(description="First100 CLI")
     parser.add_argument("--extract", type=int, required=True)
     args = parser.parse_args()
-    from ..session import get_spark
     state = First100(get_spark("first100-cli"))
     try:
         state.extract(args.extract)

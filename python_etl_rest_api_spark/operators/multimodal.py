@@ -117,9 +117,11 @@ def synthesize_media(spark, n: int = 64) -> DataFrame:
     """Deterministic fake media table (payload = seeded bytes) for tests.
 
     Emitted in a handful of partitions sized to the payload volume: a
-    mapInPandas decode forks one Python worker per partition, so letting
-    a KB-scale table default to defaultParallelism (one per core) pays a
-    worker spawn for every 1-2 rows. Real media tables should target
+    mapInPandas decode runs one task per partition, and each task pays
+    a fixed overhead (scheduling plus the Python worker's per-task
+    setup; the workers themselves are reused across tasks), so letting
+    a KB-scale table default to defaultParallelism (one per core) pays
+    that overhead for every 1-2 rows. Real media tables should target
     ~64-128 MB of payload per partition for the same reason."""
     rows = []
     for i in range(n):
@@ -201,7 +203,7 @@ def synthesize_wav_media(spark, n: int = 48) -> DataFrame:
         rows.append((i, "audio", "audio/wav",
                      _wav_bytes(WAV_SAMPLE_RATE, samples),
                      (None, None, nf * 1000 // WAV_SAMPLE_RATE)))
-    # coalesce: see synthesize_media - one Python worker per partition.
+    # coalesce: see synthesize_media - one task's overhead per partition.
     return local_frame(spark, rows, MEDIA_SCHEMA).coalesce(4)
 
 
@@ -269,7 +271,7 @@ def synthesize_bmp_media(spark, n: int = 48) -> DataFrame:
         w, h = 8 + i % 5, 6 + i % 3
         rows.append((i, "image", "image/bmp",
                      _encode_bmp(_synth_pixels(i, w, h)), (w, h, None)))
-    # coalesce: see synthesize_media - one Python worker per partition.
+    # coalesce: see synthesize_media - one task's overhead per partition.
     return local_frame(spark, rows, MEDIA_SCHEMA).coalesce(4)
 
 
@@ -377,7 +379,7 @@ def synthesize_png_media(spark, n: int = 48) -> DataFrame:
         w, h = 8 + i % 5, 6 + i % 3
         rows.append((i, "image", "image/png",
                      _encode_png(_synth_pixels(i, w, h)), (w, h, None)))
-    # coalesce: see synthesize_media - one Python worker per partition.
+    # coalesce: see synthesize_media - one task's overhead per partition.
     return local_frame(spark, rows, MEDIA_SCHEMA).coalesce(4)
 
 
@@ -800,7 +802,7 @@ def synthesize_jpeg_media(spark, n: int = 48) -> DataFrame:
             w, h,
             lambda x, y, i=i: (i * 13 + (x // 8) * 17 + (y // 8) * 29) % 256)
         rows.append((i, "image", "image/jpeg", payload, (w, h, None)))
-    # coalesce: see synthesize_media - one Python worker per partition.
+    # coalesce: see synthesize_media - one task's overhead per partition.
     return local_frame(spark, rows, MEDIA_SCHEMA).coalesce(4)
 
 
@@ -979,7 +981,7 @@ def synthesize_avi_media(spark, n: int = 48) -> DataFrame:
             lambda f, x, y, i=i: (i * 7 + f * 31 + x * 3 + y * 5) % 256)
         rows.append((i, "video", "video/x-msvideo", payload,
                      (w, h, nf * 1000 // AVI_FPS)))
-    # coalesce: see synthesize_media - one Python worker per partition.
+    # coalesce: see synthesize_media - one task's overhead per partition.
     return local_frame(spark, rows, MEDIA_SCHEMA).coalesce(4)
 
 

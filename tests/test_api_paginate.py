@@ -1,7 +1,7 @@
 """API response bounding: /view/daily_company_totals pages via
 api.app.paginate, so an unbounded view can never become one giant JSON
-response (round-2 advice). fastapi isn't in the container, so the helper
-is tested directly -- the endpoint is a thin wrapper over it."""
+response (round-2 advice). The helper is tested directly here; the
+endpoint bodies that page through it are tested in test_api_handlers.py."""
 
 from pyspark.sql import functions as F
 

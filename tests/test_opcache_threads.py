@@ -5,6 +5,7 @@ start) can never unpersist ANOTHER thread's in-flight cache, and the
 REST catalog endpoint's per-request drain only touches the caches the
 request itself registered."""
 
+import os
 import threading
 
 from pyspark.sql import functions as F
@@ -92,14 +93,12 @@ def test_interleaved_entries_keep_foreign_caches(spark):
 def test_dedup_entry_races_rest_raw_request(spark):
     """The ADVICE-medium scenario verbatim: thread A is mid-flight in a
     caching DEDUP entry (operator cache registered, not yet released)
-    while thread B serves a REST RAW request for another caching entry
-    — B runs the QUERIES_RAW callable, paginates, and drains ITS OWN
-    caches in a finally, exactly the /catalog/{name} endpoint body
-    (fastapi isn't installed here, so the endpoint's code path is
-    exercised directly). B's per-request drain must not evict A's
+    while thread B serves a REST request for another caching entry
+    through the /catalog/{name} endpoint body, ``Api.catalog_run``,
+    which runs the QUERIES_RAW callable, pages, and drains ITS OWN
+    caches in a finally. B's per-request drain must not evict A's
     in-flight cache."""
-    from python_etl_rest_api_spark import registry
-    from python_etl_rest_api_spark.api.app import paginate
+    from python_etl_rest_api_spark.api.app import Api
     from python_etl_rest_api_spark.operators import dedup
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -129,13 +128,8 @@ def test_dedup_entry_races_rest_raw_request(spark):
     def thread_b():
         try:
             assert b_may_start.wait(120)
-            # the RAW endpoint body: janitor-free callable + paginate,
-            # then a per-request drain in finally
-            try:
-                df = registry.QUERIES_RAW["dedup_simhash"](spark, SF_DIR)
-                paginate(df, 10, 0)
-            finally:
-                opcache.release_all()
+            Api(spark, data_root=os.path.dirname(SF_DIR)).catalog_run(
+                "dedup_simhash", SF_DIR, limit=10)
         except BaseException as e:  # noqa: BLE001
             errs.append(e)
         finally:
