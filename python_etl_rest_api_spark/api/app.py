@@ -318,11 +318,14 @@ class Api:
     def etl_run(self, csv_path: str, out_dir: str) -> dict:
         """The reference's batch ETL (etl/03_transform_and_load.py) as an
         on-demand Spark job: clean + quarantine + dim/fact parquet. The
-        clean frame's cache is released when the request ends, so a
-        long-running service holds none per request served."""
+        request is the thread's unit of work ``api.etl_run``: its jobs
+        carry that tag, and its cached clean frame is released when the
+        request ends, so a long-running service holds none per request
+        served."""
         csv_path, out_dir = self._confined(csv_path), self._confined(out_dir)
         if not os.path.exists(csv_path):
             raise ApiError(404, f"no such file: {csv_path}")
+        opcache.own(self.spark, "api.etl_run")
         try:
             raw = read_charges_csv(self.spark, csv_path)
             clean, critical = clean_pipeline(raw)
@@ -334,7 +337,7 @@ class Api:
                              ("companies", companies), ("charges", charges)):
                 atomic_overwrite(df, os.path.join(out_dir, name))
         finally:
-            opcache.release_all()
+            opcache.own(self.spark)
         return {"counts": counts, "out_dir": out_dir}
 
     def view_daily(self, warehouse_dir: str, date: str | None = None,
@@ -378,21 +381,17 @@ class Api:
         analytics surface served with the same paging as the flagship
         view (total-order sort, MAX_PAGE cap, offset or keyset cursor,
         never an unbounded collect)."""
-        if name not in registry.QUERIES_RAW:
+        if name not in registry.QUERIES:
             raise ApiError(404, f"no such catalog entry: {name}")
-        # RAW (janitor-free) callable: the entry-boundary janitor is a
-        # sweep/bench-session concern; here each request drains exactly
-        # the caches IT registered, in a finally AFTER the page
-        # collects (the opcache registry is threading.local, so the
-        # drain can never touch a concurrent request's in-flight cache,
-        # and threadpool threads — long-lived and reused — don't
-        # accumulate one resident cache per request served).
+        # the entry is this thread's unit of work until the page is
+        # collected; ending it here releases the entry's caches and its
+        # job tag, so a reused threadpool thread holds neither
         try:
-            df = registry.QUERIES_RAW[name](self.spark, self._confined(sf_dir))
+            df = registry.QUERIES[name](self.spark, self._confined(sf_dir))
             return {"name": name, "columns": df.columns,
                     **_page(df, limit, offset, after)}
         finally:
-            opcache.release_all()
+            opcache.own(self.spark)
 
 
 def build_app(spark=None, state_path: str | None = None,

@@ -13,68 +13,41 @@ Cross-engine determinism conventions (so value-hashes match exactly):
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import opcache
 from .functions.cleaning import money
 from .operators import analytics
 from .session import local_frame, tune
 from .sources.tables import with_event_ts
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-# Janitor-free callables for the REST API: its endpoint drains the
-# caches a request registered in its own finally (per-request scope),
-# so the entry-boundary janitor below would be redundant there. The
-# opcache registry itself is threading.local, so even interleaved
-# threads running WRAPPED entries can only ever drain their own
-# caches, never another thread's in-flight frame.
-QUERIES_RAW: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
-
-# Name of the catalog entry whose invocation was seen last via the
-# QUERIES registry on THIS thread — the cache janitor's entry-boundary
-# marker. Thread-local for the same reason as the opcache registry:
-# two threads interleaving different entries must not reset each
-# other's boundary (each thread's cache hygiene is its own).
-_ACTIVE = __import__("threading").local()
 
 
 def query(name: str, oracle: str | None = None):
-    """Register a catalog entry. BOTH registry callables (QUERIES and
-    QUERIES_RAW - what the driver, bench, sweeps and REST API invoke)
-    first apply the session conventions with tune(): the caller's
-    session may be one get_spark never built, and this is the one place
-    a query applies RUNTIME_CONF. The QUERIES callable is also wrapped
-    with the opcache janitor: starting a DIFFERENT entry releases every
-    operator-internal cache the previous entry registered, so long
-    sweep/bench sessions never accumulate resident caches (measured
-    100x: prior entries' lingering caches taxed dedup_minhash_lsh 12.7
-    -> 15.1 s). Consecutive invocations of the SAME entry keep their
-    caches (bench warm-up + timed reps rely on that). The DECORATED
+    """Register a catalog entry. The registered callable (what the
+    driver, bench, sweeps and REST API invoke) makes the entry the
+    calling thread's unit of work with ``opcache.own(session, name)``:
+    a different entry's caches are released and every job the entry
+    runs carries the Spark job tag ``name``, also the jobs its lazy
+    frame runs at the caller's collect. It then applies the session
+    conventions with tune(): the caller's session may be one get_spark
+    never built, and this is the one place a query applies RUNTIME_CONF.
+    Consecutive calls of the SAME entry keep their caches. The DECORATED
     SYMBOL stays the original function, so one entry composing another
-    in Python never re-applies the conventions or triggers a mid-entry
-    release; unpersist never breaks lineage, so even a stale lazy frame
-    from a prior entry only recomputes, never crashes."""
+    in Python never re-applies the conventions or starts a new unit."""
     def deco(fn):
-        import functools
-
-        from . import opcache
-
         @functools.wraps(fn)
-        def raw(session, sf_dir):
+        def entry(session, sf_dir):
+            opcache.own(session, name)
             return fn(tune(session), sf_dir)
 
-        @functools.wraps(fn)
-        def wrapped(spark, sf_dir):
-            if getattr(_ACTIVE, "entry", None) != name:
-                opcache.release_all()
-                _ACTIVE.entry = name
-            return raw(spark, sf_dir)
-
-        QUERIES[name] = wrapped
-        QUERIES_RAW[name] = raw
+        QUERIES[name] = entry
         if oracle is not None:
             ORACLES[name] = oracle
         return fn

@@ -284,15 +284,16 @@ def etl_clean_scaled(spark, sf_dir):
     double-parse core-bound, persist-before-impute 7.9s) picked the
     cache; r13 re-measured at 100x AFTER the impute join became an
     explicit broadcast (operators/clean.py::impute_company_name) and
-    the ranking flipped: cache_staged 8.6s vs UNCACHED 7.2s
-    (same-session interleaved mins; shipped r12 form 9.2s). With the
-    15M-row SortMergeJoin exchange gone, the cache's columnar write
-    (+2.8s on the build pass, measured) costs more than the
-    recomputation it saves - Catalyst column-prunes the agg branch to
-    the flag inputs (the updated_at parse drops out), so the second
-    pass is narrower than the first. The at-scale answer for a REAL
-    pipeline remains split_critical_materialized (parse once to
-    parquet, impute over the parquet-backed clean tier - see
+    the ranking flipped: caching the standardized frame 8.6s vs
+    UNCACHED 7.2s (same-session interleaved mins; shipped r12 form
+    9.2s). With the 15M-row SortMergeJoin exchange gone, the cache's
+    columnar write (+2.8s on the build pass, measured) costs more than
+    the recomputation it saves - Catalyst column-prunes the agg branch
+    to the flag inputs (the updated_at parse drops out), so the second
+    pass is narrower than the first. clean_pipeline's option to cache
+    the standardized frame was therefore removed. The at-scale answer
+    for a REAL pipeline remains split_critical_materialized (parse once
+    to parquet, impute over the parquet-backed clean tier - see
     clean.py)."""
     raw = _scaled_raw_df(spark, sf_dir)
     clean, _ = clean_pipeline(raw, order_col="rid", timestamp_formats=_ETL_FORMATS)

@@ -2223,7 +2223,7 @@ def source_csv_corrupt_records(spark, sf_dir):
         T.StructField("_corrupt_record", T.StringType()),
     ])
     from .opcache import cache as _opcache
-    # registered cache: released at the next entry boundary instead of
+    # registered cache: released when the entry's unit ends instead of
     # leaking one tiny parsed frame per invocation (.cache is REQUIRED
     # here - Spark computes _corrupt_record only on the materialized
     # parse, a recompute would re-read the file per aggregate)

@@ -1,47 +1,36 @@
-"""Per-thread registry for operator-internal DataFrame caches.
+"""One owner per thread for operator caches and the thread's Spark job tag.
 
-Several operators cache an intermediate that feeds multiple join sides
-(minhash shingle/band tables, simhash sketches, containment postings,
-the corrupt-CSV parse). Long-lived sessions — the 315-entry oracle
-sweep, the bench loop, a REST service — would otherwise accumulate
-every invocation's cache until storage eviction, and the LINGERING
-memory pressure taxes every later query (measured at the 100x bench
-point: dedup_minhash_lsh 12.7 s solo vs 15.1 s in-suite with prior
-entries' caches resident).
+The rule: each thread does one unit of work at a time. ``own(spark,
+name)`` starts the unit ``name`` on the calling thread. When ``name``
+differs from the thread's current unit, it unpersists every cache the
+thread registered with :func:`cache` and moves the thread's Spark job
+tag from the old name to the new one, so every job the unit runs -
+including the ones its lazy frames run at the caller's collect - carries
+the unit's name (``spark.job.tags`` in the event log). A repeat call
+with the same name keeps the caches, so consecutive calls of one catalog
+entry can reuse them. ``own(spark)`` with no name ends the unit.
 
-The registry is ``threading.local``: a cache registered on thread A is
-invisible to ``release_all()`` on thread B, so concurrent callers (the
-REST API serves catalog entries from a FastAPI threadpool) can never
-unpersist each other's in-flight caches — each thread's hygiene is its
-own. Single-threaded sweep/bench/driver sessions see exactly the old
-behavior (one thread, one registry).
+Owners: every catalog entry (``catalog.query``), each REST request that
+caches (``api.app.Api``), and the bench's amortized sections. Caches
+registered inside one unit all live until the unit ends, so a second
+caching operator never drops the first one's cache. Releasing is always
+safe: unpersist never breaks lineage, a stale lazy frame recomputes.
 
-Thread-exit hygiene: a worker thread that dies without reaching a
-release point would strand its caches (the thread-local registry is
-unreachable, but Spark keeps the persisted frames resident until
-storage eviction). Every per-thread registry is therefore ALSO tracked
-in a global map (the list held strongly, the owner Thread by weakref
-— liveness probe only), and both ``cache()`` and ``release_all()``
-opportunistically drain registries whose owner thread is no longer
-alive or whose Thread object has been collected — a LIVE thread's caches are never touched by another thread,
-preserving the isolation guarantee. Callers spawning short-lived
-worker threads should still call ``release_all()`` on the worker
-before it exits (prompt release beats eventual reclamation); the
-reaper is the backstop, not the contract.
+Why it matters: long-lived sessions (the 315-entry oracle sweep, the
+bench loop, a REST service) would otherwise accumulate every
+invocation's cache until storage eviction, and the lingering memory
+pressure taxes every later query (measured at the 100x bench point:
+dedup_minhash_lsh 12.7 s solo vs 15.1 s in-suite with prior entries'
+caches resident).
 
-Two release points, both safe because unpersist never breaks lineage
-(a stale lazy frame recomputes instead of crashing):
-
-- each caching operator releases the registry at ITS OWN start
-  (per-invocation hygiene, protects non-catalog callers);
-- the catalog ``query`` decorator releases it whenever a DIFFERENT
-  entry starts (entry-boundary hygiene for sweep/bench sessions) —
-  consecutive invocations of the SAME entry keep their cache, which is
-  what the bench warm-up relies on;
-- the REST catalog endpoint drains in a ``finally`` after its page
-  collects (per-request hygiene — threadpool threads are long-lived
-  and reused, so without it each request would leak one resident
-  cache into the pool thread).
+The registry is ``threading.local`` and Spark job tags are per-thread
+local properties, so a thread can never unpersist or retag another
+thread's in-flight work (the REST API serves requests from a
+threadpool). A thread that dies without ending its unit would strand
+its caches, so every per-thread registry is also tracked in a global
+map (the list held strongly, the owner Thread by weakref - a liveness
+probe only), and :func:`cache` and :func:`release_all` drain the
+registries of threads that are no longer alive.
 """
 
 from __future__ import annotations
@@ -54,14 +43,9 @@ from pyspark.sql import DataFrame
 _LOCAL = threading.local()
 
 # id(thread) -> (weakref to the owner Thread, that thread's registry
-# list). Guarded by _REG_LOCK. The registry list is held STRONGLY and
-# the Thread only by weakref: holding the Thread itself weakly (the
-# pre-r12 WeakKeyDictionary form) meant a Thread object collected
-# before any cache()/release_all() ran took its registry entry with it,
-# and that thread's persisted frames stranded until storage eviction —
-# the backstop missed exactly the unreferenced-thread case (ADVICE
-# r11). An entry is removed only AFTER its list is drained, so a
-# collected Thread still gets its caches reaped. id() reuse cannot
+# list). Guarded by _REG_LOCK. The list is held strongly, so a Thread
+# object collected before any reap still gets its caches drained; an
+# entry is removed only after its list is drained. id() reuse cannot
 # alias a live registry: _register() drains any stale entry (dead or
 # collected owner) before overwriting the slot.
 _REGISTRIES: dict[int, tuple["weakref.ref[threading.Thread]", list]] = {}
@@ -95,7 +79,7 @@ def _drain(lst: list) -> None:
 
 def _reap_dead_threads() -> None:
     """Unpersist caches stranded by threads that exited (or whose
-    Thread object was collected) without a release point. Only such
+    Thread object was collected) without ending their unit. Only such
     threads' registries are touched — the owner cannot race us — and
     each entry is dropped only after its list is drained."""
     with _REG_LOCK:
@@ -112,8 +96,8 @@ def _reap_dead_threads() -> None:
 
 
 def cache(df: DataFrame) -> DataFrame:
-    """Cache ``df`` and register it (on THIS thread's registry) for the
-    next release point. Also reaps registries stranded by dead
+    """Cache ``df`` and register it on THIS thread's registry, so the
+    thread's unit owns it. Also reaps registries stranded by dead
     threads."""
     _reap_dead_threads()
     _cached().append(df)
@@ -129,8 +113,25 @@ def release_all() -> None:
     A thread that never cached anything allocates nothing here: going
     through _cached() would insert an empty registry slot for every
     transient caller thread (reaped only after the thread dies), so the
-    no-op path reads the thread-local directly (ADVICE r12)."""
+    no-op path reads the thread-local directly."""
     lst = getattr(_LOCAL, "cached", None)
     if lst is not None:
         _drain(lst)
     _reap_dead_threads()
+
+
+def own(spark, name: str | None = None) -> None:
+    """Start the calling thread's unit of work ``name``, or end its
+    current unit when ``name`` is None. A new name releases every cache
+    the thread registered and moves the thread's Spark job tag to
+    ``name``; the current unit's name again is a no-op."""
+    prev = getattr(_LOCAL, "unit", None)
+    if name is not None and name == prev:
+        return
+    release_all()
+    sc = spark.sparkContext
+    if prev is not None:
+        sc.removeJobTag(prev)
+    if name is not None:
+        sc.addJobTag(name)
+    _LOCAL.unit = name

@@ -225,7 +225,6 @@ def impute_company_name(df: DataFrame, order_col: str = ROW_ID) -> DataFrame:
 def clean_pipeline(raw: DataFrame, order_col: str = ROW_ID,
                    keep_order_col: bool = False,
                    timestamp_formats: tuple[str, ...] | None = None,
-                   cache_staged: bool = False,
                    ) -> tuple[DataFrame, DataFrame]:
     """Full transform: raw charges CSV frame -> (clean, critical).
 
@@ -233,24 +232,11 @@ def clean_pipeline(raw: DataFrame, order_col: str = ROW_ID,
     columns, critical additionally carries ``_critical_reason``.
     ``order_col`` is the stable file-order column driving the
     order-dependent imputation (and, with ``keep_order_col``, the
-    first-seen-wins dim load downstream).
-
-    ``cache_staged`` registers the standardized frame with the opcache
-    janitor: the imputation's first-valid-name aggregation joins back
-    onto the SAME standardized subtree (a plan diamond), and the lazy
-    path re-runs the lenient casts once per branch — the dominant cost
-    at volume (measured at 100x data: the multi-format timestamp parse
-    alone is ~half the entry). The cache collapses the diamond to one
-    parse; release is the janitor's entry boundary (or the caller's own
-    ``opcache.release_all()``), so long sweep sessions don't accumulate
-    it. Default off: one-shot callers and the 17-row golden path don't
-    need a resident copy, and a REAL production pipeline should prefer
-    split_critical_materialized (parse once to parquet) instead.
+    first-seen-wins dim load downstream). The standardized frame is not
+    cached: at 100x data the cached form measured slower (see
+    catalog_etl.etl_clean_scaled).
     """
     staged = standardize(raw, timestamp_formats)
-    if cache_staged:
-        from ..opcache import cache as _opcache
-        staged = _opcache(staged)
     clean, critical = split_critical(staged)
     clean = impute_company_name(clean, order_col=order_col)
     cols = ["id", "company_name", "company_id", "amount", "status",

@@ -34,15 +34,12 @@ from pyspark.sql import functions as F
 from ..session import local_frame, widen_scan
 from .text import tokens
 
-# Frames cached by the most recent near-dup invocation. Each new call
-# unpersists the previous call's blocks first, so long-lived sessions
-# (bench loops, oracle sweeps, REST services) hold at most one
-# invocation's worth of cached sketches instead of accumulating until
-# storage eviction (ADVICE round 1). The registry lives in opcache so
-# the catalog's query decorator can ALSO drain it at entry boundaries
-# (see the opcache module docstring).
+# Frames that feed several join sides are cached through opcache, which
+# unpersists them when the calling thread's unit of work ends (the next
+# catalog entry, or the end of a REST request), so long-lived sessions
+# never accumulate them until storage eviction. See the opcache module
+# docstring.
 from ..opcache import cache as _cache  # noqa: E402
-from ..opcache import release_all as _release_prior_cache  # noqa: E402
 
 
 def exact_dup_groups(df: DataFrame, text_col: str = "text",
@@ -255,8 +252,7 @@ def minhash_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
     (dedup_minhash_recall) can measure banding coverage - how many true
     near-dup pairs the LSH surfaces at all - separately from the verify
     step that restores precision. Both returned frames are cached (they
-    each feed two join sides downstream; previous invocation's cache is
-    released).
+    each feed two join sides downstream).
 
     The cached shingle table also carries ``sh_hash`` — xxhash64-mapped
     shingles — so the verify leg can intersect fixed-width longs
@@ -270,10 +266,8 @@ def minhash_candidate_pairs(df: DataFrame, id_col: str = "doc_id",
 def shingle_cache(df: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text", n: int = 3) -> DataFrame:
     """The cached (id, shingles, sh_hash) table every minhash leg serves
-    from; releases the prior invocation's caches first (factored out in
-    r13 so the bench can time this build separately from the band/
-    verify serve path — behavior unchanged)."""
-    _release_prior_cache()
+    from (factored out so the bench can time this build separately from
+    the band/verify serve path)."""
     return _cache(
         shingled_docs(widen_scan(df), id_col, text_col, n)
         .withColumn("sh_hash",
@@ -316,7 +310,7 @@ def minhash_near_dups(df: DataFrame, id_col: str = "doc_id",
     are the known hazard - AQE skew-join handles moderate cases.
 
     Both derived tables feed two join sides -> cached to avoid recomputing
-    the sketch pipeline per side (previous invocation's cache released).
+    the sketch pipeline per side.
 
     A "fold everything into one explode+groupBy" variant (the K
     permutation minima AND collect_list(xxhash64(s)) in the same
@@ -491,7 +485,6 @@ def simhash_near_dups(df: DataFrame, id_col: str = "doc_id",
     or 15 bits (portable 60-bit md5 sketch)."""
     band_bits = 15 if portable else 16
     mask = (1 << band_bits) - 1
-    _release_prior_cache()
     sk = _cache(simhash64(df, id_col, text_col, portable=portable))
     bands = sk.select(
         id_col, "simhash",
@@ -720,7 +713,6 @@ def containment_pairs(df: DataFrame, id_col: str = "doc_id",
     keys instead of ~20-char trigrams. Same-hash collisions are
     negligible at 60 bits and, because both engines hash identically,
     would be reproduced identically anyway."""
-    _release_prior_cache()
     posts = _cache(
         shingled_docs(df, id_col, text_col, n)
         .select(id_col, F.explode(F.array_distinct("shingles")).alias("s"))

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import _cache, _release_prior_cache
+from .dedup import _cache
 
 
 def asof_join(left: DataFrame, right: DataFrame, key: str, ts: str,
@@ -66,12 +66,11 @@ def time_band_pairs(events: DataFrame, key: str, ts: str, id_col: str,
     once). Blocking bins make it an equi-join; the exact |dt| filter runs
     on the candidates only.
 
-    The binned base feeds both join sides, so it is cached through the
-    shared near-dup cache registry: the next banded/near-dup invocation
-    releases it, so long-lived sessions never accumulate stale blocks.
+    The binned base feeds both join sides, so it is cached through
+    opcache: it is released when the calling thread's unit of work
+    ends, so long-lived sessions never accumulate stale blocks.
     """
     band_us = F.lit(int(band_seconds) * 1_000_000)
-    _release_prior_cache()
     base = _cache(events.select(
         F.col(key).alias("_k"),
         F.col(id_col).alias("_id"),

@@ -30,8 +30,8 @@ from pyspark.sql import functions as F
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # The engine's SQL conventions - the ONE list of them. get_spark builds
-# its session with them, and every catalog registry callable (QUERIES /
-# QUERIES_RAW) re-applies them via tune() before it runs its entry, so a
+# its session with them, and every catalog registry callable (QUERIES)
+# re-applies them via tune() before it runs its entry, so a
 # session someone else built (e.g. the verification driver's) gets them
 # too. Operators, loaders and the decorated catalog symbols assume a
 # session that already has them and never set confs themselves: a query
