@@ -194,9 +194,9 @@ def main() -> None:
     # - minhash shingle cache: the cached (id, shingles, sh_hash)
     #   materialization every dedup_minhash_lsh invocation pays
     #   (build), vs the band+verify pipeline served from a warm cache
-    #   (serve) - the headline number includes BOTH every rep (the
-    #   interleaved reps release the cache between two calls of the
-    #   entry, so each one rebuilds it), so build+serve here decompose it.
+    #   (serve) - the headline number includes BOTH every rep (each
+    #   call of the entry releases the earlier call's cache and
+    #   rebuilds it), so build+serve here decompose it.
     amortized: dict[str, dict] = {}
     opcache.own(spark, "bench.bucketed_layout")
     try:

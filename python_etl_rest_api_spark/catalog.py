@@ -33,14 +33,14 @@ def query(name: str, oracle: str | None = None):
     """Register a catalog entry. The registered callable (what the
     driver, bench, sweeps and REST API invoke) makes the entry the
     calling thread's unit of work with ``opcache.own(session, name)``:
-    a different entry's caches are released and every job the entry
+    the thread's earlier caches are released and every job the entry
     runs carries the Spark job tag ``name``, also the jobs its lazy
     frame runs at the caller's collect. It then applies the session
     conventions with tune(): the caller's session may be one get_spark
     never built, and this is the one place a query applies RUNTIME_CONF.
-    Consecutive calls of the SAME entry keep their caches. The DECORATED
-    SYMBOL stays the original function, so one entry composing another
-    in Python never re-applies the conventions or starts a new unit."""
+    The DECORATED SYMBOL stays the original function, so one entry
+    composing another in Python never re-applies the conventions or
+    starts a new unit."""
     def deco(fn):
         @functools.wraps(fn)
         def entry(session, sf_dir):

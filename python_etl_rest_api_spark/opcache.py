@@ -1,20 +1,24 @@
 """One owner per thread for operator caches and the thread's Spark job tag.
 
 The rule: each thread does one unit of work at a time. ``own(spark,
-name)`` starts the unit ``name`` on the calling thread. When ``name``
-differs from the thread's current unit, it unpersists every cache the
-thread registered with :func:`cache` and moves the thread's Spark job
-tag from the old name to the new one, so every job the unit runs -
-including the ones its lazy frames run at the caller's collect - carries
-the unit's name (``spark.job.tags`` in the event log). A repeat call
-with the same name keeps the caches, so consecutive calls of one catalog
-entry can reuse them. ``own(spark)`` with no name ends the unit.
+name)`` ends the calling thread's current unit and starts the unit
+``name``: it unpersists every cache the thread registered with
+:func:`cache` and moves the thread's Spark job tag from the old name to
+the new one, so every job the unit runs - including the ones its lazy
+frames run at the caller's collect - carries the unit's name
+(``spark.job.tags`` in the event log). ``own(spark)`` with no name, or
+:func:`release_all`, ends the unit: the caches are unpersisted and the
+tag is removed, so later jobs on the thread carry none.
 
 Owners: every catalog entry (``catalog.query``), each REST request that
 caches (``api.app.Api``), and the bench's amortized sections. Caches
 registered inside one unit all live until the unit ends, so a second
-caching operator never drops the first one's cache. Releasing is always
-safe: unpersist never breaks lineage, a stale lazy frame recomputes.
+caching operator never drops the first one's cache. An operator called
+outside any unit (e.g. ``dedup.simhash_near_dups`` from a script) keeps
+its caches until the thread's next unit, so a caller that loops over
+batches that way should end each batch with ``own(spark)``. Releasing is
+always safe: unpersist never breaks lineage, a stale lazy frame
+recomputes.
 
 Why it matters: long-lived sessions (the 315-entry oracle sweep, the
 bench loop, a REST service) would otherwise accumulate every
@@ -105,10 +109,11 @@ def cache(df: DataFrame) -> DataFrame:
 
 
 def release_all() -> None:
-    """Unpersist every cache registered on the CALLING thread
-    (idempotent, exception-safe — a cache whose session already stopped
-    just drops from the list). Other LIVE threads' registries are
-    untouched; registries stranded by DEAD threads are reaped.
+    """End the CALLING thread's unit of work: unpersist every cache it
+    registered and remove its job tag (idempotent, exception-safe - a
+    cache or tag whose session already stopped just drops). Other LIVE
+    threads' registries and tags are untouched; registries stranded by
+    DEAD threads are reaped.
 
     A thread that never cached anything allocates nothing here: going
     through _cached() would insert an empty registry slot for every
@@ -117,21 +122,24 @@ def release_all() -> None:
     lst = getattr(_LOCAL, "cached", None)
     if lst is not None:
         _drain(lst)
+    unit = getattr(_LOCAL, "unit", None)
+    if unit is not None:
+        _LOCAL.unit = None
+        sc, name = unit
+        try:
+            sc.removeJobTag(name)
+        except Exception:
+            pass
     _reap_dead_threads()
 
 
 def own(spark, name: str | None = None) -> None:
-    """Start the calling thread's unit of work ``name``, or end its
-    current unit when ``name`` is None. A new name releases every cache
-    the thread registered and moves the thread's Spark job tag to
-    ``name``; the current unit's name again is a no-op."""
-    prev = getattr(_LOCAL, "unit", None)
-    if name is not None and name == prev:
-        return
+    """End the calling thread's current unit of work (release_all) and,
+    when ``name`` is given, start the unit ``name``: the thread's jobs
+    carry the Spark job tag ``name`` until its next unit or the end of
+    this one."""
     release_all()
-    sc = spark.sparkContext
-    if prev is not None:
-        sc.removeJobTag(prev)
     if name is not None:
+        sc = spark.sparkContext
         sc.addJobTag(name)
-    _LOCAL.unit = name
+        _LOCAL.unit = (sc, name)

@@ -37,8 +37,9 @@ from .text import tokens
 # Frames that feed several join sides are cached through opcache, which
 # unpersists them when the calling thread's unit of work ends (the next
 # catalog entry, or the end of a REST request), so long-lived sessions
-# never accumulate them until storage eviction. See the opcache module
-# docstring.
+# never accumulate them until storage eviction. A caller outside any
+# catalog entry or request keeps them until it ends its work with
+# opcache.own(spark). See the opcache module docstring.
 from ..opcache import cache as _cache  # noqa: E402
 
 

@@ -68,7 +68,9 @@ def time_band_pairs(events: DataFrame, key: str, ts: str, id_col: str,
 
     The binned base feeds both join sides, so it is cached through
     opcache: it is released when the calling thread's unit of work
-    ends, so long-lived sessions never accumulate stale blocks.
+    ends, so long-lived sessions never accumulate stale blocks. A
+    caller outside any catalog entry or request ends its work with
+    ``opcache.own(spark)``.
     """
     band_us = F.lit(int(band_seconds) * 1_000_000)
     base = _cache(events.select(
