@@ -97,7 +97,8 @@ def main() -> None:
     kill_orphan_spark_jvms()
 
     from python_etl_rest_api_spark import opcache, registry
-    from python_etl_rest_api_spark.session import get_spark
+    from python_etl_rest_api_spark.session import (get_spark, live_settings,
+                                                   settings)
 
     spark = get_spark("bench")
     # warm the JVM/codegen once with a trivial job so per-query timings
@@ -255,10 +256,9 @@ def main() -> None:
         # untouched. NOTE for scaling analysis: at sf0.1 per-query times
         # are 0.2-2 s and dominated by fixed job-submission overhead, so
         # the low/high-core ratio is only meaningful at sf1x and above.
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "*"),
-        "master": spark.sparkContext.master,
+        "cpus": settings().cpus,
+        **live_settings(spark),
         "default_parallelism": spark.sparkContext.defaultParallelism,
-        "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
         "ann_index": ann,
         "amortized": amortized,
     }

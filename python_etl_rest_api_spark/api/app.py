@@ -27,6 +27,7 @@ confined to a configured data root (403 outside it).
 
 from __future__ import annotations
 
+import dataclasses
 import datetime
 import os
 import tempfile
@@ -46,6 +47,7 @@ try:
 except ImportError:  # container may lack fastapi; engine still importable
     HAVE_FASTAPI = False
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from .. import opcache, registry
@@ -53,7 +55,7 @@ from ..operators.analytics import daily_company_totals
 from ..operators.clean import build_dim_fact, clean_pipeline
 from ..operators.first100 import First100, ValidationError
 from ..operators.load import atomic_overwrite
-from ..session import get_spark
+from ..session import get_spark, live_settings, settings
 from ..sources.csv_source import read_charges_csv
 
 MAX_PAGE = 10_000
@@ -257,6 +259,19 @@ def _bad_request(errors=ValueError):
         raise ApiError(400, str(e)) from e
 
 
+@contextmanager
+def _missing_dataset():
+    """Re-raise Spark's ``PATH_NOT_FOUND`` (a table the client's
+    directory does not hold) as a 404 naming the path."""
+    try:
+        yield
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        raise ApiError(404, "no such dataset: "
+                            + e.getMessageParameters().get("path", "")) from e
+
+
 def _page(view, limit: int, offset: int, after: str | None) -> dict:
     """One bounded page of ``view`` as a response body.
 
@@ -279,30 +294,37 @@ class Api:
     without fastapi; :func:`build_app` only routes to them.
 
     Holds the one SparkSession, the table-backed First100 state and
-    the data root. ``data_root`` confines every client-supplied
+    the settings. ``data_root`` confines every client-supplied
     filesystem path (csv_path, out_dir, warehouse_dir, sf_dir): paths
     are realpath-resolved and must stay under the root, else 403
     (unauthenticated endpoints must not read or overwrite arbitrary
-    host paths). Default root: $SPARK_ETL_DATA_ROOT, else the system
-    temp dir."""
+    host paths). Default root: ``Settings.data_root``. ``settings`` is
+    the process's :class:`~..session.Settings` with the root this Api
+    really uses."""
 
     def __init__(self, spark, state_path: str | None = None,
                  data_root: str | None = None):
         self.spark = spark
         self.state = First100(spark, store_path=state_path or os.path.join(
             tempfile.gettempdir(), "first100_state"))
-        self.data_root = os.path.realpath(data_root or os.environ.get(
-            "SPARK_ETL_DATA_ROOT") or tempfile.gettempdir())
+        base = settings()
+        self.settings = dataclasses.replace(base, data_root=os.path.realpath(
+            data_root or base.data_root))
 
     def _confined(self, client_path: str) -> str:
-        p = os.path.realpath(client_path)
-        if p != self.data_root and not p.startswith(self.data_root + os.sep):
-            raise ApiError(403, f"path outside data root {self.data_root}: "
+        p, root = os.path.realpath(client_path), self.settings.data_root
+        if p != root and not p.startswith(root + os.sep):
+            raise ApiError(403, f"path outside data root {root}: "
                                 f"{client_path}")
         return p
 
     def health(self) -> dict:
-        return {"status": "ok", "spark_version": self.spark.version}
+        """Liveness plus the effective config: every setting, and what
+        the live session really has for master, shuffle partitions and
+        driver memory."""
+        return {"status": "ok", "spark_version": self.spark.version,
+                "settings": dataclasses.asdict(self.settings),
+                "session": live_settings(self.spark)}
 
     def extract(self, number: int) -> dict:
         with _bad_request(ValidationError):  # reference api/main.py:24-25
@@ -359,12 +381,13 @@ class Api:
         with _bad_request():
             days = [datetime.date.fromisoformat(d) for d in bounds if d]
         warehouse_dir = self._confined(warehouse_dir)
-        view = daily_company_totals(*(
-            self.spark.read.parquet(os.path.join(warehouse_dir, t))
-            for t in ("charges", "companies")))
-        if days:
-            view = view.filter(F.col("transaction_date").between(*days))
-        return _page(view, limit, offset, after)
+        with _missing_dataset():
+            view = daily_company_totals(*(
+                self.spark.read.parquet(os.path.join(warehouse_dir, t))
+                for t in ("charges", "companies")))
+            if days:
+                view = view.filter(F.col("transaction_date").between(*days))
+            return _page(view, limit, offset, after)
 
     def catalog_index(self) -> dict:
         """The whole analytics surface, discoverable: every registered
@@ -387,9 +410,10 @@ class Api:
         # collected; ending it here releases the entry's caches and its
         # job tag, so a reused threadpool thread holds neither
         try:
-            df = registry.QUERIES[name](self.spark, self._confined(sf_dir))
-            return {"name": name, "columns": df.columns,
-                    **_page(df, limit, offset, after)}
+            with _missing_dataset():
+                df = registry.QUERIES[name](self.spark, self._confined(sf_dir))
+                return {"name": name, "columns": df.columns,
+                        **_page(df, limit, offset, after)}
         finally:
             opcache.own(self.spark)
 

@@ -256,6 +256,7 @@ def q9_product_profit(spark, sf_dir):
     One shuffle for li<->orders, one for the (nation, year) rollup.
     The part/supplier broadcasts are FACT-SCALE and route through
     session.broadcast_factscale (droppable per deployment via
+    ``Settings.factscale_broadcast``, off when the process starts with
     SPARK_GRAFT_NO_FACTSCALE_BROADCAST=1 — ADVICE r13 #1); nation's
     stays unconditional (<= 25 rows at any scale)."""
     li = _t(spark, sf_dir, "lineitem").select(

@@ -125,8 +125,9 @@ def q5_local_supplier_volume(spark, sf_dir):
 
     Scale safety (ADVICE r13 #1): the supplier chain is FACT-SCALE, so
     the explicit broadcast that wins at test scale OOMs executors at
-    100 TB. The hint routes through session.broadcast_factscale — set
-    SPARK_GRAFT_NO_FACTSCALE_BROADCAST=1 on cluster deployments to
+    100 TB. The hint routes through session.broadcast_factscale — start
+    the process with SPARK_GRAFT_NO_FACTSCALE_BROADCAST=1 (read once
+    into ``Settings.factscale_broadcast``) on cluster deployments to
     drop it (threshold guidance in that helper's docstring); the
     bounded nation/region broadcasts stay unconditional."""
     r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")

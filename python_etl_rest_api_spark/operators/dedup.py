@@ -369,8 +369,9 @@ def minhash_verify_from(cand: DataFrame, shingled: DataFrame,
     8 reps): serve leg 7.90 -> 5.73 s min / 8.51 -> 5.90 s
     second-best, exceptAll 0 both directions on all 2,503,171 pairs.
     The shingle table is FACT-SCALE (grows with the corpus), so both
-    hints route through session.broadcast_factscale — set
-    SPARK_GRAFT_NO_FACTSCALE_BROADCAST=1 on deployments where the
+    hints route through session.broadcast_factscale — start the
+    process with SPARK_GRAFT_NO_FACTSCALE_BROADCAST=1 (read once into
+    ``Settings.factscale_broadcast``) on deployments where the
     corpus' (id, sh_hash) projection exceeds executor broadcast
     budgets and the joins degrade to the declarative form. The band
     self-join is NOT broadcast: measured same-session, banding-side

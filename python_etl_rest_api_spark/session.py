@@ -11,11 +11,15 @@ Conventions (SURVEY.md section 7.3):
   scale posture for the 100 TB target.
 - the SQL confs behind these conventions live in RUNTIME_CONF only, and
   only get_spark and the catalog registry callables apply them.
+- deployment settings (cores, driver heap, the fact-scale broadcast
+  opt-out, the REST data root) come from the environment once, through
+  settings(); nothing else in the package reads the environment.
 """
 
 from __future__ import annotations
 
 import atexit
+import dataclasses
 import hashlib
 import os
 import shutil
@@ -64,6 +68,83 @@ def tune(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # conf may be static on some deployments; keep going
     return spark
+
+
+@dataclasses.dataclass(frozen=True)
+class Settings:
+    """The package's deployment settings, each from one environment
+    variable (unset or empty = the default):
+
+    - ``cpus`` (SPARK_GRAFT_CPUS, default ``*`` = all cores): get_spark's
+      ``local[N]`` master and initial shuffle partition count;
+    - ``driver_memory`` (SPARK_DRIVER_MEM, default half of the memory
+      this process may use, see :func:`_default_driver_memory`):
+      get_spark's ``spark.driver.memory``;
+    - ``factscale_broadcast`` (off when SPARK_GRAFT_NO_FACTSCALE_BROADCAST
+      is set): whether broadcast_factscale hints its side;
+    - ``data_root`` (SPARK_ETL_DATA_ROOT, default the system temp dir):
+      the root the REST endpoints may read and write under.
+
+    :func:`settings` reads them once per process."""
+    cpus: str
+    driver_memory: str
+    factscale_broadcast: bool
+    data_root: str
+
+
+_SETTINGS: Settings | None = None
+_SETTINGS_LOCK = threading.Lock()
+
+# where a container's memory limit is readable: cgroup v2, then v1
+_CGROUP_MEMORY_LIMITS = ("/sys/fs/cgroup/memory.max",
+                         "/sys/fs/cgroup/memory/memory.limit_in_bytes")
+
+
+def _default_driver_memory() -> str:
+    """Half of the memory this process may use: the machine's physical
+    memory, or the memory cgroup's limit when one is readable and
+    lower (a heap allowed to grow past a container's limit gets the
+    process killed, not a Java OutOfMemoryError)."""
+    limit = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in _CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as f:
+                limit = min(limit, int(f.read()))
+        except (OSError, ValueError):  # absent, or v2's "max"
+            pass
+    return f"{limit // 2 // 2**20}m"
+
+
+def settings() -> Settings:
+    """This process's :class:`Settings`, read from the environment on
+    the first call (not at import, so a launcher that sets variables
+    after importing the package still gets them in) and fixed from then
+    on: a process that edits its environment later does not change its
+    plans mid-life. The package's one read of the environment."""
+    global _SETTINGS
+    with _SETTINGS_LOCK:
+        if _SETTINGS is None:
+            env = os.environ
+            _SETTINGS = Settings(
+                cpus=env.get("SPARK_GRAFT_CPUS") or "*",
+                driver_memory=(env.get("SPARK_DRIVER_MEM")
+                               or _default_driver_memory()),
+                factscale_broadcast=not env.get(
+                    "SPARK_GRAFT_NO_FACTSCALE_BROADCAST"),
+                data_root=(env.get("SPARK_ETL_DATA_ROOT")
+                           or tempfile.gettempdir()))
+        return _SETTINGS
+
+
+def live_settings(spark: SparkSession) -> dict:
+    """What the running session really has for the values get_spark
+    sets from :class:`Settings`: master, shuffle partitions and driver
+    memory (Spark's default ``1g`` when no one set it)."""
+    sc = spark.sparkContext
+    return {"master": sc.master,
+            "shuffle_partitions":
+                spark.conf.get("spark.sql.shuffle.partitions"),
+            "driver_memory": sc.getConf().get("spark.driver.memory", "1g")}
 
 
 def local_frame(spark: SparkSession, rows, schema):
@@ -317,9 +398,9 @@ def broadcast_factscale(df):
     multi-GB and a forced broadcast OOMs executors (ADVICE r13 #1 — the
     scale-safety property the pre-r13 q5 guaranteed by staying
     declarative). The hint is therefore droppable per deployment:
-    set SPARK_GRAFT_NO_FACTSCALE_BROADCAST=1 (same override pattern as
-    SPARK_GRAFT_SHUFFLE_PARTITIONS) and every call degrades to the
-    declarative form, letting AQE/CBO pick the join strategy from
+    ``Settings.factscale_broadcast`` (off when the process starts with
+    SPARK_GRAFT_NO_FACTSCALE_BROADCAST set) makes every call degrade to
+    the declarative form, letting AQE/CBO pick the join strategy from
     measured sizes. Rule of thumb for operators: drop the hints once
     the filtered side exceeds a few hundred MB framed — roughly 10M
     rows of (key int, payload) — well under the 8 GB / 512M-row
@@ -328,40 +409,38 @@ def broadcast_factscale(df):
     Bounded dims (nation/region, <= 25 rows at ANY scale factor) do NOT
     route through this gate — their broadcast is scale-safe by
     construction and stays unconditional."""
-    if os.environ.get("SPARK_GRAFT_NO_FACTSCALE_BROADCAST"):
-        return df
-    return F.broadcast(df)
+    return F.broadcast(df) if settings().factscale_broadcast else df
 
 
-def get_spark(app_name: str = "python_etl_rest_api_spark",
-              cpus: str | None = None) -> SparkSession:
+def get_spark(app_name: str = "python_etl_rest_api_spark") -> SparkSession:
     """Build (or fetch) the engine session.
 
-    local[N] for tests/bench; on a real cluster the master/memory settings
-    come from spark-submit and only the SQL confs below (RUNTIME_CONF
-    plus the shuffle/Arrow/codec settings) matter.
+    local[N] for tests/bench, N = ``Settings.cpus``, heap
+    ``Settings.driver_memory``; on a real cluster the master/memory
+    settings come from spark-submit and only the SQL confs below
+    (RUNTIME_CONF plus the shuffle/Arrow/codec settings) matter.
     """
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
+    cfg = settings()
+    cpus = cfg.cpus
     # Initial shuffle parallelism follows the session's actual core
     # count instead of a constant tuned for one machine (r13; the old
     # hard-coded 32 matched local[32] but over-split an 8-core run and
     # under-split a wider one). AQE's partition coalescing still sizes
     # the real post-shuffle partition count from measured bytes; this
-    # is only the upper bound it starts from. Overridable for cluster
-    # deployments via SPARK_GRAFT_SHUFFLE_PARTITIONS (where 2-3x total
-    # executor cores, or input-size/128MB, is the usual figure).
+    # is only the upper bound it starts from. A deployment that wants
+    # another figure sets spark.sql.shuffle.partitions on its session
+    # (it is runtime-mutable).
     try:
         n_shuffle = str(int(cpus))
     except ValueError:  # local[*]
         n_shuffle = str(os.cpu_count() or 32)
-    n_shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", n_shuffle)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config(map=RUNTIME_CONF)
         .config("spark.sql.shuffle.partitions", n_shuffle)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", cfg.driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
     )

@@ -1,2 +1,2 @@
 from .csv_source import read_charges_csv  # noqa: F401
-from .tables import load_tables, register_views  # noqa: F401
+from .tables import load_tables  # noqa: F401

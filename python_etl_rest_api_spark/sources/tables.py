@@ -22,12 +22,6 @@ def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR,
     return {name: spark.read.parquet(table_path(sf_dir, name)) for name in names}
 
 
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register each table as a temp view so spark.sql() can address them."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def with_event_ts(df: DataFrame) -> DataFrame:
     """Give an events frame (batch or stream) a TIMESTAMP ``ts`` whatever
     the parquet file encodes. Dispatch on the LOADED dtype:

@@ -13,7 +13,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("pytest", cpus="8")
+    s = get_spark("pytest")
     yield s
 
 

@@ -1,10 +1,11 @@
 """The REST endpoint bodies, run as the plain ``Api`` methods they are
 (fastapi is not needed): /etl/run, the flagship view with both filter
 patterns and both paging styles, the catalog endpoints, First100, data
-root confinement and every 400/403/404 - plus the ``build_app`` route
-table, registered against a stub framework."""
+root confinement, /health and every 400/403/404 - plus the
+``build_app`` route table, registered against a stub framework."""
 
 import asyncio
+import dataclasses
 import datetime
 import json
 import os
@@ -18,6 +19,7 @@ from test_e2e import CSV as REF_CSV
 from python_etl_rest_api_spark import registry
 from python_etl_rest_api_spark.api import app as app_mod
 from python_etl_rest_api_spark.api.app import MAX_OFFSET, Api, ApiError
+from python_etl_rest_api_spark.session import settings
 
 COMPANIES = {"c01": "Alpha", "c02": "Beta", "c03": "Gamma"}
 DAYS = [datetime.date(2024, 3, d) for d in range(1, 6)]
@@ -226,6 +228,13 @@ def test_catalog_run_errors(catalog_api):
                    "/etc") == 403
 
 
+def test_missing_dataset_is_404(api, root):
+    # root holds charges.csv only: no charges/companies warehouse
+    # tables, no orders.parquet
+    assert _status(api.view_daily, str(root)) == 404
+    assert _status(api.catalog_run, "h1_daily_totals", str(root)) == 404
+
+
 def test_first100_extract_missing_reset(api):
     assert api.reset() == {"status": "reset", "remaining_count": 100}
     assert _status(api.missing) == 400                # nothing extracted
@@ -279,8 +288,17 @@ def test_build_app_is_a_route_table(spark, tmp_path, monkeypatch):
         ("GET", "/catalog/{name}")}
     apis = {getattr(fn, "__self__", None) for fn in app.routes.values()}
     assert len(apis - {None}) == 1                    # one Api behind all
+    # every setting, with this Api's root; the test session is
+    # get_spark's, so it has what the settings say
     assert app.routes["GET", "/health"]() == {
-        "status": "ok", "spark_version": spark.version}
+        "status": "ok", "spark_version": spark.version,
+        "settings": {**dataclasses.asdict(settings()),
+                     "data_root": os.path.realpath(tmp_path)},
+        "session": {
+            "master": f"local[{settings().cpus}]",
+            "shuffle_partitions":
+                spark.conf.get("spark.sql.shuffle.partitions"),
+            "driver_memory": settings().driver_memory}}
     extract = app.routes["POST", "/extract"]
     assert extract(types.SimpleNamespace(number=3))["extracted"] == 3
     with pytest.raises(ApiError) as dup:

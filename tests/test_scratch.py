@@ -177,7 +177,7 @@ from python_etl_rest_api_spark.registry import QUERIES
 from python_etl_rest_api_spark.session import get_spark, scratch_root
 from python_etl_rest_api_spark.streaming.windows import run_stream_on_batch
 
-spark = get_spark("scratch-test", cpus="2")
+spark = get_spark("scratch-test")
 sf_dir, out_dir, names = sys.argv[2], sys.argv[3], sys.argv[4:]
 for name in names:
     for _ in range(3):
@@ -193,7 +193,8 @@ print("LISTING " + json.dumps(sorted(os.listdir(scratch_root()))))
 def scratch_run(tmp_path_factory):
     tmpdir = tmp_path_factory.mktemp("tmpdir")
     out_dir = tmp_path_factory.mktemp("stream_out")
-    env = dict(os.environ, TMPDIR=str(tmpdir), SPARK_DRIVER_MEM="2g")
+    env = dict(os.environ, TMPDIR=str(tmpdir), SPARK_DRIVER_MEM="2g",
+               SPARK_GRAFT_CPUS="2")
     proc = subprocess.run(
         [sys.executable, "-c", _SCRIPT, ROOT, SF_DIR, str(out_dir),
          *SCRATCH_ENTRIES],

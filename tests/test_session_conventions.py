@@ -3,9 +3,14 @@ only: get_spark, and every catalog registry callable (QUERIES and
 QUERIES_RAW) before it runs its entry. Queries themselves write no
 session conf, so no request's outcome depends on which ran before it.
 
-Also covers the two non-default deployment settings (the fact-scale
-broadcast opt-out and a small shuffle-partition count), which must not
-change any result row."""
+Also covers the deployment settings: the environment is read in one
+function only, and once; the fact-scale broadcast opt-out and a small
+shuffle-partition count must not change any result row; the default
+driver heap fits the machine."""
+
+import ast
+import dataclasses
+import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -13,9 +18,10 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from python_etl_rest_api_spark import registry
+import python_etl_rest_api_spark as pkg
+from python_etl_rest_api_spark import registry, session
 from python_etl_rest_api_spark.catalog import _events
-from python_etl_rest_api_spark.session import RUNTIME_CONF, tune
+from python_etl_rest_api_spark.session import RUNTIME_CONF, settings, tune
 from python_etl_rest_api_spark.streaming.windows import run_stream_on_batch
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -116,8 +122,14 @@ def test_stream_harness_converts_nanos_timestamps(spark, nanos_events,
         == [n // 1000 for n in _NANOS]
 
 
+# every entry that reaches session.broadcast_factscale
 _FACTSCALE = ["q5_local_supplier_volume", "q9_product_profit",
-              "dedup_minhash_lsh"]
+              "dedup_minhash_lsh", "dedup_cluster_components",
+              "dedup_cluster_weights", "pipeline_docs_curate",
+              "pipeline_training_data"]
+# those whose returned plan still holds the hints they were built with
+_PLAN_HINTED = {"q5_local_supplier_volume", "q9_product_profit",
+                "dedup_minhash_lsh"}
 
 
 def _broadcast_hints(df):
@@ -125,14 +137,104 @@ def _broadcast_hints(df):
         "strategy=broadcast")
 
 
+def _env_readers(tree):
+    """Names of the functions of a module that touch the environment
+    (an ``environ``/``environb``/``getenv`` attribute or name); None
+    stands for module-level code."""
+    found = set()
+
+    def visit(node, func):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            func = node.name
+        name = getattr(node, "attr", None) or getattr(node, "id", None)
+        if name in ("environ", "environb", "getenv"):
+            found.add(func)
+        for child in ast.iter_child_nodes(node):
+            visit(child, func)
+
+    visit(tree, None)
+    return found
+
+
+def test_environment_is_read_in_one_function():
+    root = os.path.dirname(pkg.__file__)
+    readers = set()
+    for d, _, files in os.walk(root):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(d, f)
+                with open(path) as src:
+                    tree = ast.parse(src.read())
+                readers |= {(os.path.relpath(path, root), func)
+                            for func in _env_readers(tree)}
+    assert readers == {("session.py", "settings")}
+
+
+def test_settings_are_read_once(monkeypatch):
+    first = settings()
+    for var in ("SPARK_GRAFT_CPUS", "SPARK_DRIVER_MEM",
+                "SPARK_GRAFT_NO_FACTSCALE_BROADCAST", "SPARK_ETL_DATA_ROOT"):
+        monkeypatch.setenv(var, "1")
+    assert settings() is first
+
+
+def test_default_driver_heap_fits_the_machine(monkeypatch):
+    monkeypatch.setattr(session, "_SETTINGS", None)
+    monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+    heap = settings().driver_memory
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert heap.endswith("m")
+    assert 0 < int(heap[:-1]) * 2**20 <= phys // 2
+
+
+def test_default_driver_heap_fits_a_cgroup_limit(monkeypatch, tmp_path):
+    limit = tmp_path / "memory.max"
+    limit.write_text(f"{3 * 2**30}\n")
+    monkeypatch.setattr(session, "_CGROUP_MEMORY_LIMITS",
+                        (str(tmp_path / "absent"), str(limit)))
+    assert session._default_driver_memory() == "1536m"
+    limit.write_text("max\n")
+    assert session._default_driver_memory() != "1536m"
+
+
+def _run_counting_hints(spark, monkeypatch, name):
+    """(frame, rows, broadcast hints made) of one run of entry ``name``.
+    The hints are counted as they are made as well as read off the
+    returned plan: the cluster and pipeline entries localCheckpoint
+    their pair graph, so the plan they return holds none of the hints
+    their jobs ran with."""
+    made = []
+
+    def counting(df, broadcast=F.broadcast):
+        made.append(df)
+        return broadcast(df)
+
+    with monkeypatch.context() as m:
+        m.setattr(F, "broadcast", counting)
+        df = registry.QUERIES[name](spark, SF_DIR)
+        rows = _rows(df)
+    return df, rows, len(made)
+
+
 @pytest.mark.parametrize("name", _FACTSCALE)
 def test_no_factscale_broadcast_keeps_rows(spark, monkeypatch, name):
-    default = registry.QUERIES[name](spark, SF_DIR)
-    want, hints = _rows(default), _broadcast_hints(default)
+    default, want, made = _run_counting_hints(spark, monkeypatch, name)
+    monkeypatch.setattr(session, "_SETTINGS", dataclasses.replace(
+        settings(), factscale_broadcast=False))
+    declarative, got, declarative_made = _run_counting_hints(
+        spark, monkeypatch, name)
+    assert declarative_made < made
+    if name in _PLAN_HINTED:
+        assert _broadcast_hints(declarative) < _broadcast_hints(default)
+    assert got == want
+
+
+def test_environment_edit_after_first_read_keeps_plans(spark, monkeypatch):
+    name = "q9_product_profit"
+    hints = _broadcast_hints(registry.QUERIES[name](spark, SF_DIR))
+    assert settings().factscale_broadcast
     monkeypatch.setenv("SPARK_GRAFT_NO_FACTSCALE_BROADCAST", "1")
-    declarative = registry.QUERIES[name](spark, SF_DIR)
-    assert _broadcast_hints(declarative) < hints
-    assert _rows(declarative) == want
+    assert _broadcast_hints(registry.QUERIES[name](spark, SF_DIR)) == hints
 
 
 @pytest.mark.parametrize("name", _FACTSCALE)

@@ -92,7 +92,7 @@ sys.path.insert(0, sys.argv[1])
 from python_etl_rest_api_spark.operators import multimodal as mm
 from python_etl_rest_api_spark.session import get_spark
 
-spark = get_spark("worker-imports-test", cpus="1")
+spark = get_spark("worker-imports-test")
 out = {}
 try:
     out["decoded"] = len(mm.decode_bmp_features(
@@ -132,7 +132,7 @@ print("RESULT " + json.dumps(out))
 def worker_run(tmp_path_factory):
     cwd = tmp_path_factory.mktemp("elsewhere")
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    env["SPARK_DRIVER_MEM"] = "1g"
+    env.update(SPARK_DRIVER_MEM="1g", SPARK_GRAFT_CPUS="1")
     proc = subprocess.run([sys.executable, "-c", _SCRIPT, ROOT], env=env,
                           cwd=str(cwd), capture_output=True, text=True,
                           timeout=600)
